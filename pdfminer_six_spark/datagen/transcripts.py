@@ -112,6 +112,25 @@ def synth_pdf(pages: List[List[str]], compress: bool = True) -> bytes:
     return bytes(out)
 
 
+def synth_locked_pdf(seed: int) -> bytes:
+    """A :func:`synth_pdf` whose trailer gains a Standard ``/Encrypt``
+    dict (``/V 1 /R 2``, random 32-byte ``/O`` and ``/U``) plus ``/ID``:
+    no password authenticates, so extraction raises
+    ``EncryptionError("bad password")``."""
+    rng = random.Random(seed)
+
+    def hexstr(n: int) -> bytes:
+        return b"<%s>" % bytes(rng.randrange(256) for _ in range(n)).hex().encode()
+
+    pdf = synth_pdf([["locked"]])
+    head, sep, tail = pdf.rpartition(b"trailer\n")
+    encrypt = (
+        b" /Encrypt << /Filter /Standard /V 1 /R 2 /P -4 /O %s /U %s >>"
+        b" /ID [%s %s] >>" % (hexstr(32), hexstr(32), hexstr(16), hexstr(16))
+    )
+    return head + sep + tail.replace(b" >>", encrypt, 1)
+
+
 def synth_html(main_lines: List[str], rng: random.Random) -> str:
     nav = " ".join(rng.sample(_WORDS, 4))
     footer = " ".join(rng.sample(_WORDS, 3))

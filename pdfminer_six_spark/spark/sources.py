@@ -14,12 +14,13 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
-    DoubleType,
     IntegerType,
     StringType,
     StructField,
     StructType,
 )
+
+from pdfminer_six_spark.spark.pipeline import _drive, _map_batches, _pdf_text
 
 DOC_EXTRACTED_SCHEMA = StructType(
     [
@@ -30,6 +31,11 @@ DOC_EXTRACTED_SCHEMA = StructType(
         StructField("error", StringType()),
     ]
 )
+
+
+def _doc_row(key, text, status, error, wall_ms):
+    text = text or ""
+    yield (*key, text, text.count("\f"), status, error)
 
 
 def read_pdf_corpus(
@@ -53,31 +59,13 @@ def extract_pdf_corpus(
 ) -> DataFrame:
     """(path, content) -> per-document extracted text, Arrow-batched."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdfminer_six_spark.core.crypto import EncryptionError
-        from pdfminer_six_spark.core.extract import extract_text
-
-        for b in batches:
-            rows = []
-            for path, content in zip(b["path"], b["content"]):
-                try:
-                    text = extract_text(bytes(content), password=password)
-                    rows.append(
-                        (path, text, text.count("\f"),
-                         "ok" if text else "empty", "")
-                    )
-                except EncryptionError as e:
-                    rows.append((path, "", 0, "bad_password", str(e)))
-                except Exception as e:
-                    rows.append(
-                        (path, "", 0, "error", f"{type(e).__name__}: {e}")
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DOC_EXTRACTED_SCHEMA.fields]
-            )
+    def items(b: pd.DataFrame):
+        for path, content in zip(b["path"], b["content"]):
+            yield (path,), bytes(content), _pdf_text, False
 
     return corpus.select("path", "content").mapInPandas(
-        run, schema=DOC_EXTRACTED_SCHEMA
+        _map_batches(items, _doc_row, DOC_EXTRACTED_SCHEMA, password),
+        schema=DOC_EXTRACTED_SCHEMA,
     )
 
 
@@ -303,25 +291,13 @@ def _make_pdf_corpus_classes(with_pushdown: bool = True):
             return [_PdfFilesPartition(b) for b in bins]
 
         def read(self, partition):
-            from pdfminer_six_spark.core.crypto import EncryptionError
-            from pdfminer_six_spark.core.extract import extract_text
+            def items():
+                for path, size in partition.files:
+                    with open(path, "rb") as fh:
+                        content = fh.read()
+                    yield (path, size), content, _pdf_text, False
 
-            for path, size in partition.files:
-                with open(path, "rb") as fh:
-                    content = fh.read()
-                try:
-                    text = extract_text(content, password=self.password)
-                    yield (
-                        path, size, text, text.count("\f"),
-                        "ok" if text else "empty", "",
-                    )
-                except EncryptionError as e:
-                    yield (path, size, "", 0, "bad_password", str(e))
-                except Exception as e:
-                    yield (
-                        path, size, "", 0, "error",
-                        f"{type(e).__name__}: {e}",
-                    )
+            yield from _drive(items(), self.password, _doc_row)
 
     class PdfCorpusDataSource(DataSource):
         """``spark.read.format("pdfcorpus").load(dir)`` — extraction fused

@@ -6,8 +6,10 @@ coverage guidance (atheris isn't in this container, and determinism is
 what CI needs).
 
 Contract under test: at 10^12 dirty turns no payload may kill a task —
-``_extract_one`` must return a (text, n_pages, status, error) row for ANY
-bytes, never raise (pipeline.py STRICT=False semantics)."""
+the pipeline's kernel (``_kernel`` with the PDF text body) must return a
+(text, status, error, wall_ms) outcome for ANY bytes, never raise
+(pipeline.py STRICT=False semantics).  The base corpus is synthesized
+(``datagen``), so the test needs no sample files."""
 
 import base64
 import os
@@ -15,27 +17,36 @@ import random
 
 import pytest
 
+from pdfminer_six_spark.datagen.transcripts import (
+    synth_cid_pdf,
+    synth_pdf,
+    synth_rich_pdf,
+)
+
 pyspark = pytest.importorskip("pyspark")
 
-SAMPLES = "/root/reference/samples"
-BASE_DOCS = [
-    f"{SAMPLES}/simple1.pdf",
-    f"{SAMPLES}/simple3.pdf",
-    f"{SAMPLES}/jo.pdf",
-    f"{SAMPLES}/contrib/issue-449-vertical.pdf",
-]
 N_MUTATIONS = int(os.environ.get("CRASH_FUZZ_N", "2000"))
 _STATUSES = {"ok", "empty", "bad_password", "error"}
 
 
+# plain Type1 text over two pages, a rich multi-operator page, and
+# horizontal + vertical Type0/CID pages
+BASE_DOCS = [
+    synth_pdf([["Hello (world) \\ text", "second line"], ["page two"]]),
+    synth_rich_pdf(7),
+    synth_cid_pdf(2),  # Identity-H
+    synth_cid_pdf(1),  # Identity-V
+]
+
+
 def _corpus():
-    out = []
-    for p in BASE_DOCS:
-        if os.path.exists(p):
-            with open(p, "rb") as f:
-                out.append(f.read())
-    assert out, "no sample corpus available"
-    return out
+    return list(BASE_DOCS)
+
+
+def _extract_one(b85: str):
+    from pdfminer_six_spark.spark.pipeline import _kernel, _pdf_text
+
+    return _kernel(b85, "", _pdf_text)
 
 
 def _mutations(corpus, n, seed=0x5EED):
@@ -68,16 +79,14 @@ def _mutations(corpus, n, seed=0x5EED):
 
 
 def test_extract_one_never_raises_on_mutated_corpus():
-    from pdfminer_six_spark.spark.pipeline import _extract_one
-
     corpus = _corpus()
     n_ok = n_err = 0
     for payload in _mutations(corpus, N_MUTATIONS):
-        row = _extract_one("pdf", base64.b85encode(payload).decode(), "")
+        row = _extract_one(base64.b85encode(payload).decode())
         assert isinstance(row, tuple) and len(row) == 4
-        text, n_pages, status, error = row
-        assert isinstance(text, str)
-        assert isinstance(n_pages, int)
+        text, status, error, wall_ms = row
+        assert isinstance(text, str) == (status in ("ok", "empty"))
+        assert isinstance(wall_ms, float) and wall_ms >= 0
         assert status in _STATUSES
         assert isinstance(error, str)
         if status == "ok":
@@ -90,8 +99,6 @@ def test_extract_one_never_raises_on_mutated_corpus():
 
 
 def test_extract_one_handles_hostile_non_pdf_inputs():
-    from pdfminer_six_spark.spark.pipeline import _extract_one
-
     hostile = [
         b"",
         b"%PDF-",
@@ -102,10 +109,10 @@ def test_extract_one_handles_hostile_non_pdf_inputs():
         b"%PDF-1.4\ntrailer<</Prev 0/Root 1 0 R>>\nstartxref\n0\n%%EOF",
     ]
     for payload in hostile:
-        _, _, status, _ = _extract_one("pdf", base64.b85encode(payload).decode(), "")
+        _, status, _, _ = _extract_one(base64.b85encode(payload).decode())
         assert status in _STATUSES
     # invalid base85 must be caught too (the decode happens inside)
-    _, _, status, err = _extract_one("pdf", "~~not-base85~~", "")
+    _, status, err, _ = _extract_one("~~not-base85~~")
     assert status == "error" and "b85decode" in err
 
 

@@ -128,19 +128,13 @@ def test_lineage_metrics(spark, transcripts_pdf):
 
 
 def test_skewed_conversation_salting(spark):
-    """A pathologically long conversation must spread across partitions
-    under salted_repartition and extract cleanly (north-rule skew story)."""
+    """A pathologically long conversation must extract cleanly under a
+    round-robin rebalance (north-rule skew story)."""
     from pdfminer_six_spark.datagen.transcripts import transcripts_pandas
-    from pdfminer_six_spark.spark.pipeline import (
-        extract_transcripts,
-        salted_repartition,
-    )
+    from pdfminer_six_spark.spark.pipeline import extract_transcripts
 
     pdf = transcripts_pandas(n_convs=6, skew_convs=1, skew_turns=400)
     df = spark.createDataFrame(pdf)
-    parts = salted_repartition(df, 8).rdd.glom().map(len).collect()
-    assert len(parts) == 8
-    assert max(parts) < 400  # the 400-turn conv did NOT land in one task
     out = extract_transcripts(df, rebalance_partitions=8)
     assert out.count() == len(pdf)
     assert {r["status"] for r in out.select("status").distinct().collect()} == {"ok"}
@@ -300,6 +294,62 @@ def test_split_pages_equals_unsplit_and_spreads_tasks(spark):
     assert len({r.pid for r in parts}) >= 2
 
 
+def test_status_contract_is_one_across_paths(spark):
+    """Every extraction path reports the same (status, error) for the
+    same payload: per-turn, split (every payload through pass 1), dedup,
+    and the layout ``status`` view, which has a row for each payload that
+    is not ok and none for the valid one."""
+    from pdfminer_six_spark.datagen.transcripts import (
+        synth_locked_pdf,
+        synth_pdf,
+    )
+    from pdfminer_six_spark.spark.pipeline import (
+        extract_layout_tables,
+        extract_transcripts,
+        extract_transcripts_dedup,
+        extract_transcripts_split_pages,
+    )
+
+    valid = synth_pdf([["status contract"], ["page two"]])
+    payloads = {
+        "valid": base64.b85encode(valid).decode(),
+        "truncated": base64.b85encode(valid[: len(valid) // 2]).decode(),
+        "b85_invalid": "~~not-base85~~",
+        "empty": base64.b85encode(b"").decode(),
+        "locked": base64.b85encode(synth_locked_pdf(3)).decode(),
+    }
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "conv_id": list(payloads),
+                "turn_idx": pd.array([0] * len(payloads), dtype="int32"),
+                "role": ["tool"] * len(payloads),
+                "text": list(payloads.values()),
+                "tool": ["pdf"] * len(payloads),
+            }
+        )
+    )
+
+    def outcome(out):
+        return {r.conv_id: (r.status, r.error) for r in out.collect()}
+
+    per_turn = outcome(extract_transcripts(df))
+    assert per_turn["valid"] == ("ok", "")
+    assert per_turn["truncated"][0] == "error"
+    assert per_turn["b85_invalid"][0] == "error"
+    assert per_turn["b85_invalid"][1].startswith("b85decode: ")
+    assert per_turn["empty"][0] == "error"
+    assert per_turn["locked"] == ("bad_password", "bad password")
+    assert outcome(extract_transcripts_split_pages(df, split_chars=0)) == per_turn
+    assert outcome(extract_transcripts_dedup(df)) == per_turn
+    tables = extract_layout_tables(df)
+    try:
+        layout = outcome(tables["status"])
+    finally:
+        tables["_union"].unpersist()
+    assert layout == {k: v for k, v in per_turn.items() if v[0] != "ok"}
+
+
 def test_driver_entry_surface(spark):
     """__spark_entry__ contract: entry() returns a non-empty DataFrame
     with a stable schema; every queries() key resolves to a callable;
@@ -368,8 +418,32 @@ def test_registry_order_contract():
     assert order[0] == "extract_transcripts"
 
 
-@pytest.mark.skipif(not reference_available(), reason="reference corpus")
-def test_pdfcorpus_datasource_equals_binaryfile_path(spark):
+@pytest.fixture(scope="module")
+def pdf_dir(tmp_path_factory):
+    """Ten synthesized PDFs: text, rich and CID ones, one truncated, and
+    one no password opens."""
+    from pdfminer_six_spark.datagen.transcripts import (
+        synth_cid_pdf,
+        synth_locked_pdf,
+        synth_pdf,
+        synth_rich_pdf,
+    )
+
+    text = synth_pdf([["corpus text page"], ["second page"]])
+    docs = {
+        "text.pdf": text,
+        "truncated.pdf": text[: len(text) // 2],
+        "locked.pdf": synth_locked_pdf(1),
+    }
+    docs.update({f"rich{i}.pdf": synth_rich_pdf(i) for i in range(1, 5)})
+    docs.update({f"cid{i}.pdf": synth_cid_pdf(i) for i in range(1, 4)})
+    root = tmp_path_factory.mktemp("pdfcorpus")
+    for name, data in docs.items():
+        (root / name).write_bytes(data)
+    return str(root)
+
+
+def test_pdfcorpus_datasource_equals_binaryfile_path(spark, pdf_dir):
     """The Spark-4 Python DataSource (`spark.read.format('pdfcorpus')`)
     must produce exactly the rows the binaryFile+mapInPandas path does on
     the same directory — same texts, same page counts, same statuses."""
@@ -382,7 +456,7 @@ def test_pdfcorpus_datasource_equals_binaryfile_path(spark):
     )
 
     register_pdf_corpus_source(spark)
-    root = "/root/reference/samples"
+    root = pdf_dir
     via_ds = {
         r["path"]: (r["text"], r["n_pages"], r["status"])
         for r in spark.read.format("pdfcorpus")
@@ -408,7 +482,7 @@ def test_pdfcorpus_datasource_equals_binaryfile_path(spark):
     }
 
 
-def test_pdfcorpus_reader_pushdown_prunes_listing_and_lpt_balances():
+def test_pdfcorpus_reader_pushdown_prunes_listing_and_lpt_balances(pdf_dir):
     """Driver-side reader unit contract: pushed (path, length) filters
     shrink the PLANNED partitions (pruning happens at listing time), the
     unsupported remainder is handed back to Spark, and LPT bins are
@@ -423,7 +497,7 @@ def test_pdfcorpus_reader_pushdown_prunes_listing_and_lpt_balances():
     from pdfminer_six_spark.spark.sources import _make_pdf_corpus_classes
 
     _, reader_cls = _make_pdf_corpus_classes()
-    opts = {"path": "/root/reference/samples", "numpartitions": "4"}
+    opts = {"path": pdf_dir, "numpartitions": "4"}
 
     r = reader_cls(dict(opts))
     all_files = {f for p in r.partitions() for f in p.files}
