@@ -30,13 +30,17 @@ Usage:
         [--keep-buckets 1,2] [--password ...]
 
 Resume model: each stage writes its parquet under --workdir/<NN_stage>
-and appends one lineage row to --workdir/lineage.  With ``--resume``
-every stage whose ``_SUCCESS`` marker already exists is SKIPPED (read
-back, never recomputed), so a crashed build restarts at exactly the
-failed stage.  Stage writes are atomic at the Spark commit-protocol
-level (the marker appears only after a complete write), which makes the
-whole job idempotent at stage granularity — rerunning a finished build
-with --resume recomputes nothing and rewrites only the final --output.
+and appends one lineage row to --workdir/lineage.  The stage's row count
+is observed on its own write (``DataFrame.observe``), never re-counted,
+and the driver writes the lineage row itself as one small parquet file,
+renamed into place so a reader never sees half of it: the bookkeeping
+runs no Spark job.  With ``--resume`` every stage whose ``_SUCCESS``
+marker already exists is SKIPPED (read back, never recomputed), so a
+crashed build restarts at exactly the failed stage.  Stage writes are
+atomic at the Spark commit-protocol level (the marker appears only after
+a complete write), which makes the whole job idempotent at stage
+granularity — rerunning a finished build with --resume recomputes
+nothing and rewrites only the final --output.
 
 ``--fail-after <stage>`` injects a crash immediately after that stage
 commits — the hook the failure-injection resume test drives; it has no
@@ -51,6 +55,7 @@ driver-side loop beyond the cluster iteration's convergence counts.
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
@@ -106,6 +111,29 @@ def _committed(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
+def _group_jobs(sc) -> set:
+    """Ids of the jobs run so far under the calling thread's job group
+    (jobs with no group when none is set)."""
+    # the status store is fed by the asynchronous listener bus: let it
+    # catch up with the jobs that have already returned
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_counted(df, path: str) -> int:
+    """Overwrites ``path`` with ``df``; returns the rows written, counted
+    by the write itself."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    seen = Observation()
+    df.observe(seen, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return seen.get["rows"]
+
+
 class _Build:
     """Stage runner: compute-or-read-back per stage, lineage appended per
     completed stage."""
@@ -116,25 +144,43 @@ class _Build:
         self.stats: dict = {}
         self.lineage_path = os.path.join(args.workdir, "lineage")
 
-    def run_stage(self, idx: int, name: str, build_fn):
-        from pyspark.sql import functions as F
+    def append_lineage(self, name: str, n_rows: int, wall_s: float) -> None:
+        """One parquet file per row, written under a ``_`` name (which
+        Spark's reader skips) and renamed into place."""
+        import uuid
+        from datetime import datetime, timezone
 
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        row = pa.table({
+            "stage": pa.array([name], pa.string()),
+            "n_rows": pa.array([n_rows], pa.int64()),
+            "wall_s": pa.array([wall_s], pa.float64()),
+            "committed_at": pa.array([datetime.now(timezone.utc)],
+                                     pa.timestamp("us", tz="UTC")),
+        })
+        os.makedirs(self.lineage_path, exist_ok=True)
+        fname = f"{name}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.lineage_path, "_" + fname)
+        pq.write_table(row, tmp)
+        os.replace(tmp, os.path.join(self.lineage_path, fname))
+
+    def run_stage(self, idx: int, name: str, build_fn):
         path = _stage_path(self.args.workdir, idx, name)
         if self.args.resume and _committed(path):
             self.stats[name] = {"action": "skipped"}
             return self.spark.read.parquet(path)
+        jobs0 = _group_jobs(self.spark.sparkContext)
         t0 = time.perf_counter()
-        build_fn().write.mode("overwrite").parquet(path)
+        n = _write_counted(build_fn(), path)
         wall = time.perf_counter() - t0
+        self.append_lineage(name, n, wall)
         out = self.spark.read.parquet(path)
-        n = out.count()
-        self.stats[name] = {"action": "computed", "rows": n,
-                            "wall_s": round(wall, 3)}
-        self.spark.createDataFrame(
-            [(name, n, float(wall))], "stage string, n_rows long, wall_s double"
-        ).withColumn("committed_at", F.current_timestamp()).write.mode(
-            "append"
-        ).parquet(self.lineage_path)
+        self.stats[name] = {
+            "action": "computed", "rows": n, "wall_s": round(wall, 3),
+            "jobs": len(_group_jobs(self.spark.sparkContext) - jobs0),
+        }
         if self.args.fail_after == name:
             raise RuntimeError(
                 f"injected failure after stage '{name}' (--fail-after)"
@@ -290,11 +336,16 @@ def run(spark, args) -> dict:
 
     packed = b.run_stage(6, "pack", _pack)
 
-    packed.write.mode("overwrite").parquet(args.output)
-    final = spark.read.parquet(args.output)
+    jobs0 = _group_jobs(spark.sparkContext)
+    rows = _write_counted(packed, args.output)
+    # a DISTINCT aggregate cannot be observed on the write
+    n_sequences = (
+        spark.read.parquet(args.output)
+        .select("shard", "seq_idx").distinct().count()
+    )
     b.stats["final"] = {
-        "rows": final.count(),
-        "n_sequences": final.select("shard", "seq_idx").distinct().count(),
+        "rows": rows, "n_sequences": n_sequences,
+        "jobs": len(_group_jobs(spark.sparkContext) - jobs0),
     }
     return b.stats
 
@@ -304,8 +355,11 @@ def main() -> None:
 
     args = build_args()
     spark = build_session(app_name="corpus-build")
+    sc = spark.sparkContext
+    if sc.getLocalProperty("spark.jobGroup.id") is None:
+        sc.setJobGroup("corpus-build", "corpus-build")
     stats = run(spark, args)
-    print(stats)
+    print(json.dumps(stats))
     spark.stop()
 
 

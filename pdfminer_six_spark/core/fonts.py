@@ -464,6 +464,7 @@ class Type3Font(SimpleFont):
         self.matrix = tuple(list_value(spec.get("FontMatrix", (1, 0, 0, 1, 0, 0))))
         (_, self.descent, _, self.ascent) = self.bbox
         (self.hscale, self.vscale) = _matrix_norm(self.matrix, (1, 1))
+        self._wcache.clear()  # widths memoized under the default scale
 
 
 def _matrix_norm(m, pt):

@@ -412,6 +412,7 @@ _PAGED_COUNTED_SCHEMA = StructType(
         StructField("n_pages", IntegerType()),
         StructField("status", StringType()),  # '' = splittable, else terminal
         StructField("error", StringType()),
+        StructField("wall_ms", DoubleType()),  # pass-1 kernel time
     ]
 )
 
@@ -447,9 +448,9 @@ def _count_items(b: pd.DataFrame):
 def _counted_row(key, n_pages, status, error, wall_ms):
     conv_id, turn_idx, text = key
     if status == "ok":
-        yield conv_id, turn_idx, text, n_pages, "", ""
+        yield conv_id, turn_idx, text, n_pages, "", "", wall_ms
     else:
-        yield conv_id, turn_idx, "", 0, status, error
+        yield conv_id, turn_idx, "", 0, status, error, wall_ms
 
 
 def page_groups(
@@ -519,8 +520,7 @@ def extract_transcripts_split_pages(
         F.lit("").alias("text"),
         F.lit(0).cast("int").alias("n_pages"),
         F.lit(0).cast("int").alias("n_chars"),
-        "status", "error",
-        F.lit(0.0).alias("wall_ms"),
+        "status", "error", "wall_ms",
         empty_spans.alias("spans"),
     )
 

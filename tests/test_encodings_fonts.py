@@ -8,6 +8,7 @@ import pytest
 
 from pdfminer_six_spark.core.cmaps import CMap, IdentityCMap, IdentityCMapByte
 from pdfminer_six_spark.core.encodings import GlyphNameError, glyph2unicode
+from pdfminer_six_spark.core import fonts
 from pdfminer_six_spark.core.fonts import CIDFont
 from pdfminer_six_spark.core.objects import LIT, StreamObject
 
@@ -66,3 +67,22 @@ def test_cid_encoding_from_stream_cmapname():
 def test_cid_font_without_spec_defaults():
     font = CIDFont({})
     assert isinstance(font.cmap, CMap)
+
+
+def test_type3_char_width_follows_font_matrix(monkeypatch):
+    """A Type3 font scales widths by its own FontMatrix, even when a width
+    was memoized under the default 0.001 scale during construction."""
+    base_init = fonts.SimpleFont.__init__
+
+    def init_then_measure(self, *args, **kwargs):
+        base_init(self, *args, **kwargs)
+        self.char_width(65)  # before Type3Font rebinds hscale
+
+    monkeypatch.setattr(fonts.SimpleFont, "__init__", init_then_measure)
+    font = fonts.Type3Font({
+        "FirstChar": 65, "Widths": [500, 250],
+        "FontMatrix": [0.01, 0, 0, 0.01, 0, 0], "FontBBox": [0, 0, 750, 750],
+    })
+    assert font.hscale == 0.01
+    assert font.char_width(65) == 500 * font.hscale
+    assert font.char_width(66) == 250 * font.hscale

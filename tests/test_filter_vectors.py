@@ -3,10 +3,15 @@
 implementations — ascii85/hex edge forms, RC4, LZW, RLE, AES unpadding
 including false-padding robustness."""
 
+import base64
 import binascii
+import random
+
+import pytest
 
 from pdfminer_six_spark.core.crypto import _unpad_aes, rc4
 from pdfminer_six_spark.core.filters import (
+    _a85_fast,
     ascii85decode,
     asciihexdecode,
     lzwdecode,
@@ -32,6 +37,73 @@ def test_ascii85():
     assert (
         ascii85decode(b"<^BVT:K:=9<E)pd;BS_1:/aSV;ag~") == b"VARIOUS UTTER NONSENSE"
     )
+
+
+def _a85_vectors():
+    """pytest params (framed stream, stripped body, takes the fast path).
+    Every body is long enough (>= 512 bytes) for ``ascii85decode`` to try
+    the vectorized decode."""
+    rng = random.Random(85)
+
+    def payload(n_bytes, zero_runs=0):
+        data = b"".join(
+            rng.randbytes(4 * rng.randint(1, 40)) + b"\0" * 4 * rng.randint(1, 6)
+            for _ in range(zero_runs)
+        )
+        return data + rng.randbytes(n_bytes)
+
+    def spaced(body):
+        out = bytearray()
+        for c in body:
+            if rng.random() < 0.08:
+                out += rng.choice([b" ", b"\n", b"\r\n", b"\t", b"\x0b"])
+            out.append(c)
+        return bytes(out)
+
+    vecs = []
+
+    def add(name, body, fast, framed=None):
+        vecs.append(pytest.param(framed or body, body, fast, id=name))
+
+    for tail in (1, 2, 3, 4):  # bytes in the last 4-byte group
+        add(f"tail{tail}", base64.a85encode(payload(600 + tail)), True)
+        body = base64.a85encode(payload(400 + tail, zero_runs=8))
+        assert b"z" in body
+        add(f"z_runs_tail{tail}", body, True)
+    body = spaced(base64.a85encode(payload(700, zero_runs=5)))
+    add("whitespace", body, True)
+    add("framed", body, True, b"<~" + body + b"~>")
+    add("framed_spaced", body, True, b" <~\n" + body + b"\n~ >\n")
+    add("framed_open_tail", body, True, b"<~" + body + b"~")
+    wrapped = base64.a85encode(payload(650), wrapcol=72)
+    add("wrapcol", wrapped, True, b"<~" + wrapped + b"~>")
+
+    # inputs only stdlib can judge: the fast path must decline them
+    plain = base64.a85encode(payload(800))
+    add("mid_group_z", plain[:302] + b"z" + plain[302:], False)
+    add("one_char_tail", plain + b"!", False)
+    for bad in (b"{", b"v", b"~", b"\x00"):
+        add(f"invalid_{bad!r}", plain[:300] + bad + plain[300:], False)
+    for big in (b"uuuuu", b's8W-"'):  # 85**5 - 1 and 2**32
+        add(f"overflow_{big.decode()}", plain[:100] + big + plain[100:], False)
+    add("max_group", plain[:100] + b"s8W-!" + plain[100:], True)  # 2**32 - 1
+    return vecs
+
+
+@pytest.mark.parametrize("framed,body,fast", _a85_vectors())
+def test_ascii85_fast_path_matches_stdlib(framed, body, fast):
+    """The vectorized decode gives stdlib's bytes, and each input it
+    declines falls back to stdlib's exact exception."""
+    assert len(body) >= 512
+    assert (_a85_fast(body) is not None) == fast
+    try:
+        want = base64.a85decode(body)
+    except Exception as e:
+        with pytest.raises(type(e)) as got:
+            ascii85decode(framed)
+        assert str(got.value) == str(e)
+    else:
+        assert ascii85decode(framed) == want
 
 
 def test_asciihex():

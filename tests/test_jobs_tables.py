@@ -419,6 +419,34 @@ def test_score_job_lm_model_artifact(spark, tmp_path):
     assert a == b and len(a) == 12 and all(v[0] is not None for v in a.values())
 
 
+def _build_job():
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "jobs_build",
+        os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                     "jobs", "build.py"),
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    return job
+
+
+def _check_lineage(spark, workdir, stats, stages):
+    """The lineage holds one row per computed stage, with the stage's
+    stats, in the build's four typed columns."""
+    lineage = spark.read.parquet(str(workdir / "lineage"))
+    assert lineage.dtypes == [("stage", "string"), ("n_rows", "bigint"),
+                              ("wall_s", "double"),
+                              ("committed_at", "timestamp")]
+    rows = {r.stage: r for r in lineage.collect()}
+    assert lineage.count() == len(rows) and sorted(rows) == sorted(stages)
+    for s in stages:
+        assert rows[s].n_rows == stats[s]["rows"]
+        assert rows[s].committed_at is not None
+
+
 def test_build_job_end_to_end_and_failure_injection_resume(spark, tmp_path):
     """jobs/build.py — the composed corpus build (extract -> clean ->
     dedup -> score -> pack) as one resumable artifact:
@@ -429,15 +457,9 @@ def test_build_job_end_to_end_and_failure_injection_resume(spark, tmp_path):
        recomputed or rewritten) and its final output is IDENTICAL to
        the uninterrupted run's
     """
-    import importlib.util, os
+    import os
 
-    spec = importlib.util.spec_from_file_location(
-        "jobs_build",
-        os.path.join(os.path.dirname(os.path.dirname(__file__)),
-                     "jobs", "build.py"),
-    )
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
+    job = _build_job()
 
     from pdfminer_six_spark.datagen.transcripts import transcripts_pandas
 
@@ -460,6 +482,13 @@ def test_build_job_end_to_end_and_failure_injection_resume(spark, tmp_path):
     # lineage carries one row per computed stage
     lineage = spark.read.parquet(str(wd1 / "lineage"))
     assert lineage.count() == len(job.STAGES)
+    _check_lineage(spark, wd1, stats1, job.STAGES)
+    # each stage's count comes from its write: it equals what it wrote
+    for i, s in enumerate(job.STAGES, 1):
+        written = spark.read.parquet(str(wd1 / f"{i:02d}_{s}")).count()
+        assert stats1[s]["rows"] == written
+        assert stats1[s]["jobs"] > 0
+    assert stats1["final"]["jobs"] > 0
 
     # ---- crash after stage 3, then resume ----
     wd2, out2 = tmp_path / "wd2", tmp_path / "out2"
@@ -471,6 +500,10 @@ def test_build_job_end_to_end_and_failure_injection_resume(spark, tmp_path):
     committed = {p: os.path.getmtime(os.path.join(wd2, p, "_SUCCESS"))
                  for p in ("01_extract", "02_clean", "03_dedup")}
     assert not os.path.exists(out2)
+    crashed = {s: {"rows": spark.read.parquet(
+                   str(wd2 / f"{i:02d}_{s}")).count()}
+               for i, s in enumerate(("extract", "clean", "dedup"), 1)}
+    _check_lineage(spark, wd2, crashed, crashed)
 
     stats2 = job.run(spark, job.build_args(argv + ["--resume"]))
     assert [stats2[s]["action"] for s in job.STAGES] == (
@@ -485,6 +518,39 @@ def test_build_job_end_to_end_and_failure_injection_resume(spark, tmp_path):
     import pandas.testing as pdt
 
     pdt.assert_frame_equal(a, b)
+    assert stats2["final"]["rows"] == len(resumed)
+
+
+def test_build_stage_bookkeeping_runs_no_spark_job(spark, tmp_path):
+    """A build stage runs the jobs of a plain write and read-back of its
+    DataFrame and no more: its row count and lineage row take none."""
+    from pyspark.sql import functions as F
+
+    job = _build_job()
+    sc = spark.sparkContext
+    df = spark.range(500).groupBy((F.col("id") % 7).alias("k")).count()
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    b = job._Build(spark, job.build_args([
+        "--input", "unused", "--workdir", str(tmp_path / "wd"),
+        "--output", "unused",
+    ]))
+    staged = jobs_of("bookkeeping-stage", lambda: b.run_stage(1, "extract",
+                                                              lambda: df))
+    plain = str(tmp_path / "plain")
+    plain_jobs = jobs_of("bookkeeping-plain", lambda: (
+        df.write.parquet(plain), spark.read.parquet(plain)))
+    assert staged == plain_jobs
+    assert b.stats["extract"]["rows"] == 7
+    assert b.stats["extract"]["jobs"] == staged
 
 
 def test_dedup_job_incremental_two_batches(spark, tmp_path):

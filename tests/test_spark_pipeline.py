@@ -283,7 +283,8 @@ def test_split_pages_equals_unsplit_and_spreads_tasks(spark):
     assert junk_row.status == "error" and "b85decode" in junk_row.error
     # the 120-page payload's 15 page groups occupy MULTIPLE tasks
     counted = spark.createDataFrame(
-        [("conv_big", 0, big_text, 120, "", "")], schema=_PAGED_COUNTED_SCHEMA
+        [("conv_big", 0, big_text, 120, "", "", 1.0)],
+        schema=_PAGED_COUNTED_SCHEMA,
     )
     parts = (
         page_groups(counted, pages_per_group=8, num_partitions=8)
@@ -299,6 +300,8 @@ def test_status_contract_is_one_across_paths(spark):
     same payload: per-turn, split (every payload through pass 1), dedup,
     and the layout ``status`` view, which has a row for each payload that
     is not ok and none for the valid one."""
+    from pyspark.sql import functions as F
+
     from pdfminer_six_spark.datagen.transcripts import (
         synth_locked_pdf,
         synth_pdf,
@@ -340,7 +343,11 @@ def test_status_contract_is_one_across_paths(spark):
     assert per_turn["b85_invalid"][1].startswith("b85decode: ")
     assert per_turn["empty"][0] == "error"
     assert per_turn["locked"] == ("bad_password", "bad password")
-    assert outcome(extract_transcripts_split_pages(df, split_chars=0)) == per_turn
+    split = extract_transcripts_split_pages(df, split_chars=0)
+    assert outcome(split) == per_turn
+    # a pass-1 failure reports the kernel time it took
+    failed = split.filter(F.col("status") != "ok").select("wall_ms").collect()
+    assert len(failed) == 4 and all(r.wall_ms > 0 for r in failed)
     assert outcome(extract_transcripts_dedup(df)) == per_turn
     tables = extract_layout_tables(df)
     try:
