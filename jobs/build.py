@@ -274,6 +274,7 @@ def run(spark, args) -> dict:
 
     # ---- 04 score: LM perplexity -> CCNet buckets (sketch cutoffs) ----
     keep_buckets = [int(x) for x in args.keep_buckets.split(",") if x]
+    lm_model_handle = []
 
     def _score():
         # the LM's deterministic train-slice (pmod(id, ...)) and the
@@ -281,7 +282,8 @@ def run(spark, args) -> dict:
         # the dedup stage
         keyed = survivors.withColumn("doc_num", F.xxhash64("doc_id"))
         buckets = ccnet_buckets(
-            keyed, cutoffs="sketch", id_col="doc_num"
+            keyed, cutoffs="sketch", id_col="doc_num",
+            model_handle=lm_model_handle,
         )
         return (
             keyed.join(buckets, "doc_num")
@@ -290,6 +292,10 @@ def run(spark, args) -> dict:
         )
 
     scored = b.run_stage(4, "score", _score)
+    # the stage's write has run: release the cached LM model so a
+    # long-lived session does not gain one cache entry per build
+    for cached in lm_model_handle:
+        cached.unpersist()
 
     # ---- 05 mix (optional): temperature-scaled source rebalancing ----
     if args.mix_budget:

@@ -372,13 +372,6 @@ class _HTMLEmitter:
         return "".join(self.out)
 
 
-def page_to_html(page: LTPage, page_number: int = 1, scale: float = 1.0) -> str:
-    emitter = _HTMLEmitter(scale=scale)
-    emitter.pageno = page_number
-    emitter.feed(page)
-    return "".join(emitter.out[3:])  # body only, without header
-
-
 def pages_to_html(
     pages: List[LTPage],
     scale: float = 1.0,
@@ -524,12 +517,6 @@ class _HOCREmitter:
             "<!--script src='https://unpkg.com/hocrjs'></script--></body></html>\n"
         )
         return "".join(self.out)
-
-
-def page_to_hocr(page: LTPage, page_number: int = 1) -> str:
-    emitter = _HOCREmitter()
-    emitter.feed(page)
-    return "".join(emitter.out[8:])  # body only
 
 
 def pages_to_hocr(

@@ -51,12 +51,6 @@ def apply_matrix_pt(m: Matrix, v: Point) -> Point:
     return (a * x + c * y + e, b * x + d * y + f)
 
 
-def apply_matrix_norm(m: Matrix, v: Point) -> Point:
-    a, b, c, d, _e, _f = m
-    p, q = v
-    return (a * p + c * q, b * p + d * q)
-
-
 def apply_matrix_rect(m: Matrix, rect: Rect) -> Rect:
     # hot path (once per glyph): transform the 4 corners inline and take
     # min/max without building intermediate point tuples

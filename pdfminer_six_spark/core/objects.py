@@ -163,10 +163,6 @@ def int_value(x: Any) -> int:
     return _coerce(x, int, 0)
 
 
-def float_value(x: Any) -> float:
-    return _coerce(x, float, 0.0)
-
-
 def num_value(x: Any):
     return _coerce(x, (int, float), 0)
 

@@ -3,7 +3,7 @@
 Media payloads are opaque ``binary`` columns with a typed metadata struct.
 The Spark-side machinery — schema, batching, partitioning, Arrow transfer,
 UDF signatures — is real and tested; the codec step goes through
-``decode_payload``, which uses a real decoder (PIL, behind an import-try)
+``decode_payload_ex``, which uses a real decoder (PIL, behind an import-try)
 when the library exists and the bytes parse, and otherwise a clearly-marked
 deterministic STUB (this container ships no image/audio libraries).  A
 cluster image that installs PIL gets real pixel decode with zero code
@@ -162,11 +162,6 @@ def decode_payload_ex(payload: bytes, kind: str) -> tuple:
         if real is not None:
             return real, "pil"
     return _decode_stub(payload, kind), "stub"
-
-
-def decode_payload(payload: bytes, kind: str) -> np.ndarray:
-    """Samples-only wrapper over :func:`decode_payload_ex` (compat API)."""
-    return decode_payload_ex(payload, kind)[0]
 
 
 def extract_features(media: DataFrame, feature_dim: int = 8) -> DataFrame:

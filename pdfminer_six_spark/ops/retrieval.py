@@ -4,14 +4,28 @@ Two first-class LLM-data-pipeline stages the reference has no analog for
 (they exist here because a training-corpus build needs them, per the
 driver brief):
 
-* :func:`ngram_lm_scores` — CCNet-shape quality scoring: train an add-one
-  smoothed word-bigram language model on a deterministic slice of the
-  corpus, score every document by average negative log-likelihood (and
-  perplexity).  The CCNet pipeline (Wenzek et al. 2020) uses a KenLM
-  5-gram for exactly this filter stage; the bigram variant keeps the
-  model a pair of relational count tables so the whole operator stays
-  declarative DataFrame ops — no Python in the hot path, and the "model"
-  is itself a distributed relation rather than a driver-side artifact.
+* The n-gram LM family — CCNet-shape quality scoring (Wenzek et al.
+  2020 use a KenLM 5-gram for exactly this filter stage): train a word
+  n-gram model on a deterministic slice of the corpus, score every
+  document by average negative log-likelihood (and perplexity).  The
+  family is ONE core plus three log-probability projections:
+
+  - the core (:func:`_lm_scores`): the n-gram expression
+    (:func:`_ngrams`), the count table over the
+    ``pmod(id, train_mod) < train_keep`` slice (:func:`_ngram_counts`;
+    :func:`bigram_lm_model` / :func:`trigram_lm_model` are its
+    ``(w1, w2, cb)`` / ``(w1, w2, w3, c3)`` artifacts), the model
+    prologue (``model=`` / ``persist_model`` / ``model_handle``), the
+    per-position relation ``(id, *carry, w1..wn)`` and the per-doc
+    ``avg_nll`` / ``ppl`` tail;
+  - :func:`ngram_lm_scores` — add-one-smoothed bigram;
+  - :func:`trigram_lm_scores` — stupid-backoff trigram;
+  - :func:`kn_lm_scores` — interpolated Kneser-Ney bigram.
+
+  Every model is a relational count table, so the whole operator stays
+  declarative DataFrame ops — no Python in the hot path, and the
+  "model" is itself a distributed relation rather than a driver-side
+  artifact.
 
 * :func:`bm25_topk` — inverted-index BM25 retrieval (Robertson/Walker
   Okapi weighting): posting lists are the ``(term, doc, tf)`` relation,
@@ -22,9 +36,9 @@ driver brief):
 
 Scale notes (100 TB): the LM's count tables are keyed by term — vocab is
 O(10^7..10^8) rows even web-scale, so the score-side joins are plain
-shuffle hash joins on the exploded bigram relation with map-side partial
+shuffle hash joins on the exploded n-gram relation with map-side partial
 aggregation back onto ``doc_id``; nothing is collected to the driver (the
-two scalar model stats ride a 1-row broadcast crossJoin, the same
+scalar model stats ride a 1-row broadcast crossJoin, the same
 sanctioned pattern as TF-IDF's doc count).  BM25's per-query work is
 proportional to the matched posting lists, not the corpus.
 """
@@ -39,20 +53,139 @@ from pdfminer_six_spark.ops.textstats import (
     tokens_col,
 )
 
+# n-gram order -> (model count column, per-doc n-gram count column)
+_ORDERS = {2: ("cb", "n_bigrams"), 3: ("c3", "n_trigrams")}
 
-def _bigrams(toks):
-    """Adjacent word pairs of a token array, JVM-side: zip_with of the
-    array against its own 1-shifted slice.  Deliberately NOT
-    transform+element_at(toks, i+2): an element_at over the unbound
+
+def _ngrams(toks, n: int):
+    """Adjacent word n-grams of a token array as ``(w1..wn)`` structs,
+    JVM-side: zip_with of the array against its own shifted slices,
+    nested n-2 times because zip_with is binary.  Deliberately NOT
+    transform+element_at(toks, i+k): an element_at over the unbound
     ``toks`` expression re-evaluates the whole regexp split per ELEMENT
     (O(tokens^2 * len) per row — measured 23.9 s vs 3.4 s on the sf0.1
     scoring pass), while zip_with evaluates each slice argument once per
     ROW and pairs elements positionally."""
-    n1 = F.greatest(F.size(toks) - 1, F.lit(0))
-    return F.zip_with(
-        F.slice(toks, 1, n1),
-        F.slice(toks, 2, n1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    w = [f"w{i}" for i in range(1, n + 1)]
+    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    grams = F.zip_with(
+        F.slice(toks, n - 1, m),
+        F.slice(toks, n, m),
+        lambda a, b: F.struct(a.alias(w[-2]), b.alias(w[-1])),
+    )
+    for k in range(n - 2, 0, -1):
+        grams = F.zip_with(
+            F.slice(toks, k, m),
+            grams,
+            lambda a, p: F.struct(
+                a.alias(w[k - 1]), *[p[x].alias(x) for x in w[k:]]
+            ),
+        )
+    return grams
+
+
+def _ngram_rows(df: DataFrame, toks, n: int, keys: list, carry: dict):
+    """The position relation: one ``(*keys, *carry, w1..wn)`` row per
+    n-gram of ``toks`` (``carry`` maps names to per-row expressions).
+    Rows with fewer than n tokens have no n-grams and drop out (the
+    explode is inner by design)."""
+    names = [*keys, *carry]
+    return (
+        df.select(
+            *[F.col(k) for k in keys],
+            *[c.alias(nm) for nm, c in carry.items()],
+            _ngrams(toks, n).alias("bg"),
+        )
+        .select(*names, F.explode("bg").alias("b"))
+        .select(*names, *[f"b.w{i}" for i in range(1, n + 1)])
+    )
+
+
+def _ngram_counts(df, n, text_col, id_col, train_mod, train_keep):
+    """n-gram count table ``(w1..wn, count)`` over the deterministic
+    ``pmod(id, train_mod) < train_keep`` slice — RNG-free, stable under
+    retries/speculation (same discipline as ``deterministic_split``)."""
+    df = rebalance_for_compute(df)  # r06: see _lm_scores
+    toks = tokens_col(normalized_text(F.col(text_col)))
+    train = df.filter(F.pmod(F.col(id_col), F.lit(train_mod)) < train_keep)
+    return (
+        _ngram_rows(train, toks, n, [], {})
+        .groupBy(*[f"w{i}" for i in range(1, n + 1)])
+        .agg(F.count(F.lit(1)).alias(_ORDERS[n][0]))
+    )
+
+
+def _lm_model(model, build, persist_model, model_handle):
+    """The model prologue: an external ``model`` is used as is;
+    otherwise ``build()`` runs and, with ``persist_model``, its table is
+    persisted and appended to ``model_handle`` (when given) so the
+    caller can ``unpersist()`` it after its action.
+
+    Why persist: the count table feeds several consumers (the score
+    join plus the marginals and scalars derived from it) whose pruned
+    subtrees do NOT ReuseExchange (measured: 4 corpus scans
+    unpersisted for the add-one scorer).  Persisted, an operator reads
+    the corpus text exactly twice (one model-build pass, one scoring
+    pass), and the cached table is bounded by model size, not corpus
+    size (MEMORY_AND_DISK spills if not).  Interleaved A/B at sf0.1
+    local[32] (3 runs each): nopersist 24.0/23.1 s vs persist
+    25.1/27.1 s — a wash where the corpus is 24 MB, kept ON for the
+    scan count at 100 TB.  Without a handle the table stays cached for
+    the session, one entry per distinct input plan."""
+    if model is not None:
+        return model
+    built = build()
+    if persist_model:
+        built = built.persist()
+        if model_handle is not None:
+            model_handle.append(built)
+    return built
+
+
+def _lm_scores(df, n, project, text_col, id_col, train_mod, train_keep,
+               persist_model, model, model_handle, carry=None):
+    """The shared LM core: positions, model and per-doc tail around one
+    projection.  ``project(counts)`` returns ``(lookups, scalars,
+    logp)``: model-sized ``(table, keys)`` pairs that left-join the
+    position relation in order (a miss leaves nulls for ``logp`` to
+    coalesce), a 1-row scalar relation that rides a broadcast crossJoin,
+    and the ``logp`` Column over the joined row.  Output: ``(id, *carry,
+    n_bigrams | n_trigrams, avg_nll, ppl)`` with ``avg_nll =
+    -sum(logp)/count`` and ``ppl = exp(avg_nll)``, both rounded to 6
+    decimals: the per-doc sum of logs is shuffle-order-dependent in the
+    last ulp (the driver's float canonicalization width)."""
+    # r06: rebalance the scan — both passes (model build, scoring) do
+    # their heavy work (tokenize + n-gram explode + partial agg) BEFORE
+    # the first exchange, so an under-split local input runs them on
+    # 1-2 cores.  No-op on a many-split corpus (the repetition_signals /
+    # hll precedent).  A/B best-of-3 at sf0.1 local[32]: 2.47 -> 1.72 s.
+    df = rebalance_for_compute(df)
+    toks = tokens_col(normalized_text(F.col(text_col)))
+    carry = carry or {}
+    pos = _ngram_rows(df, toks, n, [id_col], carry)
+    counts = _lm_model(
+        model,
+        lambda: _ngram_counts(df, n, text_col, id_col, train_mod, train_keep),
+        persist_model,
+        model_handle,
+    )
+    lookups, scalars, logp = project(counts)
+    for table, keys in lookups:
+        pos = pos.join(table, keys, "left")
+    n_col = _ORDERS[n][1]
+    agg = (
+        pos.crossJoin(F.broadcast(scalars))
+        .select(id_col, *carry, logp.alias("logp"))
+        .groupBy(id_col, *carry)
+        .agg(
+            F.count(F.lit(1)).alias(n_col),
+            (-F.sum("logp") / F.count(F.lit(1))).alias("_nll"),
+        )
+    )
+    return agg.select(
+        id_col, *carry, n_col,
+        F.round(F.col("_nll"), 6).alias("avg_nll"),
+        F.round(F.exp(F.col("_nll")), 6).alias("ppl"),
     )
 
 
@@ -66,168 +199,10 @@ def bigram_lm_model(
     """Build the bigram-LM model table: ``(w1, w2, cb)`` counts over the
     deterministic ``pmod(id, train_mod) < train_keep`` slice.  The model
     IS a relation — write it to parquet as the training artifact and
-    feed it back to :func:`ngram_lm_scores` via ``model=`` for the
-    train-once/score-many production path (scoring then reads the corpus
-    text exactly once)."""
-    df = rebalance_for_compute(df)  # r06: see ngram_lm_scores (no-op if already spread)
-    toks = tokens_col(normalized_text(F.col(text_col)))
-    train = df.filter(
-        F.pmod(F.col(id_col), F.lit(train_mod)) < train_keep
-    ).select(_bigrams(toks).alias("bg"))
-    tr_bg = train.select(F.explode("bg").alias("b")).select("b.w1", "b.w2")
-    return tr_bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
-
-
-def ngram_lm_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    train_mod: int = 10,
-    train_keep: int = 8,
-    persist_model: bool = True,
-    model: DataFrame | None = None,
-    model_handle: list | None = None,
-    carry: dict | None = None,
-) -> DataFrame:
-    """Add-one-smoothed bigram-LM scoring of every document.
-
-    ``carry`` is an optional ``{name: Column}`` mapping of per-document
-    expressions over ``df`` to thread through the scoring pipeline and
-    emit alongside the score columns (output order: id, *carry,
-    n_bigrams, avg_nll, ppl).  A carried column rides the bigram explode
-    and the per-doc aggregation as an extra grouping key, which costs a
-    few bytes per exploded row — but saves the consumer a SECOND corpus
-    scan plus a doc_id join to attach the same value (the ccnet_buckets
-    pred_lang case: one scan computes score inputs AND the language
-    vote).  Each carried expression must be functionally determined by
-    the document row (it becomes part of the groupBy key).
-
-    Cache lifetime: with ``persist_model=True`` (and no external
-    ``model``) the bigram count table is persisted and stays cached for
-    the session — each DISTINCT input plan is a separate cache entry, so
-    a long-lived session scoring many different inputs accumulates model
-    tables until it ends.  Pass a list as ``model_handle`` to receive the
-    persisted DataFrame and ``unpersist()`` it once the scoring action
-    has run (jobs/score.py does exactly this after its write).
-
-    Model slice: documents with ``pmod(id, train_mod) < train_keep`` —
-    deterministic, RNG-free, stable under retries/speculation (same
-    discipline as ``deterministic_split``).  Counts: ``cb(w1,w2)`` bigram
-    occurrences and ``cu(w)`` unigram occurrences over the slice, plus
-    vocabulary size ``V`` (distinct unigrams).
-
-    ``model`` is the train-once/score-many production path: pass a
-    ``(w1, w2, cb)`` relation previously built by
-    :func:`bigram_lm_model` (typically read back from parquet — the
-    model IS a table) and the train slice is not computed at all; the
-    job becomes one scoring pass over the corpus.  Round-trip equality
-    (build -> write parquet -> read -> score == inline) is pytest-pinned.
-
-    Per document: every adjacent token pair contributes
-    ``ln(cb+1) - ln(cu+V)`` (add-one smoothing; unseen bigrams/prefixes
-    coalesce to 0), and the emitted ``avg_nll`` is the negated mean,
-    ``ppl = exp(avg_nll)``.  Documents with fewer than two tokens have no
-    bigrams and drop out of the result (the explode is inner by design —
-    a <2-token doc has no defined LM score).
-
-    Float determinism: the per-doc sum of logs is shuffle-order-dependent
-    in the last ulp, so both emitted floats are rounded to 6 decimals
-    (the driver's float canonicalization width).
-    """
-    # r06: rebalance the scan — both passes (model build, scoring) do
-    # their heavy work (tokenize + bigram explode + partial agg) BEFORE
-    # the first exchange, so an under-split local input runs them on
-    # 1-2 cores.  No-op on a many-split corpus (the repetition_signals /
-    # hll precedent).  A/B best-of-3 at sf0.1 local[32]: 2.47 -> 1.72 s.
-    df = rebalance_for_compute(df)
-    toks = tokens_col(normalized_text(F.col(text_col)))
-    carry_names = list(carry or {})
-    base = df.select(
-        F.col(id_col),
-        *[c.alias(nm) for nm, c in (carry or {}).items()],
-        _bigrams(toks).alias("bg"),
-    )
-    cb = (
-        model
-        if model is not None
-        else bigram_lm_model(df, text_col, id_col, train_mod, train_keep)
-    )
-    # cu and V both derive from cb rather than re-scanning the train
-    # slice: cu(w1) = sum of cb over w2 (the conditional denominator —
-    # prefix-position counts, not raw unigram counts), and the vocabulary
-    # is exactly the distinct words of cb's pairs.  cb is consumed three
-    # times (score join, cu, V) and column pruning makes the subtrees
-    # non-identical, so ReuseExchange does NOT collapse them (measured:
-    # 4 corpus scans unpersisted) — hence the persist: the bigram count
-    # table IS the model artifact (CCNet persists its KenLM model the
-    # same way), it is O(distinct train bigrams) — orders of magnitude
-    # smaller than the corpus, MEMORY_AND_DISK spills if not — and with
-    # it the whole operator reads the corpus text exactly twice (one
-    # model-build pass, one scoring pass).  Interleaved A/B at sf0.1
-    # local[32] (3 runs each): nopersist 24.0/23.1 s vs persist
-    # 25.1/27.1 s — a wash where the corpus is 24 MB, kept ON because
-    # the scan-count argument (2 vs 4 text reads) is what matters at
-    # 100 TB and the cached table is bounded by model size, not corpus.
-    # (A parquet-materialized `model` is equally re-read per consumer but
-    # from a tiny columnar file, so the persist matters less there.)
-    if persist_model and model is None:
-        cb = cb.persist()
-        if model_handle is not None:
-            model_handle.append(cb)
-    cu = cb.groupBy("w1").agg(F.sum("cb").alias("cu"))
-    vocab = cb.select(F.explode(F.array("w1", "w2")).alias("w"))
-    # V is a scalar: 1-row broadcast crossJoin (sanctioned pattern, see
-    # tfidf_top_terms).
-    v = vocab.agg(F.count_distinct("w").alias("v"))
-
-    scored = (
-        base.select(id_col, *carry_names, F.explode("bg").alias("b"))
-        .select(id_col, *carry_names, "b.w1", "b.w2")
-        .join(cb, ["w1", "w2"], "left")
-        .join(cu, ["w1"], "left")
-        .crossJoin(F.broadcast(v))
-        .select(
-            id_col,
-            *carry_names,
-            (
-                F.log(F.coalesce(F.col("cb"), F.lit(0)).cast("double") + 1.0)
-                - F.log(
-                    F.coalesce(F.col("cu"), F.lit(0)).cast("double")
-                    + F.col("v").cast("double")
-                )
-            ).alias("logp"),
-        )
-    )
-    agg = scored.groupBy(id_col, *carry_names).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        (-F.sum("logp") / F.count(F.lit(1))).alias("_nll"),
-    )
-    return agg.select(
-        id_col,
-        *carry_names,
-        "n_bigrams",
-        F.round(F.col("_nll"), 6).alias("avg_nll"),
-        F.round(F.exp(F.col("_nll")), 6).alias("ppl"),
-    )
-
-
-def _trigrams(toks):
-    """Adjacent word triples, JVM-side — the zip_with-of-shifted-slices
-    construction (_bigrams' measured O(tokens^2) lesson), nested once
-    because zip_with is binary."""
-    m = F.greatest(F.size(toks) - 2, F.lit(0))
-    bc = F.zip_with(
-        F.slice(toks, 2, m),
-        F.slice(toks, 3, m),
-        lambda b, c: F.struct(b.alias("w2"), c.alias("w3")),
-    )
-    return F.zip_with(
-        F.slice(toks, 1, m),
-        bc,
-        lambda a, p: F.struct(
-            a.alias("w1"), p["w2"].alias("w2"), p["w3"].alias("w3")
-        ),
-    )
+    feed it back to :func:`ngram_lm_scores` or :func:`kn_lm_scores` via
+    ``model=`` for the train-once/score-many production path (scoring
+    then reads the corpus text exactly once)."""
+    return _ngram_counts(df, 2, text_col, id_col, train_mod, train_keep)
 
 
 def trigram_lm_model(
@@ -243,15 +218,68 @@ def trigram_lm_model(
     (bigram, unigram, totals, vocabulary) is a marginal SUM of this one
     relation, so the model stays a single parquet table exactly like
     :func:`bigram_lm_model`."""
-    df = rebalance_for_compute(df)  # r06: see ngram_lm_scores (no-op if already spread)
-    toks = tokens_col(normalized_text(F.col(text_col)))
-    train = df.filter(
-        F.pmod(F.col(id_col), F.lit(train_mod)) < train_keep
-    ).select(_trigrams(toks).alias("tg"))
-    tr = train.select(F.explode("tg").alias("t")).select(
-        "t.w1", "t.w2", "t.w3"
-    )
-    return tr.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("c3"))
+    return _ngram_counts(df, 3, text_col, id_col, train_mod, train_keep)
+
+
+def ngram_lm_scores(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    train_mod: int = 10,
+    train_keep: int = 8,
+    persist_model: bool = True,
+    model: DataFrame | None = None,
+    model_handle: list | None = None,
+    carry: dict | None = None,
+) -> DataFrame:
+    """Add-one-smoothed bigram-LM scoring of every document.
+
+    Per document: every adjacent token pair contributes
+    ``ln(cb+1) - ln(cu+V)`` (add-one smoothing; unseen bigrams/prefixes
+    coalesce to 0) where ``cb(w1,w2)`` counts bigrams over the train
+    slice, ``cu(w1)`` is the prefix marginal of ``cb`` and ``V`` the
+    distinct words of ``cb``'s pairs.  Output ``(id, *carry,
+    n_bigrams, avg_nll, ppl)``; documents with fewer than two tokens
+    have no bigrams and drop out (a <2-token doc has no defined LM
+    score).
+
+    ``carry`` is an optional ``{name: Column}`` mapping of per-document
+    expressions over ``df`` to thread through the scoring pipeline and
+    emit alongside the score columns.  A carried column rides the bigram
+    explode and the per-doc aggregation as an extra grouping key, which
+    costs a few bytes per exploded row — but saves the consumer a SECOND
+    corpus scan plus a doc_id join to attach the same value (the
+    ccnet_buckets pred_lang case: one scan computes score inputs AND the
+    language vote).  Each carried expression must be functionally
+    determined by the document row (it becomes part of the groupBy key).
+
+    Model lifetime (see :func:`_lm_model`): with ``persist_model=True``
+    and no external ``model`` the count table is persisted; pass a list
+    as ``model_handle`` to receive it and ``unpersist()`` it once the
+    scoring action has run (jobs/score.py does exactly this after its
+    write).  ``model=`` takes a :func:`bigram_lm_model` relation
+    (typically read back from parquet) and skips the train slice; the
+    round trip is pytest-pinned equal to the inline path.
+    """
+
+    def add_one(cb):
+        # cu(w1) = sum of cb over w2 (the conditional denominator —
+        # prefix-position counts, not raw unigram counts); V is a
+        # scalar: 1-row broadcast crossJoin (see tfidf_top_terms).
+        cu = cb.groupBy("w1").agg(F.sum("cb").alias("cu"))
+        v = cb.select(F.explode(F.array("w1", "w2")).alias("w")).agg(
+            F.count_distinct("w").alias("v")
+        )
+        return [(cb, ["w1", "w2"]), (cu, ["w1"])], v, (
+            F.log(F.coalesce(F.col("cb"), F.lit(0)).cast("double") + 1.0)
+            - F.log(
+                F.coalesce(F.col("cu"), F.lit(0)).cast("double")
+                + F.col("v").cast("double")
+            )
+        )
+
+    return _lm_scores(df, 2, add_one, text_col, id_col, train_mod,
+                      train_keep, persist_model, model, model_handle, carry)
 
 
 def trigram_lm_scores(
@@ -283,90 +311,126 @@ def trigram_lm_scores(
     approximation that keeps the model ONE relation).  All log-prob
     arithmetic is spelled ``ln(count) - ln(denom)`` in BOTH engines (a
     quotient-then-log disagrees in the last ulp), counts are exact ints,
-    and the per-doc mean rounds to 6 decimals — the ngram_lm_scores
-    float discipline.
+    and the per-doc mean rounds to 6 decimals.  Output ``(id,
+    n_trigrams, avg_nll, ppl)``.
 
     Scale shape: the three backoff levels join the corpus POSITION
     relation largest-key-first, each level only touching the previous
     level's misses via coalesce on left joins; all enrichment
     (marginals, log-probs) happens on the MODEL-sized table before any
-    corpus join.  The model persists under the same lifetime contract as
-    ngram_lm_scores (pass ``model_handle`` to unpersist after your
-    action; pass ``model=`` a read-back parquet for train-once /
-    score-many)."""
-    df = rebalance_for_compute(df)  # r06: see ngram_lm_scores
-    toks = tokens_col(normalized_text(F.col(text_col)))
-    base = df.select(F.col(id_col), _trigrams(toks).alias("tg"))
-    c3 = (
-        model
-        if model is not None
-        else trigram_lm_model(df, text_col, id_col, train_mod, train_keep)
-    )
-    if persist_model and model is None:
-        c3 = c3.persist()
-        if model_handle is not None:
-            model_handle.append(c3)
+    corpus join.  ``persist_model`` / ``model`` (a
+    :func:`trigram_lm_model` relation) / ``model_handle`` follow
+    :func:`ngram_lm_scores`."""
 
-    ln = F.log
-    la = F.log(F.lit(float(alpha)))
-    c2p = c3.groupBy("w1", "w2").agg(F.sum("c3").alias("c2p"))
-    p3 = c3.join(c2p, ["w1", "w2"]).select(
-        "w1", "w2", "w3",
-        (ln(F.col("c3").cast("double")) - ln(F.col("c2p").cast("double"))
-         ).alias("logp3"),
-    )
-    c2l = c3.groupBy("w2", "w3").agg(F.sum("c3").alias("c2l"))
-    c1m = c3.groupBy("w2").agg(F.sum("c3").alias("c1m"))
-    p2 = c2l.join(c1m, ["w2"]).select(
-        "w2", "w3",
-        (la + ln(F.col("c2l").cast("double"))
-         - ln(F.col("c1m").cast("double"))).alias("logp2"),
-    )
-    c1l = c3.groupBy("w3").agg(F.sum("c3").alias("c1l"))
-    tv = c3.agg(
-        F.sum("c3").alias("t_total"),
-        F.count_distinct("w3").alias("v"),
-    )
-    p1 = c1l.crossJoin(F.broadcast(tv)).select(
-        "w3",
-        (la + la + ln(F.col("c1l").cast("double") + 1.0)
-         - ln(F.col("t_total").cast("double") + F.col("v").cast("double"))
-         ).alias("logp1"),
-    )
-
-    pos = base.select(id_col, F.explode("tg").alias("t")).select(
-        id_col, "t.w1", "t.w2", "t.w3"
-    )
-    scored = (
-        pos.join(p3, ["w1", "w2", "w3"], "left")
-        .join(p2, ["w2", "w3"], "left")
-        .join(p1, ["w3"], "left")
-        .crossJoin(F.broadcast(tv))
-        .select(
-            id_col,
-            F.coalesce(
-                F.col("logp3"),
-                F.col("logp2"),
-                F.col("logp1"),
-                # w3 never seen at all: the add-one floor with c1l = 0
-                la + la + ln(F.lit(1.0))
-                - ln(
-                    F.col("t_total").cast("double")
-                    + F.col("v").cast("double")
-                ),
-            ).alias("logp"),
+    def backoff(c3):
+        ln = F.log
+        la = F.log(F.lit(float(alpha)))
+        ltv = ln(F.col("t_total").cast("double") + F.col("v").cast("double"))
+        c2p = c3.groupBy("w1", "w2").agg(F.sum("c3").alias("c2p"))
+        p3 = c3.join(c2p, ["w1", "w2"]).select(
+            "w1", "w2", "w3",
+            (ln(F.col("c3").cast("double")) - ln(F.col("c2p").cast("double"))
+             ).alias("logp3"),
         )
-    )
-    agg = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_trigrams"),
-        (-F.sum("logp") / F.count(F.lit(1))).alias("_nll"),
-    )
-    return agg.select(
-        id_col,
-        "n_trigrams",
-        F.round(F.col("_nll"), 6).alias("avg_nll"),
-        F.round(F.exp(F.col("_nll")), 6).alias("ppl"),
-    )
+        c2l = c3.groupBy("w2", "w3").agg(F.sum("c3").alias("c2l"))
+        c1m = c3.groupBy("w2").agg(F.sum("c3").alias("c1m"))
+        p2 = c2l.join(c1m, ["w2"]).select(
+            "w2", "w3",
+            (la + ln(F.col("c2l").cast("double"))
+             - ln(F.col("c1m").cast("double"))).alias("logp2"),
+        )
+        c1l = c3.groupBy("w3").agg(F.sum("c3").alias("c1l"))
+        tv = c3.agg(
+            F.sum("c3").alias("t_total"),
+            F.count_distinct("w3").alias("v"),
+        )
+        p1 = c1l.crossJoin(F.broadcast(tv)).select(
+            "w3",
+            (la + la + ln(F.col("c1l").cast("double") + 1.0) - ltv).alias("logp1"),
+        )
+        lookups = [(p3, ["w1", "w2", "w3"]), (p2, ["w2", "w3"]), (p1, ["w3"])]
+        return lookups, tv, F.coalesce(
+            F.col("logp3"),
+            F.col("logp2"),
+            F.col("logp1"),
+            # w3 never seen at all: the add-one floor with c1l = 0
+            la + la + ln(F.lit(1.0)) - ltv,
+        )
+
+    return _lm_scores(df, 3, backoff, text_col, id_col, train_mod,
+                      train_keep, persist_model, model, model_handle)
+
+
+def kn_lm_scores(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    discount: float = 0.75,
+    train_mod: int = 10,
+    train_keep: int = 8,
+    persist_model: bool = True,
+    model: DataFrame | None = None,
+    model_handle: list | None = None,
+) -> DataFrame:
+    """Interpolated Kneser-Ney bigram-LM scoring (Kneser & Ney 1995;
+    Chen & Goodman 1999 eq. 4.26) — the smoothing family CCNet's KenLM
+    actually uses, completing the scorer ladder next to the add-one
+    bigram (:func:`ngram_lm_scores`) and stupid-backoff trigram
+    (:func:`trigram_lm_scores`):
+
+        P(w2|w1) = max(cb - d, 0)/cu + (d * n1f(w1)/cu) * Pc(w2)
+
+    with absolute discount ``d``, ``n1f(w1)`` the number of distinct
+    continuations of ``w1``, and the CONTINUATION distribution
+    ``Pc(w2) = (cont(w2) + 1)/(B + V + 1)`` where ``cont(w2)`` counts
+    distinct predecessors, ``B`` distinct bigrams and ``V`` vocabulary
+    types — add-one-floored over V+1 outcomes (the +1 is the OOV
+    bucket) so unseen words score finite instead of -inf.  An unseen
+    PREFIX (cu = 0) backs off to ``Pc(w2)`` alone.
+
+    Every model relation (cu, n1f, cont, B, V) derives from the ONE
+    bigram count table ``cb`` of :func:`bigram_lm_model` — same
+    train/score contract, model-table persistence rules
+    (``persist_model`` / ``model_handle`` / external ``model``) and
+    output shape ``(doc_id, n_bigrams, avg_nll, ppl)`` as
+    ngram_lm_scores.
+
+    Float determinism: P is one fixed-shape arithmetic expression over
+    exact integer-derived doubles — spelled identically in the oracle so
+    both engines run the same IEEE ops — and the per-doc mean of lns is
+    the only order-dependent sum, rounded to 6."""
+
+    def kneser_ney(cb):
+        cu = cb.groupBy("w1").agg(
+            F.sum("cb").alias("cu"), F.count(F.lit(1)).alias("n1f")
+        )
+        cont = cb.groupBy("w2").agg(F.count(F.lit(1)).alias("cont"))
+        # scalars B (distinct bigrams) and V (vocab types) in ONE 1-row
+        # broadcast (r06): the exploded pair relation has exactly 2 rows
+        # per cb row, so B = count/2 — merging the two scalar aggregates
+        # halves the broadcast sub-jobs and the crossJoins.
+        bv = cb.select(F.explode(F.array("w1", "w2")).alias("w")).agg(
+            (F.count(F.lit(1)) / 2).cast("long").alias("b"),
+            F.count_distinct("w").alias("v"),
+        )
+        d = F.lit(float(discount))
+        pc = (F.coalesce(F.col("cont"), F.lit(0)).cast("double") + 1.0) / (
+            F.col("b").cast("double") + F.col("v").cast("double") + 1.0
+        )
+        cud = F.col("cu").cast("double")
+        seen = (
+            F.greatest(
+                F.coalesce(F.col("cb"), F.lit(0)).cast("double") - d,
+                F.lit(0.0),
+            )
+            / cud
+            + d * F.col("n1f").cast("double") / cud * pc
+        )
+        lookups = [(cb, ["w1", "w2"]), (cu, ["w1"]), (cont, ["w2"])]
+        return lookups, bv, F.log(F.when(F.col("cu").isNull(), pc).otherwise(seen))
+
+    return _lm_scores(df, 2, kneser_ney, text_col, id_col, train_mod,
+                      train_keep, persist_model, model, model_handle)
 
 
 def bm25_topk(
@@ -469,6 +533,7 @@ def ccnet_buckets(
     model: DataFrame | None = None,
     cutoffs: str = "exact",
     sketch_accuracy: int = 10000,
+    model_handle: list | None = None,
 ) -> DataFrame:
     """CCNet corpus partitioning (Wenzek et al. 2020 §4.4): bucket every
     document into perplexity terciles WITHIN its predicted language —
@@ -499,6 +564,9 @@ def ccnet_buckets(
       from exact by the tie mass at each boundary (plus sketch error
       ~1/sketch_accuracy relative rank); the exact-vs-sketch differential
       is pytest-pinned at test scale.
+
+    ``model`` and ``model_handle`` pass through to the scorer (see
+    :func:`ngram_lm_scores` for the model's cache lifetime).
     """
     from pdfminer_six_spark.ops.textstats import language_vote_expr
 
@@ -508,7 +576,7 @@ def ccnet_buckets(
     # corpus read fewer and one join fewer for identical rows (the vote
     # is a pure per-row function of text).  The lowercased token array
     # is projected once (`_lang_toks`) so the split never re-evaluates
-    # per language (the _bigrams O(tokens^2) lesson).
+    # per language (the _ngrams O(tokens^2) lesson).
     from pdfminer_six_spark.ops.textstats import tokens_col as _tc
 
     base = df.withColumn(
@@ -520,6 +588,7 @@ def ccnet_buckets(
         text_col=text_col,
         id_col=id_col,
         model=model,
+        model_handle=model_handle,
         carry={"pred_lang": language_vote_expr(F.col("_lang_toks"))},
     )
     if cutoffs == "exact":
@@ -602,7 +671,7 @@ def dsir_weights(
         df = rebalance_for_compute(df)  # r06: see ngram_lm_scores
         toks = tokens_col(normalized_text(F.col(text_col)))
         bg = F.transform(
-            _bigrams(toks), lambda b: F.concat_ws(" ", b["w1"], b["w2"])
+            _ngrams(toks, 2), lambda b: F.concat_ws(" ", b["w1"], b["w2"])
         )
         fcol = F.concat(toks, bg) if bigrams else toks
         out = df.select(F.col(id_col), F.explode(fcol).alias("feat"))
@@ -622,20 +691,20 @@ def dsir_weights(
             "feat", F.lit(0).alias("is_t"), F.lit(1).alias("is_r")
         )
     )
-    model = tagged.groupBy("feat").agg(
-        F.sum("is_t").alias("ct"), F.sum("is_r").alias("cr")
-    )
     # the model relation feeds THREE consumers (llr, scalars) whose
     # pruned subtrees don't ReuseExchange — unpersisted, each re-scans
     # both corpora's text (measured 5 parquet scans in the plan).  The
-    # persisted table is vocab-sized (or k buckets), not corpus-sized —
-    # the ngram_lm_scores precedent, same unpersist contract via
-    # ``model_handle``.  With it the op reads target text once and raw
-    # text twice (model build + scoring).
-    if persist_model:
-        model = model.persist()
-        if model_handle is not None:
-            model_handle.append(model)
+    # persisted table is vocab-sized (or k buckets), not corpus-sized.
+    # With it the op reads target text once and raw text twice (model
+    # build + scoring).
+    model = _lm_model(
+        None,
+        lambda: tagged.groupBy("feat").agg(
+            F.sum("is_t").alias("ct"), F.sum("is_r").alias("cr")
+        ),
+        persist_model,
+        model_handle,
+    )
     scalars = model.agg(
         F.sum("ct").alias("tt"),
         F.sum("cr").alias("tr"),
@@ -674,103 +743,4 @@ def dsir_weights(
                 6,
             ).alias("log_w"),
         )
-    )
-
-
-def kn_lm_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    discount: float = 0.75,
-    train_mod: int = 10,
-    train_keep: int = 8,
-    persist_model: bool = True,
-    model: DataFrame | None = None,
-    model_handle: list | None = None,
-) -> DataFrame:
-    """Interpolated Kneser-Ney bigram-LM scoring (Kneser & Ney 1995;
-    Chen & Goodman 1999 eq. 4.26) — the smoothing family CCNet's KenLM
-    actually uses, completing the scorer ladder next to the add-one
-    bigram (:func:`ngram_lm_scores`) and stupid-backoff trigram
-    (:func:`trigram_lm_scores`):
-
-        P(w2|w1) = max(cb - d, 0)/cu + (d * n1f(w1)/cu) * Pc(w2)
-
-    with absolute discount ``d``, ``n1f(w1)`` the number of distinct
-    continuations of ``w1``, and the CONTINUATION distribution
-    ``Pc(w2) = (cont(w2) + 1)/(B + V + 1)`` where ``cont(w2)`` counts
-    distinct predecessors, ``B`` distinct bigrams and ``V`` vocabulary
-    types — add-one-floored over V+1 outcomes (the +1 is the OOV
-    bucket) so unseen words score finite instead of -inf.  An unseen
-    PREFIX (cu = 0) backs off to ``Pc(w2)`` alone.
-
-    Every model relation (cu, n1f, cont, B, V) derives from the ONE
-    bigram count table ``cb`` built over the deterministic
-    ``pmod(id, train_mod) < train_keep`` slice — same train/score
-    contract, model-table persistence rules (``persist_model`` /
-    ``model_handle`` / external ``model``) and output shape
-    ``(doc_id, n_bigrams, avg_nll, ppl)`` as ngram_lm_scores.
-
-    Float determinism: P is one fixed-shape arithmetic expression over
-    exact integer-derived doubles — spelled identically in the oracle so
-    both engines run the same IEEE ops — and the per-doc mean of lns is
-    the only order-dependent sum, rounded to 6 (the ngram_lm
-    discipline)."""
-    df = rebalance_for_compute(df)  # r06: see ngram_lm_scores
-    toks = tokens_col(normalized_text(F.col(text_col)))
-    base = df.select(F.col(id_col), _bigrams(toks).alias("bg"))
-    cb = (
-        model
-        if model is not None
-        else bigram_lm_model(df, text_col, id_col, train_mod, train_keep)
-    )
-    # same scan-count argument as ngram_lm_scores, with one more
-    # consumer: cb feeds the score join + cu + n1f + cont + scalars.
-    if persist_model and model is None:
-        cb = cb.persist()
-        if model_handle is not None:
-            model_handle.append(cb)
-    cu = cb.groupBy("w1").agg(
-        F.sum("cb").alias("cu"), F.count(F.lit(1)).alias("n1f")
-    )
-    cont = cb.groupBy("w2").agg(F.count(F.lit(1)).alias("cont"))
-    # scalars B (distinct bigrams) and V (vocab types) in ONE 1-row
-    # broadcast (r06): the exploded pair relation has exactly 2 rows per
-    # cb row, so B = count/2 — merging the two scalar aggregates halves
-    # the broadcast sub-jobs and the crossJoins.
-    bv = cb.select(F.explode(F.array("w1", "w2")).alias("w")).agg(
-        (F.count(F.lit(1)) / 2).cast("long").alias("b"),
-        F.count_distinct("w").alias("v"),
-    )
-    d = F.lit(float(discount))
-    pc = (F.coalesce(F.col("cont"), F.lit(0)).cast("double") + 1.0) / (
-        F.col("b").cast("double") + F.col("v").cast("double") + 1.0
-    )
-    cud = F.col("cu").cast("double")
-    seen = (
-        F.greatest(
-            F.coalesce(F.col("cb"), F.lit(0)).cast("double") - d, F.lit(0.0)
-        )
-        / cud
-        + d * F.col("n1f").cast("double") / cud * pc
-    )
-    p = F.when(F.col("cu").isNull(), pc).otherwise(seen)
-    scored = (
-        base.select(id_col, F.explode("bg").alias("bgp"))
-        .select(id_col, "bgp.w1", "bgp.w2")
-        .join(cb, ["w1", "w2"], "left")
-        .join(cu, ["w1"], "left")
-        .join(cont, ["w2"], "left")
-        .crossJoin(F.broadcast(bv))
-        .select(id_col, F.log(p).alias("logp"))
-    )
-    agg = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        (-F.sum("logp") / F.count(F.lit(1))).alias("nll"),
-    )
-    return agg.select(
-        id_col,
-        "n_bigrams",
-        F.round(F.col("nll"), 6).alias("avg_nll"),
-        F.round(F.exp("nll"), 6).alias("ppl"),
     )

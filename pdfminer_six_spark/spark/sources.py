@@ -8,7 +8,7 @@ the same extraction kernel.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import pandas as pd
 
@@ -31,6 +31,17 @@ DOC_EXTRACTED_SCHEMA = StructType(
         StructField("error", StringType()),
     ]
 )
+
+
+def _file_items(body):
+    """``items`` for ``_map_batches`` over a ``(path, content)`` batch:
+    every file's raw bytes through ``body``, keyed by its path."""
+
+    def items(b: pd.DataFrame):
+        for path, content in zip(b["path"], b["content"]):
+            yield (path,), bytes(content), body, False
+
+    return items
 
 
 def _doc_row(key, text, status, error, wall_ms):
@@ -58,13 +69,10 @@ def extract_pdf_corpus(
     corpus: DataFrame, password: str = ""
 ) -> DataFrame:
     """(path, content) -> per-document extracted text, Arrow-batched."""
-
-    def items(b: pd.DataFrame):
-        for path, content in zip(b["path"], b["content"]):
-            yield (path,), bytes(content), _pdf_text, False
-
     return corpus.select("path", "content").mapInPandas(
-        _map_batches(items, _doc_row, DOC_EXTRACTED_SCHEMA, password),
+        _map_batches(
+            _file_items(_pdf_text), _doc_row, DOC_EXTRACTED_SCHEMA, password
+        ),
         schema=DOC_EXTRACTED_SCHEMA,
     )
 
@@ -80,8 +88,59 @@ IMAGE_SCHEMA = StructType(
         StructField("fmt", StringType()),
         StructField("n_bytes", IntegerType()),
         StructField("sha256", StringType()),
+        StructField("status", StringType()),
+        StructField("error", StringType()),
     ]
 )
+
+
+def _page_images(data: bytes, password: str) -> list:
+    """Image body: one ``(page, name, width, height, bits, fmt, n_bytes,
+    sha256)`` tuple per embedded image, in emission order."""
+    import hashlib
+
+    from pdfminer_six_spark.core.extract import extract_pages
+    from pdfminer_six_spark.core.image import export_image_bytes
+    from pdfminer_six_spark.core.layout import LTContainer, LTImage
+
+    def walk(item):
+        if isinstance(item, LTImage):
+            yield item
+        elif isinstance(item, LTContainer):
+            for child in item:
+                yield from walk(child)
+
+    out = []
+    for pageno, page in enumerate(extract_pages(data, password=password), 1):
+        inline_seq = 0
+        for img in walk(page):
+            # inline images carry id()-based names in both engines
+            # (reference pdfinterp.py:1310-1315) — unusable as distributed
+            # keys; renumber them in deterministic emission order
+            name = img.name
+            if name.isdigit():
+                inline_seq += 1
+                name = f"inline-{inline_seq}"
+            try:
+                ext, payload = export_image_bytes(img)
+            except Exception:
+                ext, payload = ".err", b""
+            out.append(
+                (pageno, name, img.srcsize[0], img.srcsize[1], img.bits, ext,
+                 len(payload), hashlib.sha256(payload).hexdigest())
+            )
+    return out
+
+
+_NO_IMAGE = (None,) * 8
+
+
+def _image_rows(key, images, status, error, wall_ms):
+    if status == "ok":
+        for r in images:
+            yield (*key, *r, status, error)
+    elif status != "empty":
+        yield (*key, *_NO_IMAGE, status, error)
 
 
 def extract_images_corpus(corpus: DataFrame, password: str = "") -> DataFrame:
@@ -91,62 +150,18 @@ def extract_images_corpus(corpus: DataFrame, password: str = "") -> DataFrame:
     content hash so dedup/join logic downstream never shuffles megabyte
     blobs; a local sink (core/image.py:ImageWriter) re-derives identical
     bytes when files are wanted (the jb2/bmp exports are deterministic,
-    tested against the reference's goldens)."""
+    tested against the reference's goldens).  An image whose export
+    fails keeps its row with fmt ``.err``.
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        from pdfminer_six_spark.core.extract import extract_pages
-        from pdfminer_six_spark.core.image import export_image_bytes
-        from pdfminer_six_spark.core.layout import LTContainer, LTImage
-
-        def walk(item):
-            if isinstance(item, LTImage):
-                yield item
-            elif isinstance(item, LTContainer):
-                for child in item:
-                    yield from walk(child)
-
-        for b in batches:
-            rows = []
-            for path, content in zip(b["path"], b["content"]):
-                try:
-                    pages = extract_pages(bytes(content), password=password)
-                    for pageno, page in enumerate(pages, 1):
-                        inline_seq = 0
-                        for img in walk(page):
-                            # inline images carry id()-based names in both
-                            # engines (reference pdfinterp.py:1310-1315) —
-                            # unusable as distributed keys; renumber them
-                            # in deterministic emission order
-                            name = img.name
-                            if name.isdigit():
-                                inline_seq += 1
-                                name = f"inline-{inline_seq}"
-                            try:
-                                ext, payload = export_image_bytes(img)
-                            except Exception:
-                                ext, payload = ".err", b""
-                            rows.append(
-                                (
-                                    path,
-                                    pageno,
-                                    name,
-                                    img.srcsize[0],
-                                    img.srcsize[1],
-                                    img.bits,
-                                    ext,
-                                    len(payload),
-                                    hashlib.sha256(payload).hexdigest(),
-                                )
-                            )
-                except Exception:
-                    continue
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_SCHEMA.fields]
-            )
-
-    return corpus.select("path", "content").mapInPandas(run, schema=IMAGE_SCHEMA)
+    Status contract: image rows carry status ``ok``; a document without
+    images yields no row; a document that fails to extract yields one
+    row with its path, status and error and nulls elsewhere."""
+    return corpus.select("path", "content").mapInPandas(
+        _map_batches(
+            _file_items(_page_images), _image_rows, IMAGE_SCHEMA, password
+        ),
+        schema=IMAGE_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------

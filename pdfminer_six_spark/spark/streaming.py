@@ -136,98 +136,6 @@ def conversation_sessions(
     )
 
 
-def conversation_sessions_tws(
-    transcripts: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """The SAME session semantics as :func:`conversation_sessions`,
-    expressed in Spark 4's current stateful API
-    (``transformWithStateInPandas`` + ``StatefulProcessor``): a named
-    value state holds the O(1) per-conversation session tuple, and an
-    explicit EVENT-TIME TIMER (registerTimer / handleExpiredTimer)
-    replaces the legacy setTimeoutTimestamp — the timer fires when the
-    watermark passes last-turn + gap, emitting the closed-session row
-    and clearing state.  Requires the RocksDB state-store provider
-    (Spark refuses TWS on the HDFS-backed default) AND the protobuf
-    package (TWS's state-server protocol is protobuf-based — absent in
-    this container, so the stream==batch pytest against the
-    applyInPandasWithState twin skips here and runs where protobuf
-    exists; the applyInPandasWithState twin remains the fully-tested
-    production path)."""
-    import datetime as dt
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_ms = _duration_seconds(gap) * 1000
-
-    def _us_to_ts(us: int):
-        return dt.datetime.fromtimestamp(us / 1e6, dt.timezone.utc).replace(
-            tzinfo=None
-        )
-
-    class Sessionizer(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._sess = handle.getValueState("sess", SESSION_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            start = last = None
-            n = npdf = 0
-            if self._sess.exists():
-                start, last, n, npdf = self._sess.get()
-                # the session extends: retire the old close timer
-                self._handle.deleteTimer(last // 1000 + gap_ms)
-            for pdf in rows:
-                ts_us = pdf["ts"].astype("datetime64[us]").astype("int64")
-                lo, hi = int(ts_us.min()), int(ts_us.max())
-                start = lo if start is None or lo < start else start
-                last = hi if last is None or hi > last else last
-                n += len(pdf)
-                npdf += int((pdf["tool"] == "pdf").sum())
-            self._sess.update((start, last, n, npdf))
-            self._handle.registerTimer(last // 1000 + gap_ms)
-            return iter(())
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            if not self._sess.exists():
-                return iter(())
-            start, last, n, npdf = self._sess.get()
-            self._sess.clear()
-            return iter(
-                [
-                    pd.DataFrame(
-                        {
-                            "conv_id": [key[0]],
-                            "session_start": [_us_to_ts(start)],
-                            "session_end": [_us_to_ts(last)],
-                            "n_turns": [n],
-                            "n_pdf_turns": [npdf],
-                            "closed": [True],
-                        }
-                    )
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        transcripts.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .transformWithStateInPandas(
-            Sessionizer(),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
 def _duration_seconds(s: str) -> int:
     qty, unit = s.split()
     mult = {"second": 1, "seconds": 1, "minute": 60, "minutes": 60,

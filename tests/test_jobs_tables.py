@@ -447,7 +447,9 @@ def _check_lineage(spark, workdir, stats, stages):
         assert rows[s].committed_at is not None
 
 
-def test_build_job_end_to_end_and_failure_injection_resume(spark, tmp_path):
+def test_build_job_end_to_end_and_failure_injection_resume(
+    spark, tmp_path, monkeypatch
+):
     """jobs/build.py — the composed corpus build (extract -> clean ->
     dedup -> score -> pack) as one resumable artifact:
 
@@ -456,10 +458,25 @@ def test_build_job_end_to_end_and_failure_injection_resume(spark, tmp_path):
        SKIPS the committed stages (same _SUCCESS mtime — nothing was
        recomputed or rewritten) and its final output is IDENTICAL to
        the uninterrupted run's
+    3. the score stage releases the LM model it caches: every table
+       ccnet_buckets hands back through ``model_handle`` is uncached once
+       the run returns
     """
     import os
 
+    from pyspark import StorageLevel
+
+    from pdfminer_six_spark.ops import retrieval
+
     job = _build_job()
+    handles = []
+    ccnet_buckets = retrieval.ccnet_buckets
+
+    def recording_ccnet_buckets(*a, **kw):
+        handles.append(kw.get("model_handle"))
+        return ccnet_buckets(*a, **kw)
+
+    monkeypatch.setattr(retrieval, "ccnet_buckets", recording_ccnet_buckets)
 
     from pdfminer_six_spark.datagen.transcripts import transcripts_pandas
 
@@ -474,6 +491,8 @@ def test_build_job_end_to_end_and_failure_injection_resume(spark, tmp_path):
         "--seq-len", "128", "--mix-budget", "500",
         "--shuffle-seed", "bshuf",
     ]))
+    assert len(handles) == 1 and handles[0]
+    assert all(m.storageLevel == StorageLevel.NONE for m in handles[0])
     assert all(stats1[s]["action"] == "computed" for s in job.STAGES)
     final = spark.read.parquet(str(out1)).toPandas()
     assert len(final) == stats1["final"]["rows"] > 0

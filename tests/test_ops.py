@@ -708,14 +708,14 @@ def test_decode_payload_stub_fallback_is_codec_independent():
     features on codec-less and codec-equipped boxes."""
     import numpy as np
 
-    from pdfminer_six_spark.ops.multimodal import _decode_stub, decode_payload
+    from pdfminer_six_spark.ops.multimodal import _decode_stub, decode_payload_ex
 
     junk = b"\x00not-an-image" * 20
-    got = decode_payload(junk, "image")
+    got = decode_payload_ex(junk, "image")[0]
     assert np.array_equal(got, _decode_stub(junk, "image"))
     # non-image kinds never consult the codec path
     assert np.array_equal(
-        decode_payload(junk, "audio"), _decode_stub(junk, "audio")
+        decode_payload_ex(junk, "audio")[0], _decode_stub(junk, "audio")
     )
 
 
@@ -832,11 +832,11 @@ def test_decode_payload_real_codec_when_available():
     import numpy as np
     from PIL import Image
 
-    from pdfminer_six_spark.ops.multimodal import decode_payload
+    from pdfminer_six_spark.ops.multimodal import decode_payload_ex
 
     buf = io.BytesIO()
     Image.new("L", (4, 4), color=200).save(buf, format="PNG")
-    got = decode_payload(buf.getvalue(), "image")
+    got = decode_payload_ex(buf.getvalue(), "image")[0]
     assert got.shape == (16,)
     assert np.all(got == 200.0)
 
@@ -2020,28 +2020,31 @@ def test_c4_line_clean_rules(spark):
     assert (got[2]["n_lines"], got[2]["n_lines_kept"], got[2]["clean_text"]) == (1, 0, "")
 
 
-def test_bigram_lm_model_roundtrip(spark, tmp_path):
-    """Train-once/score-many: building the model, writing it to parquet,
-    reading it back and scoring via model= equals the inline path
-    exactly."""
-    from pdfminer_six_spark.ops.retrieval import bigram_lm_model, ngram_lm_scores
+@pytest.mark.parametrize(
+    "scorer", ["add_one", "stupid_backoff", "kneser_ney"]
+)
+def test_bigram_lm_model_roundtrip(spark, tmp_path, scorer):
+    """Train-once/score-many for every LM scorer: building the model,
+    writing it to parquet, reading it back and scoring via model= equals
+    the inline path exactly."""
+    from pdfminer_six_spark.ops import retrieval as r
 
-    docs = spark.createDataFrame(
-        [(i, f"tok{i % 3} common tok{(i + 1) % 4} common end") for i in range(30)],
-        "doc_id long, text string",
-    )
-    inline = {
-        r["doc_id"]: (r["n_bigrams"], r["avg_nll"], r["ppl"])
-        for r in ngram_lm_scores(docs).collect()
-    }
+    build, score = {
+        "add_one": (r.bigram_lm_model, r.ngram_lm_scores),
+        "stupid_backoff": (r.trigram_lm_model, r.trigram_lm_scores),
+        "kneser_ney": (r.bigram_lm_model, r.kn_lm_scores),
+    }[scorer]
+    docs = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet"
+    ).select("doc_id", "text")
     mpath = str(tmp_path / "lm_model.parquet")
-    bigram_lm_model(docs).write.parquet(mpath)
-    loaded = spark.read.parquet(mpath)
-    via_model = {
-        r["doc_id"]: (r["n_bigrams"], r["avg_nll"], r["ppl"])
-        for r in ngram_lm_scores(docs, model=loaded).collect()
-    }
-    assert via_model == inline
+    build(docs).write.parquet(mpath)
+    via_model = score(
+        docs, model=spark.read.parquet(mpath), persist_model=False
+    )
+    inline = score(docs, persist_model=False)
+    assert via_model.exceptAll(inline).count() == 0
+    assert inline.exceptAll(via_model).count() == 0
 
 
 def test_ccnet_buckets_terciles_per_language(spark):
@@ -3066,104 +3069,11 @@ def test_kmeans_balanced_select_caps_and_determinism(spark):
     assert got == again
 
 
-def test_conversation_sessions_tws_equals_legacy_stateful(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas sessionizer (named value state
-    + explicit event-time timers, RocksDB state store) must emit exactly
-    the rows the applyInPandasWithState twin emits on identical input.
-
-    TWS's state-server protocol is protobuf-based
-    (pyspark/sql/streaming/proto/StateMessage_pb2); this container ships
-    no protobuf and installs are off-limits, so the test skips where the
-    protocol cannot start — the sanctioned PIL-decode pattern."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs protobuf for its state "
-               "protocol; not available in this container",
-    )
-    import datetime as dt
-
-    import pandas as pd
-
-    from pdfminer_six_spark.spark.pipeline import TRANSCRIPTS_SCHEMA
-    from pdfminer_six_spark.spark.streaming import (
-        conversation_sessions,
-        conversation_sessions_tws,
-    )
-
-    src = tmp_path / "tws_in"
-    src.mkdir()
-    t0 = dt.datetime(2026, 1, 1, 10, 0, 0)
-
-    def write(name, rows):
-        df = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        df["turn_idx"] = df["turn_idx"].astype("int32")
-        df["ts"] = df["ts"].astype("datetime64[us]")
-        df.to_parquet(str(src / name))
-
-    write("f1.parquet", [
-        ("convA", 0, "user", "hi", "", t0),
-        ("convA", 1, "assistant", "hello", "pdf",
-         t0 + dt.timedelta(minutes=5)),
-        ("convC", 0, "user", "solo", "pdf", t0 + dt.timedelta(minutes=1)),
-    ])
-    write("f2.parquet", [("convB", 0, "user", "later", "",
-                          t0 + dt.timedelta(hours=4))])
-    write("f3.parquet", [("convB", 1, "user", "more", "",
-                          t0 + dt.timedelta(hours=5))])
-
-    def run(op, qname, provider=None):
-        old = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                             None)
-        if provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", provider
-            )
-        try:
-            stream = (
-                spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(src))
-            )
-            sessions = op(stream, gap="30 minutes", watermark="1 hour")
-            q = (
-                sessions.writeStream.format("memory").queryName(qname)
-                .outputMode("append").trigger(availableNow=True).start()
-            )
-            q.awaitTermination(180)
-            return {
-                (r.conv_id, r.session_start, r.session_end, r.n_turns,
-                 r.n_pdf_turns, r.closed)
-                for r in spark.sql(f"select * from {qname}").collect()
-            }
-        finally:
-            if provider:
-                if old is None:
-                    spark.conf.unset(
-                        "spark.sql.streaming.stateStore.providerClass"
-                    )
-                else:
-                    spark.conf.set(
-                        "spark.sql.streaming.stateStore.providerClass", old
-                    )
-
-    got_tws = run(
-        conversation_sessions_tws,
-        "tws_sessions",
-        provider="org.apache.spark.sql.execution.streaming.state."
-                 "RocksDBStateStoreProvider",
-    )
-    got_legacy = run(conversation_sessions, "legacy_sessions")
-    assert got_tws == got_legacy
-    assert {c for c, *_ in got_tws} == {"convA", "convC"}
-
-
-def test_trigram_lm_model_roundtrip_and_backoff_floor(spark, tmp_path):
-    """trigram_lm_scores: (a) train-once/score-many — scoring against the
-    parquet-round-tripped c3 model equals the inline path; (b) a doc of
-    entirely unseen words hits the add-one unigram floor at every
-    position: avg_nll == 2*ln(1/0.4... spelled exactly as the op does."""
+def test_trigram_lm_model_roundtrip_and_backoff_floor(spark):
+    """trigram_lm_scores: a doc of entirely unseen words hits the add-one
+    unigram floor at every position: avg_nll == 2*ln(1/0.4... spelled
+    exactly as the op does.  (The c3 model's parquet round trip is
+    test_bigram_lm_model_roundtrip[stupid_backoff].)"""
     import math
 
     from pyspark.sql import functions as F
@@ -3176,15 +3086,6 @@ def test_trigram_lm_model_roundtrip_and_backoff_floor(spark, tmp_path):
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
-
-    mp = str(tmp_path / "c3")
-    trigram_lm_model(docs).write.parquet(mp)
-    via_model = trigram_lm_scores(
-        docs, model=spark.read.parquet(mp), persist_model=False
-    )
-    inline = trigram_lm_scores(docs, persist_model=False)
-    assert via_model.exceptAll(inline).count() == 0
-    assert inline.exceptAll(via_model).count() == 0
 
     # floor: append one doc of never-seen tokens; every trigram position
     # takes the default coalesce branch

@@ -489,6 +489,34 @@ def test_pdfcorpus_datasource_equals_binaryfile_path(spark, pdf_dir):
     }
 
 
+def test_extract_images_corpus_status_rows(spark, pdf_dir):
+    """Image extraction keeps the status contract: a document that fails
+    yields exactly one row (its path, the status the pdfcorpus source
+    reports for it, its error, nulls elsewhere); a document that parses
+    but holds no image yields none."""
+    from pdfminer_six_spark.spark.sources import (
+        extract_images_corpus,
+        read_pdf_corpus,
+        register_pdf_corpus_source,
+    )
+
+    register_pdf_corpus_source(spark)
+    via_ds = {
+        r["path"]: r["status"]
+        for r in spark.read.format("pdfcorpus").load(pdf_dir).collect()
+    }
+    rows = extract_images_corpus(read_pdf_corpus(spark, pdf_dir)).collect()
+    by_name = {}
+    for r in rows:
+        by_name.setdefault(r["path"].rsplit("/", 1)[-1], []).append(r)
+    assert sorted(by_name) == ["locked.pdf", "truncated.pdf"]
+    for (r,) in by_name.values():
+        assert r["status"] == via_ds[r["path"].replace("file:", "")]
+        assert r["status"] not in ("ok", "empty") and r["error"]
+        assert [r[c] for c in ("page", "name", "width", "height", "bits",
+                               "fmt", "n_bytes", "sha256")] == [None] * 8
+
+
 def test_pdfcorpus_reader_pushdown_prunes_listing_and_lpt_balances(pdf_dir):
     """Driver-side reader unit contract: pushed (path, length) filters
     shrink the PLANNED partitions (pruning happens at listing time), the
