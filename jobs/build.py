@@ -314,6 +314,8 @@ def run(spark, args) -> dict:
         b.stats["mix"] = {"action": "skipped (no --mix-budget)"}
 
     # ---- 06 pack: sharded greedy packing into seq-len bins ----
+    order_handle = []
+
     def _pack():
         if args.shuffle_seed:
             # pack in the shuffled order: train_order's contiguous pos
@@ -322,7 +324,7 @@ def run(spark, args) -> dict:
             # global shuffle), not crawl order
             order = train_order(
                 to_pack, seed=args.shuffle_seed, id_col="doc_id",
-                mode="sharded",
+                mode="sharded", handle=order_handle,
             ).select("doc_id", "pos")
             keyed = to_pack.join(order, "doc_id").withColumn(
                 "doc_num", F.col("pos")
@@ -341,6 +343,9 @@ def run(spark, args) -> dict:
         ).drop("doc_num")
 
     packed = b.run_stage(6, "pack", _pack)
+    # the pack write has run: release train_order's persisted partitions
+    for cached in order_handle:
+        cached.unpersist()
 
     jobs0 = _group_jobs(spark.sparkContext)
     rows = _write_counted(packed, args.output)

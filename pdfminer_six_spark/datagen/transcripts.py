@@ -502,3 +502,28 @@ def synth_cid_pdf(seed: int) -> bytes:
     out += (b"trailer\n<< /Size %d /Root %d 0 R >>\nstartxref\n%d\n%%%%EOF\n"
             % (len(objs) + 1, catalog_id, xref_pos))
     return bytes(out)
+
+
+def write_pdf_corpus(root: str) -> str:
+    """Write a ten-file synthetic PDF directory into ``root`` (created if
+    missing) and return ``root``: a two-page text PDF, four rich and
+    three CID PDFs, ``truncated.pdf`` (the text PDF cut in half; status
+    ``error``) and ``locked.pdf`` (no password opens it;
+    ``bad_password``).  The bytes are deterministic.  Each file is
+    written under a dot-prefixed name and renamed into place, so a
+    concurrent reader of the directory never lists a partial file."""
+    text = synth_pdf([["corpus text page"], ["second page"]])
+    docs = {
+        "text.pdf": text,
+        "truncated.pdf": text[: len(text) // 2],
+        "locked.pdf": synth_locked_pdf(1),
+    }
+    docs.update({f"rich{i}.pdf": synth_rich_pdf(i) for i in range(1, 5)})
+    docs.update({f"cid{i}.pdf": synth_cid_pdf(i) for i in range(1, 4)})
+    os.makedirs(root, exist_ok=True)
+    for name, data in docs.items():
+        tmp = os.path.join(root, f".{name}.{os.getpid()}")
+        with open(tmp, "wb") as f:
+            f.write(data)
+        os.replace(tmp, os.path.join(root, name))
+    return root

@@ -673,6 +673,7 @@ def train_order(
     n_shards: int = 8,
     id_col: str = "doc_id",
     mode: str = "exact",
+    handle: list | None = None,
 ) -> DataFrame:
     """Deterministic training-order shuffle — the final "global shuffle"
     a training-data pipeline runs before writing shards, made
@@ -701,6 +702,10 @@ def train_order(
       are ordered by key, so cumulative offsets in pid order equal the
       global rank even though sampled boundaries vary run to run — the
       OUTPUT is deterministic, only the internal split points float.
+      The range-partitioned relation is persisted so the sample is not
+      redrawn between the counts and the join; pass a list as
+      ``handle`` to receive it and ``unpersist()`` it once the caller's
+      action has run (jobs/build.py does this after the pack write).
 
     md5 keeps both engines' orders identical (DuckDB computes the same
     digest; xxhash64 would be Spark-only).  Ties are impossible for
@@ -722,6 +727,8 @@ def train_order(
             .withColumn("_pid", F.spark_partition_id())
             .persist()
         )
+        if handle is not None:
+            handle.append(parts)
         counts = {
             r["_pid"]: r["c"]
             for r in parts.groupBy("_pid").agg(

@@ -24,7 +24,7 @@ __all__ = [
     "shingles", "jaccard_pairs",
     "minhash_signatures", "minhash_lsh_candidates",
     "minhash_near_duplicates", "simhash_signatures", "simhash_verify",
-    "simhash_near_duplicates", "duplicate_clusters", "duplicate_spans",
+    "duplicate_clusters", "duplicate_spans",
     "remove_duplicate_spans",
 ]
 
@@ -831,11 +831,11 @@ def simhash_verify(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
     quarters (a pair within hamming<=3 shares at least one exact
     quarter — pigeonhole), then verify by popcount of the XOR.
 
-    Factoring this out of :func:`simhash_near_duplicates` makes the stage
-    independently oracle-able: given a deterministic signature fixture
-    both engines can compute, the quarter-join + hamming math is plain
-    SQL in DuckDB too (the only engine-specific piece of the full op is
-    the xxhash64 signature generation)."""
+    Composed as ``simhash_verify(simhash_signatures(df))``; factored out,
+    the stage is independently oracle-able: given a deterministic
+    signature fixture both engines can compute, the quarter-join +
+    hamming math is plain SQL in DuckDB too (the only engine-specific
+    piece of the full op is the xxhash64 signature generation)."""
     quarters = sig.select(
         "doc_id",
         "simhash",
@@ -872,14 +872,6 @@ def simhash_verify(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-
-
-def simhash_near_duplicates(df: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= k — signature generation
-    composed with :func:`simhash_verify` (quarter blocking + popcount)."""
-    # cache: the signature subplan feeds both sides of the self-join —
-    # without this Spark recomputes the grouped-agg twice
-    return simhash_verify(simhash_signatures(df).cache(), max_hamming)
 
 
 def duplicate_spans(

@@ -318,54 +318,6 @@ def top_terms_sketch(
     )
 
 
-def hll_registers(
-    df: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    p: int = 10,
-    extra_group_cols: list | None = None,
-) -> DataFrame:
-    """The HLL register relation ``(reg, r, nd)`` for the distinct
-    n-gram sketch: register index = low ``p`` bits of the md5-derived
-    60-bit hash, ``r`` = max rank (1 + leading zeros of the hash
-    suffix, comparison-counted — no float log2), ``nd`` = exact
-    distinct hashes in the register (the audit column that lets
-    ``hll_distinct_shingles`` emit exact_distinct without a second
-    grouping).  ``extra_group_cols`` keeps e.g. ``source`` alongside
-    ``reg`` for per-shard sketches; shard registers MERGE by
-    ``max(r)`` — the HLL mergeability law, pytest-pinned — so a
-    streaming or per-partition build folds into the corpus sketch
-    without rescanning anything."""
-    from .dedup import shingles  # deferred: dedup imports this module
-
-    m = 1 << p
-    rank_bits = 60 - p
-    thresholds = F.array(
-        *[
-            F.lit(1 << (rank_bits - j)).cast("long")
-            for j in range(1, rank_bits + 1)
-        ]
-    )
-    keep = list(extra_group_cols or [])
-    sh = shingles(df, text_col, n)
-    if keep:
-        sh = sh.join(df.select("doc_id", *keep), "doc_id")
-    g = sh.select(
-        *keep,
-        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("_h"),
-    )
-    w_suffix = F.shiftright(F.col("_h"), p)
-    rank = F.lit(1) + F.size(F.filter(thresholds, lambda t: w_suffix < t))
-    return g.groupBy(
-        *keep, F.col("_h").bitwiseAND(F.lit(m - 1)).alias("reg")
-    ).agg(
-        F.max(rank).alias("r"),
-        F.countDistinct("_h").alias("nd"),
-    )
-
-
 def hll_distinct_shingles(
     df: DataFrame,
     text_col: str = "text",
@@ -391,7 +343,7 @@ def hll_distinct_shingles(
       map-side-combinable aggregate with at most ``m = 2^p`` groups, so
       at 100 TB the corpus scan is the only full pass and the shuffle
       carries <= m (reg, max) pairs per partition.  Registers merge by
-      max, the HLL mergeability law (pytest-pinned per-source vs global);
+      max, the HLL mergeability law;
     - indicator sum scaled integer-exact: ``S = sum 2^(R - M_j)`` with
       ``R = rank_bits + 1`` (absent register => 2^R), so the only float
       ops are the final ``alpha * m^2 * 2^R / S`` (alpha * powers of two

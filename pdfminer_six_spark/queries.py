@@ -2887,16 +2887,13 @@ def q_extract_images(spark, sf_dir):
     wrap, and the BMP assembly — each byte-checked against the reference's
     exports in tests/test_image_export.py."""
     import functools
-    import os
 
     from pdfminer_six_spark.spark.sources import (
         extract_images_corpus,
         read_pdf_corpus,
     )
 
-    # corpus root is configurable so the query is not coupled to one box's
-    # checkout layout; the default matches this environment
-    base = os.environ.get("PDF_SAMPLES_DIR", "/root/reference/samples")
+    base = _pdf_samples_dir()
     subdirs = [
         d for d in ("contrib", "nonfree", "encryption")
         if os.path.isdir(os.path.join(base, d))
@@ -3222,24 +3219,39 @@ def q_kmeans_balanced_select(spark, sf_dir):
     )
 
 
-def q_pdfcorpus_scan(spark, sf_dir):
-    """The Spark-4 Python DataSource surface: a raw PDF directory as a
-    first-class format (`spark.read.format("pdfcorpus")`) with source-
-    level LPT partition planning and (path, length) filter pushdown that
-    prunes at LISTING time.  Rows-only for the driver (the source reads
-    a filesystem directory, not a DuckDB-visible table); row-for-row
-    equality against the binaryFile+mapInPandas path is pytest-pinned
-    (test_pdfcorpus_datasource_equals_binaryfile_path)."""
-    import os
+# The synthetic PDF directory the file-corpus queries fall back to.
+_PDF_CORPUS_FIXTURE = os.path.join(
+    tempfile.gettempdir(), "pdfminer_six_spark_fixtures", "pdf_corpus"
+)
 
-    from pdfminer_six_spark.spark.sources import register_pdf_corpus_source
 
-    register_pdf_corpus_source(spark)
+def _pdf_samples_dir() -> str:
+    """The PDF directory the file-corpus queries read: ``PDF_SAMPLES_DIR``
+    when set, else the reference sample corpus when present, else the
+    ten-file synthetic corpus (``datagen.transcripts.write_pdf_corpus``)
+    written under the temp dir."""
+    from pdfminer_six_spark.datagen.transcripts import write_pdf_corpus
+
     base = os.environ.get("PDF_SAMPLES_DIR", "/root/reference/samples")
+    if "PDF_SAMPLES_DIR" in os.environ or os.path.isdir(base):
+        return base
+    return write_pdf_corpus(_PDF_CORPUS_FIXTURE)
+
+
+def q_pdfcorpus_scan(spark, sf_dir):
+    """A raw PDF directory through the one file reader: binaryFile scan
+    -> Arrow-batched extraction, one ``(path, length, n_pages, status)``
+    row per non-empty file (``path`` is the file URI).  Rows-only: no
+    DuckDB oracle, since the scan reads a filesystem directory, not a
+    DuckDB-visible table; the reader's row contract is pytest-pinned
+    (test_pdf_corpus_reader_contract)."""
+    from pdfminer_six_spark.spark.sources import (
+        extract_pdf_corpus,
+        read_pdf_corpus,
+    )
+
     return (
-        spark.read.format("pdfcorpus")
-        .option("numPartitions", "8")
-        .load(base)
+        extract_pdf_corpus(read_pdf_corpus(spark, _pdf_samples_dir()))
         .filter(F.col("length") > 0)
         .select("path", "length", "n_pages", "status")
     )

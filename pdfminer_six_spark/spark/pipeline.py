@@ -17,9 +17,10 @@ Design (SURVEY.md §2.11, §4):
 * Per-executor warm caches: AFM/encodings/CMap resources load once per
   python worker at module import; fonts are cached per document.
 * One kernel, one status contract.  Every path (per-turn text, the
-  split path's page count and page groups, layout, and the PDF-corpus
-  sources) runs each payload through ``_kernel`` under one batch driver,
-  ``_drive``.  Failures never kill a task: each payload gets a
+  split path's page count and page groups, layout, and the binaryFile
+  PDF-corpus text and image readers) runs each payload through
+  ``_kernel`` under one batch driver, ``_map_batches``.  Failures never
+  kill a task: each payload gets a
   ``status`` of ok | empty | bad_password | error —
   ``error`` is ``"b85decode: <msg>"`` for an undecodable payload and
   ``"<ExceptionType>: <msg>"`` otherwise; ``bad_password`` carries the
@@ -244,24 +245,21 @@ def _kernel(payload, password: str, body, b85: bool = True) -> tuple:
     return result, status, error, (time.perf_counter() - t0) * 1000.0
 
 
-def _drive(items, password: str, emit) -> Iterator[tuple]:
-    """The batch driver: each ``(key, payload, body, b85)`` item goes
-    through the kernel once and ``emit(key, result, status, error,
-    wall_ms)`` turns the outcome into zero or more output rows."""
-    for key, payload, body, b85 in items:
-        yield from emit(key, *_kernel(payload, password, body, b85))
-
-
 def _map_batches(items, emit, schema: StructType, password: str):
-    """``mapInPandas`` function over ``_drive``: ``items(batch)`` yields
-    the kernel items of one Arrow batch."""
+    """The batch driver, as a ``mapInPandas`` function: ``items(batch)``
+    yields the ``(key, payload, body, b85)`` kernel items of one Arrow
+    batch, each goes through the kernel once, and ``emit(key, result,
+    status, error, wall_ms)`` turns the outcome into zero or more rows."""
     cols = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            yield pd.DataFrame(
-                list(_drive(items(b), password, emit)), columns=cols
-            )
+            rows = [
+                row
+                for key, payload, body, b85 in items(b)
+                for row in emit(key, *_kernel(payload, password, body, b85))
+            ]
+            yield pd.DataFrame(rows, columns=cols)
 
     return run
 

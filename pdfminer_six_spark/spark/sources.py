@@ -15,16 +15,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from pdfminer_six_spark.spark.pipeline import _drive, _map_batches, _pdf_text
+from pdfminer_six_spark.spark.pipeline import _map_batches, _pdf_text
 
 DOC_EXTRACTED_SCHEMA = StructType(
     [
         StructField("path", StringType()),
+        StructField("length", LongType()),
         StructField("text", StringType()),
         StructField("n_pages", IntegerType()),
         StructField("status", StringType()),
@@ -34,12 +36,14 @@ DOC_EXTRACTED_SCHEMA = StructType(
 
 
 def _file_items(body):
-    """``items`` for ``_map_batches`` over a ``(path, content)`` batch:
-    every file's raw bytes through ``body``, keyed by its path."""
+    """``items`` for ``_map_batches`` over a batch of binaryFile rows:
+    every file's raw bytes through ``body``, keyed by the batch's other
+    columns (``path``, and ``length`` where selected) in order."""
 
     def items(b: pd.DataFrame):
-        for path, content in zip(b["path"], b["content"]):
-            yield (path,), bytes(content), body, False
+        keys = [b[c] for c in b.columns if c != "content"]
+        for *key, content in zip(*keys, b["content"]):
+            yield tuple(key), bytes(content), body, False
 
     return items
 
@@ -52,7 +56,11 @@ def _doc_row(key, text, status, error, wall_ms):
 def read_pdf_corpus(
     spark: SparkSession, glob_path: str, limit_bytes: Optional[int] = None
 ) -> DataFrame:
-    """binaryFile scan over a PDF corpus: (path, length, content)."""
+    """binaryFile scan over a PDF corpus: (path, length, content).
+
+    ``path`` is the file's URI (``file:/...`` on a local disk).  A
+    zero-length file is listed but Spark plans no split for it, so it
+    yields no row."""
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.pdf")
@@ -68,8 +76,9 @@ def read_pdf_corpus(
 def extract_pdf_corpus(
     corpus: DataFrame, password: str = ""
 ) -> DataFrame:
-    """(path, content) -> per-document extracted text, Arrow-batched."""
-    return corpus.select("path", "content").mapInPandas(
+    """(path, length, content) -> per-document ``(path, length, text,
+    n_pages, status, error)``, Arrow-batched."""
+    return corpus.select("path", "length", "content").mapInPandas(
         _map_batches(
             _file_items(_pdf_text), _doc_row, DOC_EXTRACTED_SCHEMA, password
         ),
@@ -162,192 +171,3 @@ def extract_images_corpus(corpus: DataFrame, password: str = "") -> DataFrame:
         ),
         schema=IMAGE_SCHEMA,
     )
-
-
-# ---------------------------------------------------------------------------
-# Custom Python data source (Spark 4 DataSource API): the PDF corpus as a
-# first-class format — `spark.read.format("pdfcorpus").load(dir)` — with
-# source-level partition PLANNING (size-balanced LPT bins, not one task per
-# file) and REAL filter pushdown: predicates on the file-metadata columns
-# (path, length) prune at LISTING time, before a single byte of content is
-# read — the DataSource-API analog of binaryFile's pathGlobFilter/length
-# pushdown, visible to Catalyst as a smaller scan.
-# ---------------------------------------------------------------------------
-
-PDF_CORPUS_SCHEMA = (
-    "path string, length bigint, text string, n_pages int, "
-    "status string, error string"
-)
-
-
-def _make_pdf_corpus_classes(with_pushdown: bool = True):
-    """Build the DataSource classes lazily so importing this module never
-    requires a pyspark new enough to have pyspark.sql.datasource.
-    ``with_pushdown=False`` strips the pushFilters override (Spark
-    refuses a pushdown-capable reader when the session flag is off)."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        InputPartition,
-        LessThan,
-        LessThanOrEqual,
-        StringContains,
-        StringEndsWith,
-        StringStartsWith,
-    )
-
-    class _PdfFilesPartition(InputPartition):
-        """One planned input split: a tuple of (path, size) pairs."""
-
-        def __init__(self, files):
-            self.files = tuple(files)
-
-        def __repr__(self):  # shown in the Spark UI task table
-            return f"PdfFiles({len(self.files)} files)"
-
-    class PdfCorpusReader(DataSourceReader):
-        def __init__(self, options):
-            self.root = options.get("path")
-            if not self.root:
-                raise ValueError("pdfcorpus: .load(<directory>) is required")
-            self.glob = options.get("glob", "*.pdf")
-            self.n_partitions = int(options.get("numpartitions", "8"))
-            self.password = options.get("password", "")
-            self.recursive = (
-                options.get("recursive", "false").lower() == "true"
-            )
-            self._pushed = []
-
-        # -- pushdown: keep (path, length) predicates, return the rest ----
-        _META_LENGTH = (
-            EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
-            LessThanOrEqual,
-        )
-        _META_PATH = (
-            EqualTo, StringContains, StringStartsWith, StringEndsWith,
-        )
-
-        def pushFilters(self, filters):
-            for f in filters:
-                col = f.attribute[0] if len(f.attribute) == 1 else None
-                if col == "length" and isinstance(f, self._META_LENGTH):
-                    self._pushed.append(f)
-                elif col == "path" and isinstance(f, self._META_PATH):
-                    self._pushed.append(f)
-                else:
-                    yield f  # unsupported -> Spark re-applies it post-scan
-
-        def _keep(self, path: str, size: int) -> bool:
-            import operator as op
-
-            from pyspark.sql.datasource import (
-                EqualTo,
-                GreaterThan,
-                GreaterThanOrEqual,
-                LessThan,
-                LessThanOrEqual,
-                StringContains,
-                StringEndsWith,
-                StringStartsWith,
-            )
-
-            ops = {
-                EqualTo: op.eq, GreaterThan: op.gt,
-                GreaterThanOrEqual: op.ge, LessThan: op.lt,
-                LessThanOrEqual: op.le,
-            }
-            for f in self._pushed:
-                col = f.attribute[0]
-                val = path if col == "path" else size
-                if isinstance(f, StringContains):
-                    ok = f.value in val
-                elif isinstance(f, StringStartsWith):
-                    ok = val.startswith(f.value)
-                elif isinstance(f, StringEndsWith):
-                    ok = val.endswith(f.value)
-                else:
-                    ok = ops[type(f)](val, f.value)
-                if not ok:
-                    return False
-            return True
-
-        def _list(self):
-            import glob as globmod
-            import os
-
-            pat = (
-                os.path.join(self.root, "**", self.glob)
-                if self.recursive
-                else os.path.join(self.root, self.glob)
-            )
-            files = []
-            for p in sorted(globmod.glob(pat, recursive=self.recursive)):
-                if not os.path.isfile(p):
-                    continue
-                size = os.path.getsize(p)
-                if self._keep(p, size):
-                    files.append((p, size))
-            return files
-
-        def partitions(self):
-            # size-balanced LPT bins: biggest file first into the lightest
-            # bin — a 500 MB scan next to 2 KB fillers still levels out.
-            files = self._list()
-            n = max(1, min(self.n_partitions, len(files) or 1))
-            bins = [[] for _ in range(n)]
-            loads = [0] * n
-            for p, size in sorted(files, key=lambda t: (-t[1], t[0])):
-                i = loads.index(min(loads))
-                bins[i].append((p, size))
-                loads[i] += size
-            return [_PdfFilesPartition(b) for b in bins]
-
-        def read(self, partition):
-            def items():
-                for path, size in partition.files:
-                    with open(path, "rb") as fh:
-                        content = fh.read()
-                    yield (path, size), content, _pdf_text, False
-
-            yield from _drive(items(), self.password, _doc_row)
-
-    class PdfCorpusDataSource(DataSource):
-        """``spark.read.format("pdfcorpus").load(dir)`` — extraction fused
-        into the scan.  Options: glob (default ``*.pdf``), recursive,
-        numPartitions (planned LPT size bins), password."""
-
-        @classmethod
-        def name(cls):
-            return "pdfcorpus"
-
-        def schema(self):
-            return PDF_CORPUS_SCHEMA
-
-        def reader(self, schema):
-            return PdfCorpusReader(self.options)
-
-    if not with_pushdown:
-        del PdfCorpusReader.pushFilters
-    return PdfCorpusDataSource, PdfCorpusReader
-
-
-def register_pdf_corpus_source(spark: SparkSession):
-    """Register the ``pdfcorpus`` format on this session (idempotent).
-
-    Python-data-source filter pushdown is gated behind
-    ``spark.sql.python.filterPushdown.enabled`` (runtime-settable); Spark
-    REFUSES a reader that implements pushFilters while the flag is off,
-    so flip it here.  If a cluster pins it false, a reader without
-    pushdown is registered instead — same rows, predicates just apply
-    post-scan."""
-    pushdown = True
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pushdown = False
-    cls, _ = _make_pdf_corpus_classes(with_pushdown=pushdown)
-    spark.dataSource.register(cls)
-    return cls

@@ -461,6 +461,8 @@ def test_build_job_end_to_end_and_failure_injection_resume(
     3. the score stage releases the LM model it caches: every table
        ccnet_buckets hands back through ``model_handle`` is uncached once
        the run returns
+    4. a run leaves no persisted RDD behind (the --shuffle-seed pack
+       stage releases train_order's range partitions after its write)
     """
     import os
 
@@ -485,6 +487,10 @@ def test_build_job_end_to_end_and_failure_injection_resume(
     inp = tmp_path / "build_in.parquet"
     pdf.to_parquet(inp)
 
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    persisted0 = n_persisted()
     wd1, out1 = tmp_path / "wd1", tmp_path / "out1"
     stats1 = job.run(spark, job.build_args([
         "--input", str(inp), "--workdir", str(wd1), "--output", str(out1),
@@ -493,6 +499,7 @@ def test_build_job_end_to_end_and_failure_injection_resume(
     ]))
     assert len(handles) == 1 and handles[0]
     assert all(m.storageLevel == StorageLevel.NONE for m in handles[0])
+    assert n_persisted() == persisted0
     assert all(stats1[s]["action"] == "computed" for s in job.STAGES)
     final = spark.read.parquet(str(out1)).toPandas()
     assert len(final) == stats1["final"]["rows"] > 0
@@ -525,6 +532,7 @@ def test_build_job_end_to_end_and_failure_injection_resume(
     _check_lineage(spark, wd2, crashed, crashed)
 
     stats2 = job.run(spark, job.build_args(argv + ["--resume"]))
+    assert n_persisted() == persisted0
     assert [stats2[s]["action"] for s in job.STAGES] == (
         ["skipped"] * 3 + ["computed"] * 3
     )

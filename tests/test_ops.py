@@ -388,7 +388,7 @@ def test_duplicate_clusters_nonconvergence_fallback(spark):
 
 
 def test_simhash_identical_docs(spark):
-    from pdfminer_six_spark.ops.dedup import simhash_near_duplicates
+    from pdfminer_six_spark.ops.dedup import simhash_signatures, simhash_verify
 
     df = spark.createDataFrame(
         pd.DataFrame(
@@ -402,7 +402,7 @@ def test_simhash_identical_docs(spark):
             }
         )
     )
-    pairs = simhash_near_duplicates(df, max_hamming=3).collect()
+    pairs = simhash_verify(simhash_signatures(df), max_hamming=3).collect()
     assert {(r.doc_a, r.doc_b) for r in pairs} == {(1, 2)}
     assert pairs[0]["hamming"] == 0
 
@@ -1012,59 +1012,6 @@ def test_top_terms_sketch_exact_at_test_scale(spark):
     assert got == want
 
 
-def test_stateful_conversation_sessions(spark, tmp_path):
-    """Custom stateful streaming operator (applyInPandasWithState):
-    conversations close via event-time timeout once the watermark passes
-    the idle gap; per-key state is four longs."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from pdfminer_six_spark.spark.pipeline import TRANSCRIPTS_SCHEMA
-    from pdfminer_six_spark.spark.streaming import conversation_sessions
-
-    src = tmp_path / "stream_in"
-    src.mkdir()
-    t0 = dt.datetime(2026, 1, 1, 10, 0, 0)
-
-    def write(name, rows):
-        df = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        df["turn_idx"] = df["turn_idx"].astype("int32")
-        df["ts"] = df["ts"].astype("datetime64[us]")
-        df.to_parquet(str(src / name))
-
-    write("f1.parquet", [
-        ("convA", 0, "user", "hi", "", t0),
-        ("convA", 1, "assistant", "hello", "pdf", t0 + dt.timedelta(minutes=5)),
-    ])
-    # later files advance the watermark past convA's gap in later batches
-    write("f2.parquet", [("convB", 0, "user", "later", "",
-                          t0 + dt.timedelta(hours=4))])
-    write("f3.parquet", [("convB", 1, "user", "more", "",
-                          t0 + dt.timedelta(hours=5))])
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    sessions = conversation_sessions(stream, gap="30 minutes", watermark="1 hour")
-    q = (
-        sessions.writeStream.format("memory").queryName("sessions_test")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    rows = {r.conv_id: r for r in spark.sql("select * from sessions_test").collect()}
-    a = rows["convA"]
-    assert a.n_turns == 2 and a.n_pdf_turns == 1 and a.closed
-    assert a.session_start == t0
-    assert a.session_end == t0 + dt.timedelta(minutes=5)
-    # convB never idles past the gap before the stream ends -> stays open
-    assert "convB" not in rows
-
-
 def test_blocked_embedding_pairs_equal_exact(spark):
     from pdfminer_six_spark.ops.ann import (
         embedding_near_duplicates,
@@ -1286,201 +1233,6 @@ def test_streaming_session_window_with_watermark(spark, tmp_path):
     # 4h-later session is still open (only emitted on a later watermark
     # advance), so exactly one closed row is visible
     assert [(r.conv_id, r.n_turns) for r in closed] == [("c1", 2)]
-
-
-def test_streaming_idempotent_sink_replay_safe(spark, tmp_path):
-    """foreachBatch batch-id-keyed sink: incremental batches land once;
-    a simulated crash-replay of the last batch (same batch_id re-written)
-    leaves the sink unchanged — at-least-once execution, exactly-once
-    contents."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from pdfminer_six_spark.spark.pipeline import TRANSCRIPTS_SCHEMA
-    from pdfminer_six_spark.spark.streaming import streaming_idempotent_sink
-
-    src = tmp_path / "ib_in"
-    out = tmp_path / "ib_out"
-    ckpt = tmp_path / "ib_ckpt"
-    src.mkdir()
-    t0 = dt.datetime(2026, 1, 1, 9, 0, 0)
-
-    def write(name, rows):
-        df = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        df["turn_idx"] = df["turn_idx"].astype("int32")
-        df["ts"] = df["ts"].astype("datetime64[us]")
-        df.to_parquet(str(src / name))
-
-    write("f1.parquet", [("c1", 0, "user", "hello", "", t0)])
-
-    def run():
-        stream = (
-            spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = streaming_idempotent_sink(stream, str(out), str(ckpt))
-        q.awaitTermination(180)
-
-    run()
-    assert spark.read.parquet(str(out)).count() == 1
-    # second batch arrives; restart picks up only the new file
-    write("f2.parquet", [
-        ("c1", 1, "assistant", "reply", "", t0 + dt.timedelta(minutes=1)),
-        ("c2", 0, "user", "other", "", t0 + dt.timedelta(minutes=2)),
-    ])
-    run()
-    sink = spark.read.parquet(str(out))
-    assert sink.count() == 3
-    # simulate the crash-replay: re-execute the LAST batch's write with
-    # the same batch_id (what Structured Streaming does after a failure
-    # between sink write and checkpoint commit)
-    replay = spark.createDataFrame(
-        [("c1", 1, "assistant", "reply", "",
-          t0 + dt.timedelta(minutes=1)),
-         ("c2", 0, "user", "other", "",
-          t0 + dt.timedelta(minutes=2))],
-        schema=TRANSCRIPTS_SCHEMA,
-    )
-    replay.write.mode("overwrite").parquet(str(out / "batch_id=1"))
-    sink2 = spark.read.parquet(str(out))
-    assert sink2.count() == 3  # no duplicates from the replay
-    assert {r["conv_id"] + str(r["turn_idx"]) for r in sink2.collect()} == {
-        "c10", "c11", "c20"
-    }
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Stream-stream join with an event-time interval bound: annotations
-    within [turn ts, ts + 30 min] match; an annotation outside the
-    tolerance (too late relative to its turn) never joins."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from pdfminer_six_spark.spark.pipeline import TRANSCRIPTS_SCHEMA
-    from pdfminer_six_spark.spark.streaming import join_turn_annotations
-
-    t0 = dt.datetime(2026, 1, 1, 10, 0, 0)
-    turns_dir = tmp_path / "ssj_turns"
-    ann_dir = tmp_path / "ssj_ann"
-    turns_dir.mkdir()
-    ann_dir.mkdir()
-
-    tdf = pd.DataFrame(
-        [
-            ("c1", 0, "user", "q one", "", t0),
-            ("c1", 1, "assistant", "a one", "", t0 + dt.timedelta(minutes=1)),
-            ("c2", 0, "user", "q two", "", t0 + dt.timedelta(minutes=2)),
-        ],
-        columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
-    )
-    tdf["turn_idx"] = tdf["turn_idx"].astype("int32")
-    tdf["ts"] = tdf["ts"].astype("datetime64[us]")
-    tdf.to_parquet(str(turns_dir / "t.parquet"))
-
-    adf = pd.DataFrame(
-        [
-            # in-tolerance annotations for c1/0 and c2/0
-            ("c1", 0, "good", t0 + dt.timedelta(minutes=5)),
-            ("c2", 0, "flagged", t0 + dt.timedelta(minutes=10)),
-            # out-of-tolerance: 2 hours after its turn -> must not join
-            ("c1", 1, "too_late", t0 + dt.timedelta(hours=2)),
-        ],
-        columns=["conv_id", "turn_idx", "label", "ats"],
-    )
-    adf["turn_idx"] = adf["turn_idx"].astype("int32")
-    adf["ats"] = adf["ats"].astype("datetime64[us]")
-    adf.to_parquet(str(ann_dir / "a.parquet"))
-
-    turns = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .parquet(str(turns_dir))
-    )
-    ann = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx int, label string, ats timestamp"
-        )
-        .parquet(str(ann_dir))
-    )
-    q = (
-        join_turn_annotations(turns, ann, tolerance="30 minutes")
-        .writeStream.format("memory").queryName("ssj_test")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql(
-        "select conv_id, turn_idx, label from ssj_test"
-    ).collect()
-    got = sorted((r.conv_id, r.turn_idx, r.label) for r in rows)
-    assert got == [("c1", 0, "good"), ("c2", 0, "flagged")]
-
-
-def test_windowed_turn_metrics_with_late_data(spark, tmp_path):
-    """Watermarked tumbling-window metrics: in-order turns aggregate per
-    (window, conv); a turn arriving later but within the watermark still
-    lands in its event-time window."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from pdfminer_six_spark.spark.pipeline import TRANSCRIPTS_SCHEMA
-    from pdfminer_six_spark.spark.streaming import windowed_turn_metrics
-
-    src = tmp_path / "wm_in"
-    src.mkdir()
-    t0 = dt.datetime(2026, 1, 1, 10, 0, 0)
-
-    def write(name, rows):
-        df = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        df["turn_idx"] = df["turn_idx"].astype("int32")
-        df["ts"] = df["ts"].astype("datetime64[us]")
-        df.to_parquet(str(src / name))
-
-    write("f1.parquet", [
-        ("c1", 0, "user", "a", "", t0),
-        ("c1", 1, "assistant", "b", "pdf", t0 + dt.timedelta(minutes=10)),
-        ("c1", 2, "user", "c", "", t0 + dt.timedelta(hours=3)),
-    ])
-    # batch 2: a LATE turn for the first window — watermark after batch 1
-    # is t0+1h, and the window's end (t0+1h) is not yet expired, so this
-    # within-lateness turn must still be counted (the point of watermarks)
-    write("f2.parquet", [
-        ("c1", 3, "user", "late-ok", "", t0 + dt.timedelta(minutes=20)),
-        ("c1", 4, "user", "d", "pdf", t0 + dt.timedelta(hours=3, minutes=5)),
-        ("c1", 5, "user", "end", "", t0 + dt.timedelta(hours=9)),
-    ])
-    # batch 3: a TOO-LATE turn — watermark is now t0+7h, the first
-    # window's state is expired, so this one is dropped
-    write("f3.parquet", [
-        ("c1", 6, "user", "too-late", "", t0 + dt.timedelta(minutes=5)),
-        ("c1", 7, "user", "z", "", t0 + dt.timedelta(hours=12)),
-    ])
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        windowed_turn_metrics(stream, window="1 hour", watermark="2 hours")
-        .writeStream.format("memory").queryName("wm_test")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    rows = {
-        (r.window_start, r.conv_id): r
-        for r in spark.sql("select * from wm_test").collect()
-    }
-    first = rows[(t0, "c1")]
-    # 3 = two in-order + the within-lateness turn; too-late turn dropped
-    assert first.n_turns == 3 and first.n_pdf_turns == 1
-    third = rows[(t0 + dt.timedelta(hours=3), "c1")]
-    assert third.n_turns == 2 and third.n_pdf_turns == 1
 
 
 def test_pack_sequences_contiguous_fill(spark):
@@ -2146,7 +1898,6 @@ def test_streaming_quality_filter_composes(spark, tmp_path):
 
     from pdfminer_six_spark.ops.clean import blocklist_filter
     from pdfminer_six_spark.ops.textstats import gopher_quality_rules
-    from pdfminer_six_spark.spark.streaming import streaming_idempotent_sink
 
     src_dir = tmp_path / "docs_in"
     src_dir.mkdir()
@@ -2171,11 +1922,22 @@ def test_streaming_quality_filter_composes(spark, tmp_path):
         ).select("doc_id", "n_tokens", "keep", "n_blocked", "blocked")
 
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    streaming_idempotent_sink(enrich(stream_df), out, ckpt).awaitTermination(120)
+
+    def sink(df):
+        # batch-id-keyed overwrite: a replayed batch rewrites its own
+        # partition instead of appending a duplicate
+        def write_batch(batch, batch_id):
+            batch.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
+
+        df.writeStream.foreachBatch(write_batch).option(
+            "checkpointLocation", ckpt
+        ).trigger(availableNow=True).start().awaitTermination(120)
+
+    sink(enrich(stream_df))
     first = spark.read.parquet(out).drop("batch_id")
     assert first.count() == 8
     # restart over the same checkpoint: no new data -> nothing added
-    streaming_idempotent_sink(enrich(stream_df), out, ckpt).awaitTermination(120)
+    sink(enrich(stream_df))
     again = spark.read.parquet(out).drop("batch_id")
     assert again.count() == 8
     batch = enrich(batch_df)
@@ -2920,69 +2682,6 @@ def test_normalize_formatting_rules(spark):
     assert rows[2]["formatted"] == "" and rows[2]["n_changed"] == 0
 
 
-def test_streaming_incremental_dedup_equals_batch(spark, tmp_path):
-    """Streaming crawl-delta dedup == batch incremental_exact on the
-    same input: the stream-static anti-join drops everything already in
-    the historical fingerprint index, dropDuplicatesWithinWatermark
-    drops intra-stream re-deliveries, and the surviving (doc, fp) set
-    equals the batch job's survivors exactly."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from pdfminer_six_spark.ops.dedup import incremental_exact
-    from pdfminer_six_spark.spark.streaming import (
-        streaming_incremental_dedup,
-    )
-
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    hist = spark.createDataFrame(pd.DataFrame({
-        "doc_id": [1, 2],
-        "text": ["seen before", "also seen"],
-    }))
-    seen = incremental_exact(hist, spark.createDataFrame([], "fp string"))
-    seen_fps = seen.select("fp")
-
-    rows = [
-        (10, "seen  BEFORE", t0),                      # hits history
-        (11, "brand new", t0 + dt.timedelta(minutes=1)),
-        (12, "brand   NEW", t0 + dt.timedelta(minutes=2)),  # in-stream dup
-        (13, "another fresh", t0 + dt.timedelta(minutes=3)),
-    ]
-    src = tmp_path / "sid_in"
-    src.mkdir()
-    for i, r in enumerate(rows):
-        pdf_ = pd.DataFrame([r], columns=["doc_id", "text", "ts"])
-        pdf_["ts"] = pdf_["ts"].astype("datetime64[us]")
-        pdf_.to_parquet(str(src / f"f{i}.parquet"))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_incremental_dedup(stream, seen_fps, watermark="1 hour")
-        .writeStream.format("memory").queryName("sid_test")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["doc_id"], r["fp"])
-        for r in spark.sql("select doc_id, fp from sid_test").collect()
-    }
-
-    batch_docs = spark.createDataFrame(
-        pd.DataFrame([(d, t) for d, t, _ in rows], columns=["doc_id", "text"])
-    )
-    want = {
-        (r["doc_id"], r["fp"])
-        for r in incremental_exact(batch_docs, seen_fps).collect()
-    }
-    assert got == want
-    assert {d for d, _ in got} == {11, 13}
-
-
 def test_kmeans_fixed_point_equals_numpy_replica(spark):
     """The integer-exact Lloyd's loop (ops.ann.kmeans_fixed_point) against
     a from-scratch numpy replica of the same fixed-point contract — a
@@ -3107,102 +2806,6 @@ def test_trigram_lm_model_roundtrip_and_backoff_floor(spark):
     assert abs(row["avg_nll"] - round(floor, 6)) < 2e-6
 
 
-def test_streaming_index_maintenance_grows_index_exactly_once(
-    spark, tmp_path
-):
-    """streaming_index_maintenance: run 1 seeds the fingerprint index
-    from the stream's survivors; run 2 (same checkpoint, new files)
-    dedups against the grown index and appends only genuinely-new fps;
-    re-running with nothing new appends zero rows (exactly-once); the
-    final index equals the batch incremental_exact chain applied in file
-    order."""
-    import datetime as dt
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from pdfminer_six_spark.ops.dedup import incremental_exact
-    from pdfminer_six_spark.spark.pipeline import TRANSCRIPTS_SCHEMA
-    from pdfminer_six_spark.spark.streaming import (
-        streaming_index_maintenance,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    idx = str(tmp_path / "fpindex")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = dt.datetime(2026, 1, 1, 10, 0, 0)
-
-    def write(name, rows):
-        df = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        df["turn_idx"] = df["turn_idx"].astype("int32")
-        df["ts"] = df["ts"].astype("datetime64[us]")
-        df.to_parquet(str(src / name))
-
-    def stream_docs():
-        return (
-            spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-            .select(
-                F.xxhash64("conv_id", "turn_idx").alias("doc_id"),
-                "text",
-                "ts",
-            )
-        )
-
-    def run_once():
-        q = streaming_index_maintenance(
-            spark, stream_docs(), idx, ckpt, watermark="1 hour"
-        )
-        q.awaitTermination(180)
-
-    def index_fps():
-        return {
-            r["fp"]
-            for r in spark.read.schema("doc_id long, fp string")
-            .parquet(idx)
-            .collect()
-        }
-
-    # run 1: A, B, and an in-stream duplicate of A
-    write("f1.parquet", [
-        ("c1", 0, "user", "alpha text", "", t0),
-        ("c1", 1, "user", "beta text", "", t0),
-        ("c2", 0, "user", "alpha text", "", t0),
-    ])
-    run_once()
-    fps1 = index_fps()
-    assert len(fps1) == 2  # alpha + beta, in-stream dup collapsed
-
-    # run 2: a re-crawl of alpha plus one new doc
-    write("f2.parquet", [
-        ("c3", 0, "user", "alpha text", "", t0 + dt.timedelta(hours=3)),
-        ("c3", 1, "user", "gamma text", "", t0 + dt.timedelta(hours=3)),
-    ])
-    run_once()
-    fps2 = index_fps()
-    assert len(fps2) == 3 and fps1 < fps2
-
-    # run 3: nothing new -> exactly-once, zero growth
-    run_once()
-    assert index_fps() == fps2
-
-    # batch equivalence: replay the same deltas through incremental_exact
-    all_rows = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(str(src))
-    docs = all_rows.select(
-        F.xxhash64("conv_id", "turn_idx").alias("doc_id"), "text"
-    )
-    seen = spark.createDataFrame([], "fp string")
-    batch_fps = {
-        r["fp"]
-        for r in incremental_exact(docs, seen).select("fp").collect()
-    }
-    assert batch_fps == fps2
-
-
 def test_pq_encode_topk_invariants(spark):
     """Product quantization: codes bounded by k; every query (itself in
     the corpus) retrieves itself among the rank-ties of its own code
@@ -3272,31 +2875,11 @@ def test_distill_linear_filter_learns_and_is_reproducible(spark):
         assert r["correct"] == (r["pred_pos"] == (r["label"] == 1))
 
 
-def test_hll_registers_merge_and_estimate_accuracy(spark, docs):
-    """(a) Mergeability law: per-source register sketches folded by
-    max(r) equal the whole-corpus registers — the property that lets a
-    sharded/streaming build compose.  (b) The estimate lands within
-    theoretical error (~3.3% rsd at p=10; generous 4-sigma bound) of
-    the exact distinct count the same relation carries."""
-    from pyspark.sql import functions as F
-
-    from pdfminer_six_spark.ops.textstats import (
-        hll_distinct_shingles,
-        hll_registers,
-    )
-
-    whole = {
-        (r["reg"], r["r"])
-        for r in hll_registers(docs, n=2).collect()
-    }
-    merged = {
-        (r["reg"], r["r"])
-        for r in hll_registers(docs, n=2, extra_group_cols=["source"])
-        .groupBy("reg")
-        .agg(F.max("r").alias("r"))
-        .collect()
-    }
-    assert merged == whole and whole
+def test_hll_distinct_shingles_estimate_accuracy(spark, docs):
+    """The estimate lands within theoretical error (~3.3% rsd at p=10;
+    generous 4-sigma bound) of the exact distinct count the same
+    relation carries."""
+    from pdfminer_six_spark.ops.textstats import hll_distinct_shingles
 
     # sort: since the r06 single-scan rewrite the per-n rows come out of
     # one groupBy (unordered, like any aggregate; the driver canonicalizes)

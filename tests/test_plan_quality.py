@@ -118,15 +118,16 @@ def test_shingles_and_signatures_shuffle_free_until_agg(spark):
     assert "partial_min" in sig_plan
 
 
-def test_extract_images_is_scan_plus_udf(spark):
+def test_extract_images_is_scan_plus_udf(spark, tmp_path):
     """Image extraction is row-local: binaryFile scan straight into
     mapInPandas, no shuffle before the (test-only) final sort."""
+    from pdfminer_six_spark.datagen.transcripts import write_pdf_corpus
     from pdfminer_six_spark.spark.sources import (
         extract_images_corpus,
         read_pdf_corpus,
     )
 
-    corpus = read_pdf_corpus(spark, "/root/reference/samples/contrib")
+    corpus = read_pdf_corpus(spark, write_pdf_corpus(str(tmp_path)))
     plan = _plan(extract_images_corpus(corpus))
     assert "MapInPandas" in plan
     assert "Exchange" not in plan

@@ -429,133 +429,89 @@ def test_registry_order_contract():
 def pdf_dir(tmp_path_factory):
     """Ten synthesized PDFs: text, rich and CID ones, one truncated, and
     one no password opens."""
-    from pdfminer_six_spark.datagen.transcripts import (
-        synth_cid_pdf,
-        synth_locked_pdf,
-        synth_pdf,
-        synth_rich_pdf,
-    )
+    from pdfminer_six_spark.datagen.transcripts import write_pdf_corpus
 
-    text = synth_pdf([["corpus text page"], ["second page"]])
-    docs = {
-        "text.pdf": text,
-        "truncated.pdf": text[: len(text) // 2],
-        "locked.pdf": synth_locked_pdf(1),
-    }
-    docs.update({f"rich{i}.pdf": synth_rich_pdf(i) for i in range(1, 5)})
-    docs.update({f"cid{i}.pdf": synth_cid_pdf(i) for i in range(1, 4)})
-    root = tmp_path_factory.mktemp("pdfcorpus")
-    for name, data in docs.items():
-        (root / name).write_bytes(data)
-    return str(root)
+    return write_pdf_corpus(str(tmp_path_factory.mktemp("pdfcorpus")))
 
 
-def test_pdfcorpus_datasource_equals_binaryfile_path(spark, pdf_dir):
-    """The Spark-4 Python DataSource (`spark.read.format('pdfcorpus')`)
-    must produce exactly the rows the binaryFile+mapInPandas path does on
-    the same directory — same texts, same page counts, same statuses."""
-    from pyspark.sql import functions as F
+def _basename(path: str) -> str:
+    return path.rsplit("/", 1)[-1]
 
+
+def test_pdf_corpus_reader_contract(spark, pdf_dir, tmp_path):
+    """The one PDF-file reader (binaryFile scan -> extract_pdf_corpus):
+    one row per file carrying its size, the status contract per file,
+    the in-process kernel's text for every readable file, listing-level
+    length pruning, and no row for a zero-length file."""
+    import os
+    import shutil
+
+    from pdfminer_six_spark.spark.pipeline import _kernel, _pdf_text
     from pdfminer_six_spark.spark.sources import (
         extract_pdf_corpus,
         read_pdf_corpus,
-        register_pdf_corpus_source,
     )
 
-    register_pdf_corpus_source(spark)
-    root = pdf_dir
-    via_ds = {
-        r["path"]: (r["text"], r["n_pages"], r["status"])
-        for r in spark.read.format("pdfcorpus")
-        .option("numPartitions", "3")
-        .load(root)
+    rows = {
+        _basename(r["path"]): r
+        for r in extract_pdf_corpus(read_pdf_corpus(spark, pdf_dir)).collect()
+    }
+    assert len(rows) == 10
+    failing = {"truncated.pdf": "error", "locked.pdf": "bad_password"}
+    for name, r in rows.items():
+        path = os.path.join(pdf_dir, name)
+        assert r["length"] == os.path.getsize(path)
+        assert r["status"] == failing.get(name, "ok"), (name, r["error"])
+        if r["status"] == "ok":
+            with open(path, "rb") as f:
+                text, status, _, _ = _kernel(f.read(), "", _pdf_text, False)
+            assert status == "ok" and r["text"] == text, name
+
+    small = {
+        _basename(r["path"])
+        for r in read_pdf_corpus(spark, pdf_dir, limit_bytes=2000)
+        .select("path")
         .collect()
     }
-    via_bf = {
-        r["path"].replace("file:", ""): (r["text"], r["n_pages"], r["status"])
-        for r in extract_pdf_corpus(read_pdf_corpus(spark, root)).collect()
+    assert small == {n for n, r in rows.items() if r["length"] <= 2000}
+    assert 0 < len(small) < len(rows)
+
+    # binaryFile lists a zero-length file, but Spark plans no split for
+    # it, so the reader yields no row for it
+    with_empty = tmp_path / "with_empty"
+    shutil.copytree(pdf_dir, with_empty)
+    (with_empty / "empty.pdf").write_bytes(b"")
+    got = {
+        _basename(r["path"])
+        for r in extract_pdf_corpus(read_pdf_corpus(spark, str(with_empty)))
+        .select("path")
+        .collect()
     }
-    assert via_ds == via_bf
-    assert len(via_ds) >= 10
-    # metadata pushdown: a length predicate prunes files BEFORE reading
-    small = (
-        spark.read.format("pdfcorpus")
-        .load(root)
-        .filter(F.col("length") <= 2000)
-    )
-    assert {r["path"] for r in small.collect()} == {
-        p for p, (_, _, _s) in via_bf.items()
-        if __import__("os").path.getsize(p) <= 2000
-    }
+    assert got == set(rows)
 
 
 def test_extract_images_corpus_status_rows(spark, pdf_dir):
     """Image extraction keeps the status contract: a document that fails
-    yields exactly one row (its path, the status the pdfcorpus source
-    reports for it, its error, nulls elsewhere); a document that parses
-    but holds no image yields none."""
+    yields exactly one row (its path, the status text extraction reports
+    for it, its error, nulls elsewhere); a document that parses but
+    holds no image yields none."""
     from pdfminer_six_spark.spark.sources import (
         extract_images_corpus,
+        extract_pdf_corpus,
         read_pdf_corpus,
-        register_pdf_corpus_source,
     )
 
-    register_pdf_corpus_source(spark)
-    via_ds = {
+    via_text = {
         r["path"]: r["status"]
-        for r in spark.read.format("pdfcorpus").load(pdf_dir).collect()
+        for r in extract_pdf_corpus(read_pdf_corpus(spark, pdf_dir)).collect()
     }
     rows = extract_images_corpus(read_pdf_corpus(spark, pdf_dir)).collect()
     by_name = {}
     for r in rows:
-        by_name.setdefault(r["path"].rsplit("/", 1)[-1], []).append(r)
+        by_name.setdefault(_basename(r["path"]), []).append(r)
     assert sorted(by_name) == ["locked.pdf", "truncated.pdf"]
     for (r,) in by_name.values():
-        assert r["status"] == via_ds[r["path"].replace("file:", "")]
+        assert r["status"] == via_text[r["path"]]
         assert r["status"] not in ("ok", "empty") and r["error"]
         assert [r[c] for c in ("page", "name", "width", "height", "bits",
                                "fmt", "n_bytes", "sha256")] == [None] * 8
-
-
-def test_pdfcorpus_reader_pushdown_prunes_listing_and_lpt_balances(pdf_dir):
-    """Driver-side reader unit contract: pushed (path, length) filters
-    shrink the PLANNED partitions (pruning happens at listing time), the
-    unsupported remainder is handed back to Spark, and LPT bins are
-    size-balanced."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        LessThanOrEqual,
-        StringEndsWith,
-    )
-
-    from pdfminer_six_spark.spark.sources import _make_pdf_corpus_classes
-
-    _, reader_cls = _make_pdf_corpus_classes()
-    opts = {"path": pdf_dir, "numpartitions": "4"}
-
-    r = reader_cls(dict(opts))
-    all_files = {f for p in r.partitions() for f in p.files}
-    assert len(all_files) == 10
-
-    r2 = reader_cls(dict(opts))
-    leftover = list(
-        r2.pushFilters(
-            [
-                LessThanOrEqual(("length",), 2000),
-                StringEndsWith(("path",), ".pdf"),
-                EqualTo(("status",), "ok"),  # not metadata -> not pushed
-            ]
-        )
-    )
-    assert [type(f) for f in leftover] == [EqualTo]
-    pruned = {f for p in r2.partitions() for f in p.files}
-    assert pruned == {(p, s) for p, s in all_files if s <= 2000}
-    assert 0 < len(pruned) < len(all_files)
-
-    # LPT balance: no bin more than ~2x the mean byte load on this corpus
-    r3 = reader_cls(dict(opts))
-    r3.pushFilters([GreaterThan(("length",), 0)])
-    loads = [sum(s for _, s in p.files) for p in r3.partitions()]
-    assert len(loads) == 4 and min(loads) > 0
-    assert max(loads) <= 2 * (sum(loads) / len(loads))
