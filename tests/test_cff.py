@@ -20,6 +20,8 @@ import sys
 
 import pytest
 
+from tests.conftest import requires_reference
+
 SAMPLES = "/root/reference/samples"
 CFF_PDFS = [
     f"{SAMPLES}/contrib/issue-1061-colour-space-stack.pdf",
@@ -223,6 +225,7 @@ def _type1c_streams(path):
     return out
 
 
+@requires_reference("pdfminer", *CFF_PDFS)
 def test_corpus_differential_against_reference():
     from pdfminer_six_spark.core.cff import CFFFont
 

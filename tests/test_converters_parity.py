@@ -17,6 +17,7 @@ import sys
 
 import pytest
 
+from tests.conftest import requires_reference, sample_or_synth
 from tests.test_property_fuzz import _has_box_dist_ties
 
 SAMPLES = "/root/reference/samples/"
@@ -36,6 +37,7 @@ CORPUS = [
     "nonfree/naacl06-shinyama.pdf",
     "nonfree/dmca.pdf",
 ]
+NEEDS_REF_TOOL = ("pdfminer", "tools/pdf2txt.py")
 
 
 def _convert(tool, fmt, path):
@@ -47,6 +49,7 @@ def _convert(tool, fmt, path):
     return subprocess.run(cmd, capture_output=True, env=REF_ENV)
 
 
+@requires_reference(*NEEDS_REF_TOOL, *("samples/" + s for s in CORPUS))
 @pytest.mark.parametrize("fmt", ["xml", "html", "hocr"])
 def test_sink_byte_parity(fmt):
     mismatches = []
@@ -80,6 +83,9 @@ OPTION_CASES = [
 ]
 
 
+@requires_reference(
+    *NEEDS_REF_TOOL, *sorted({"samples/" + s for _, s in OPTION_CASES})
+)
 def test_cli_option_surface_parity():
     """Rotation, -n no-layout, strip-control, scale, layoutmodes, tag sink,
     page selection forms — each byte-equal to the reference CLI."""
@@ -98,11 +104,14 @@ def test_cli_option_surface_parity():
         assert ours.stdout == ref.stdout, (opts, sample)
 
 
-def test_sequential_page_ids():
-    out = _convert("ours", "xml", SAMPLES + "font-size-test.pdf").stdout
+def test_sequential_page_ids(tmp_path):
+    # any PDF of two or more pages checks the numbering
+    pdf = sample_or_synth(tmp_path, "font-size-test.pdf", [["one"], ["two"]])
+    out = _convert("ours", "xml", pdf).stdout
     assert b'<page id="1"' in out and b'<page id="2"' in out
 
 
+@requires_reference("pdfminer", "samples/jo.pdf", "samples/simple1.pdf")
 def test_high_level_api_shapes():
     """Reference import surface: extract_text accepts path/Path/file-like;
     extract_text_to_fp writes identical XML to the reference's."""

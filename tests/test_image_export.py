@@ -21,6 +21,7 @@ from pdfminer_six_spark.core.ccitt import ccitt_fax_decode, g4_decode, g4_encode
 from pdfminer_six_spark.core.image import ImageWriter, bmp_bytes
 from pdfminer_six_spark.core.jbig2 import encode_segment, parse_segments
 from pdfminer_six_spark.core.layout import LTContainer, LTImage
+from tests.conftest import requires_reference
 
 SAMPLES = "/root/reference/samples"
 
@@ -45,6 +46,7 @@ def _random_fax_image(rng, w, h):
     return img
 
 
+@requires_reference("pdfminer/ccitt.py")
 def test_g4_differential_fuzz_vs_reference():
     CCITTFaxDecoder = _reference_ccitt()
     rng = np.random.default_rng(7)
@@ -79,6 +81,7 @@ def test_ccitt_fax_decode_params():
         ccitt_fax_decode(enc, {"K": 0, "Columns": 16})
 
 
+@requires_reference("samples/contrib/XIPLAYER0.jb2")
 def test_jbig2_segment_roundtrip():
     data = open(os.path.join(SAMPLES, "contrib", "XIPLAYER0.jb2"), "rb").read()
     segments = parse_segments(data[13:])  # skip file header
@@ -126,6 +129,9 @@ def _export_reference(pdf_path, outdir, **kw):
     return sorted(os.listdir(outdir))
 
 
+@requires_reference(
+    "samples/contrib/pdf-with-jbig2.pdf", "samples/contrib/XIPLAYER0.jb2"
+)
 def test_jbig2_export_matches_reference_golden(tmp_path):
     names = _export_ours(
         os.path.join(SAMPLES, "contrib", "pdf-with-jbig2.pdf"), str(tmp_path)
@@ -136,6 +142,7 @@ def test_jbig2_export_matches_reference_golden(tmp_path):
     assert ours == golden
 
 
+@requires_reference("pdfminer", "samples/nonfree/dmca.pdf")
 def test_bmp_export_matches_reference(tmp_path):
     pdf = os.path.join(SAMPLES, "nonfree", "dmca.pdf")
     ours_dir = tmp_path / "ours"
@@ -153,6 +160,7 @@ def test_bmp_export_matches_reference(tmp_path):
     assert len(a) == declared
 
 
+@requires_reference("pdfminer", "samples/encryption/encrypted_doc_no_id.pdf")
 def test_ccitt_image_export_matches_reference(tmp_path):
     pdf = os.path.join(SAMPLES, "encryption", "encrypted_doc_no_id.pdf")
     ours_dir = tmp_path / "ours"

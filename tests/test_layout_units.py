@@ -17,7 +17,7 @@ from pdfminer_six_spark.core.layout import (
     LTTextLineHorizontal,
     Plane,
 )
-from tests.conftest import SAMPLES, reference_available
+from tests.conftest import SAMPLES, reference_available, requires_reference
 
 
 def _paint(path, ctm=(1, 0, 0, 1, 0, 0)):
@@ -187,6 +187,10 @@ def test_find_neighbors_exact_reference_cases():
     )
 
 
+@requires_reference(
+    "samples/contrib/issue-449-horizontal.pdf",
+    "samples/contrib/issue-449-vertical.pdf",
+)
 def test_issue_449_empty_characters_box_counts():
     """issue #449 (PR #689 there): explicit space chars between lines must
     not merge the boxes — 3 horizontal / 3 vertical boxes."""
@@ -239,6 +243,7 @@ def test_huge_int_operand_does_not_crash_turn():
     assert "hi" in extract_text(pdf)
 
 
+@requires_reference("pdfminer/_saslprep.py")
 def test_saslprep_differential():
     """RFC 4013 SASLprep for r6 unicode passwords: agree with the
     reference on 1500 random unicode strings (output or rejection);

@@ -5,6 +5,8 @@ import math
 import pandas as pd
 import pytest
 
+from tests.conftest import requires_reference
+
 pyspark = pytest.importorskip("pyspark")
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -901,6 +903,9 @@ def test_media_resize_and_frame_sampling(spark):
     assert per.frame.map(lambda f: len(bytes(f)) > 0).all()
 
 
+# the mix repeats payloads only with the reference samples mixed in
+# (datagen.transcripts.reference_sample_payloads)
+@requires_reference("samples")
 def test_training_pipeline_composes(spark):
     """The end-to-end pipeline query (extract -> dedup -> quality filter
     -> summary) returns one row per source kind, with dedup verifiably

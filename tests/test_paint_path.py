@@ -14,6 +14,7 @@ from pdfminer_six_spark.core.layout import (
     LTLine,
     LTRect,
 )
+from tests.conftest import requires_reference
 
 SAMPLES = "/root/reference/samples/"
 
@@ -100,6 +101,7 @@ def test_paint_path_quadrilaterals():
     assert _types(ml_lines) == [LTLine, LTLine, LTLine]
 
 
+@requires_reference("samples/contrib/pr-00530-ml-lines.pdf")
 def test_ml_lines_pdf():
     pages = extract_pages(
         open(SAMPLES + "contrib/pr-00530-ml-lines.pdf", "rb").read()
@@ -138,6 +140,7 @@ def test_paint_path_without_starting_m():
     assert len(device.cur_item._objs) == 0
 
 
+@requires_reference("samples/contrib/issue_1165_linewidth.pdf")
 def test_linewidth_pdf():
     pages = extract_pages(
         open(SAMPLES + "contrib/issue_1165_linewidth.pdf", "rb").read()
@@ -160,6 +163,7 @@ def _chars(el):
         yield el
 
 
+@requires_reference("samples/contrib/issue-00352-hash-twos-complement.pdf")
 def test_color_types_by_space():
     data = open(
         SAMPLES + "contrib/issue-00352-hash-twos-complement.pdf", "rb"
@@ -181,6 +185,7 @@ def test_color_types_by_space():
     assert seen
 
 
+@requires_reference("samples/test_pattern_colors.pdf")
 def test_pattern_colors_pdf():
     data = open(SAMPLES + "test_pattern_colors.pdf", "rb").read()
     found = 0

@@ -6,7 +6,7 @@ import base64
 import pandas as pd
 import pytest
 
-from tests.conftest import reference_available
+from tests.conftest import reference_available, requires_reference
 
 pyspark = pytest.importorskip("pyspark")
 
@@ -140,6 +140,9 @@ def test_skewed_conversation_salting(spark):
     assert {r["status"] for r in out.select("status").distinct().collect()} == {"ok"}
 
 
+@requires_reference(
+    "samples/contrib/pdf-with-jbig2.pdf", "samples/contrib/XIPLAYER0.jb2"
+)
 def test_extract_images_corpus(spark):
     """Distributed image extraction: binaryFile scan -> mapInPandas ->
     metadata + content-hash rows; the JBIG2 payload hash must equal the

@@ -11,6 +11,8 @@ import os
 import subprocess
 import sys
 
+from tests.conftest import requires_reference, sample_or_synth
+
 SAMPLES = "/root/reference/samples/"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REF_ENV = dict(os.environ, PYTHONPATH="/root/reference")
@@ -26,6 +28,8 @@ CORPUS = [
     "contrib/pagelabels.pdf",  # null-in-ObjStm stays a keyword token
     "contrib/issue-886-xref-stream-widths.pdf",
 ]
+AES_SAMPLES = ("encryption/aes-128.pdf", "encryption/aes-256.pdf")
+NEEDS_REF_TOOL = ("pdfminer", "tools/dumppdf.py")
 
 
 def _run(tool, args):
@@ -43,6 +47,7 @@ def _assert_match(args):
     assert ours.stdout == ref.stdout, args
 
 
+@requires_reference(*NEEDS_REF_TOOL, *("samples/" + s for s in CORPUS))
 def test_dump_parity_corpus():
     for sample in CORPUS:
         path = SAMPLES + sample
@@ -50,13 +55,15 @@ def test_dump_parity_corpus():
             _assert_match([*opts, path])
 
 
+@requires_reference(*NEEDS_REF_TOOL, *("samples/" + s for s in AES_SAMPLES))
 def test_dump_encrypted_aes_unpadded():
-    for sample in ("encryption/aes-128.pdf", "encryption/aes-256.pdf"):
+    for sample in AES_SAMPLES:
         out = _run("ours", ["-P", "foo", "-i", "1", SAMPLES + sample])
         assert b'<string size="5">de-DE</string>' in out.stdout
         _assert_match(["-P", "foo", "-t", "-a", SAMPLES + sample])
 
 
+@requires_reference(*NEEDS_REF_TOOL, "samples/nonfree/i1040nr.pdf")
 def test_extract_embedded_matches_reference(tmp_path):
     pdf = SAMPLES + "nonfree/i1040nr.pdf"
     ours_dir, ref_dir = str(tmp_path / "ours"), str(tmp_path / "ref")
@@ -71,6 +78,7 @@ def test_extract_embedded_matches_reference(tmp_path):
             assert a.read() == b.read()
 
 
+@requires_reference(*NEEDS_REF_TOOL)
 def test_dump_fuzz_synth_pdfs(tmp_path):
     """Random rich/CID PDFs from the fuzz generators dump identically
     (in-process, -t -a equivalent) — object-graph parity beyond the
@@ -103,10 +111,13 @@ def test_dump_fuzz_synth_pdfs(tmp_path):
             assert a.getvalue() == b.getvalue(), (gen.__name__, seed)
 
 
-def test_dump_raw_binary_typeerror():
-    # the reference's own tests assert this crash; we keep behavior parity
+def test_dump_raw_binary_typeerror(tmp_path):
+    # the reference's own tests assert this crash; we keep behavior parity.
+    # Any PDF with a stream triggers it, so a two-page synth_pdf stands in
+    # for simple1.pdf where the sample is absent.
+    pdf = sample_or_synth(tmp_path, "simple1.pdf", [["Hello"], ["World"]])
     for opt in ("-r", "-b"):
-        ours = _run("ours", [opt, "-a", "-o", "/tmp/dump_parity.out",
-                             SAMPLES + "simple1.pdf"])
+        ours = _run("ours", [opt, "-a", "-o", str(tmp_path / "dump.out"),
+                             pdf])
         assert ours.returncode != 0
         assert b"TypeError" in ours.stderr
