@@ -109,7 +109,7 @@ def main() -> None:
         "clean_funnel",
         "dedup_incremental_fuzzy",
         "dedup_bloom",
-        "train_order_sharded",
+        "train_order",
         "kmeans_assign",
         "cluster_domain_report",
         "tokenizer_fertility",

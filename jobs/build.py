@@ -301,8 +301,7 @@ def run(spark, args) -> dict:
     if args.mix_budget:
         def _mix():
             sel = temperature_mix(
-                scored, budget_docs=args.mix_budget, id_col="doc_id",
-                mode="bucketed",
+                scored, budget_docs=args.mix_budget, id_col="doc_id"
             )
             return scored.join(
                 sel.select("doc_id"), "doc_id", "left_semi"
@@ -324,7 +323,7 @@ def run(spark, args) -> dict:
             # global shuffle), not crawl order
             order = train_order(
                 to_pack, seed=args.shuffle_seed, id_col="doc_id",
-                mode="sharded", handle=order_handle,
+                handle=order_handle,
             ).select("doc_id", "pos")
             keyed = to_pack.join(order, "doc_id").withColumn(
                 "doc_num", F.col("pos")

@@ -94,15 +94,19 @@ def synth_pdf(pages: List[List[str]], compress: bool = True) -> bytes:
     )
     assert real_pages_id == pages_id
     catalog_id = add(b"<< /Type /Catalog /Pages %d 0 R >>" % pages_id)
+    return _pdf_file(objs, catalog_id)
 
+
+def _pdf_file(objs: List[bytes], catalog_id: int) -> bytes:
+    """Serialize object bodies 1..n with a classic xref table and a
+    trailer rooted at ``catalog_id``."""
     out = bytearray(b"%PDF-1.4\n")
     offsets = [0]
     for i, body in enumerate(objs, 1):
         offsets.append(len(out))
         out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
     xref_pos = len(out)
-    out += b"xref\n0 %d\n" % (len(objs) + 1)
-    out += b"0000000000 65535 f \n"
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
     for off in offsets[1:]:
         out += b"%010d 00000 n \n" % off
     out += (
@@ -403,18 +407,7 @@ def synth_rich_pdf(seed: int, max_pages: int = 2) -> bytes:
     kids = b" ".join(b"%d 0 R" % p for p in page_ids)
     assert add(b"<< /Type /Pages /Kids [%s] /Count %d >>" % (kids, len(page_ids))) == pages_id
     catalog_id = add(b"<< /Type /Catalog /Pages %d 0 R >>" % pages_id)
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for i, body in enumerate(objs, 1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
-    xref_pos = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offsets[1:]:
-        out += b"%010d 00000 n \n" % off
-    out += (b"trailer\n<< /Size %d /Root %d 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-            % (len(objs) + 1, catalog_id, xref_pos))
-    return bytes(out)
+    return _pdf_file(objs, catalog_id)
 
 
 def synth_cid_pdf(seed: int) -> bytes:
@@ -490,31 +483,46 @@ def synth_cid_pdf(seed: int) -> bytes:
     )
     assert add(b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page_id) == pages_id
     catalog_id = add(b"<< /Type /Catalog /Pages %d 0 R >>" % pages_id)
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for i, body in enumerate(objs, 1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
-    xref_pos = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offsets[1:]:
-        out += b"%010d 00000 n \n" % off
-    out += (b"trailer\n<< /Size %d /Root %d 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-            % (len(objs) + 1, catalog_id, xref_pos))
-    return bytes(out)
+    return _pdf_file(objs, catalog_id)
+
+
+# the image write_pdf_corpus embeds: 5 x 3 8-bit gray samples (an odd
+# width, so the BMP rows need padding)
+GRAY_IMAGE = (5, 3, bytes((37 * i) % 256 for i in range(15)))
+
+
+def synth_gray_image_pdf(width: int, height: int, raw: bytes) -> bytes:
+    """A one-page PDF that draws one Flate-encoded 8-bit ``/DeviceGray``
+    image XObject holding the ``width * height`` samples ``raw``."""
+    data = zlib.compress(raw)
+    content = b"q 50 0 0 30 72 700 cm /Im1 Do Q"
+    objs = [
+        b"<< /Type /XObject /Subtype /Image /Width %d /Height %d "
+        b"/ColorSpace /DeviceGray /BitsPerComponent 8 /Filter /FlateDecode "
+        b"/Length %d >>\nstream\n%s\nendstream"
+        % (width, height, len(data), data),
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+        b"<< /Type /Page /Parent 4 0 R /MediaBox [0 0 612 792] "
+        b"/Resources << /XObject << /Im1 1 0 R >> >> /Contents 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Catalog /Pages 4 0 R >>",
+    ]
+    return _pdf_file(objs, 5)
 
 
 def write_pdf_corpus(root: str) -> str:
-    """Write a ten-file synthetic PDF directory into ``root`` (created if
-    missing) and return ``root``: a two-page text PDF, four rich and
-    three CID PDFs, ``truncated.pdf`` (the text PDF cut in half; status
-    ``error``) and ``locked.pdf`` (no password opens it;
-    ``bad_password``).  The bytes are deterministic.  Each file is
-    written under a dot-prefixed name and renamed into place, so a
-    concurrent reader of the directory never lists a partial file."""
+    """Write an eleven-file synthetic PDF directory into ``root`` (created
+    if missing) and return ``root``: a two-page text PDF, four rich and
+    three CID PDFs, ``image.pdf`` (one 8-bit gray image, ``GRAY_IMAGE``),
+    ``truncated.pdf`` (the text PDF cut in half; status ``error``) and
+    ``locked.pdf`` (no password opens it; ``bad_password``).  The bytes
+    are deterministic.  Each file is written under a dot-prefixed name
+    and renamed into place, so a concurrent reader of the directory
+    never lists a partial file."""
     text = synth_pdf([["corpus text page"], ["second page"]])
     docs = {
         "text.pdf": text,
+        "image.pdf": synth_gray_image_pdf(*GRAY_IMAGE),
         "truncated.pdf": text[: len(text) // 2],
         "locked.pdf": synth_locked_pdf(1),
     }

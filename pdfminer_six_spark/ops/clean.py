@@ -551,40 +551,33 @@ def token_budget_select(
     score_col: str = "score",
     text_col: str = "text",
     id_col: str = "doc_id",
-    mode: str = "exact",
     n_buckets: int = 1024,
 ) -> DataFrame:
     """Token-budget curation (the FineWeb / RefinedWeb "keep the best N
-    tokens" step): order documents by ``score_col`` descending
-    (``id_col`` ascending breaks ties) and keep the prefix whose
-    cumulative whitespace-token count stays <= ``budget_tokens``.  The
-    first document that would overflow the budget is dropped, as is
+    tokens" step): order documents by ``score_col`` descending, NULL
+    scores last (``id_col`` ascending breaks ties) and keep the prefix
+    whose cumulative whitespace-token count stays <= ``budget_tokens``.
+    The first document that would overflow the budget is dropped, as is
     everything after it.  Returns the selected input rows plus an
     ``n_tokens`` column.
 
-    Two physical paths that return IDENTICAL rows:
-
-    * ``mode='exact'`` — one global running-sum window over
-      ``orderBy(score desc, id)``.  Single-task sort: the oracle/audit
-      path, the plan you do NOT run at 100 TB.
-
-    * ``mode='bucketed'`` — the 100x plan.  Score range -> ``n_buckets``
-      fixed-width buckets (monotone in score, so bucket order IS score
-      order and score ties always land in ONE bucket); per-bucket token
-      masses are a map-side-combinable aggregate collected to the driver
-      (O(n_buckets) rows — the sanctioned convergence-summary pattern).
-      The driver walks buckets top-down to find the single boundary
-      bucket; every higher bucket is kept by a scan-local filter (wide
-      rows never shuffle), and only the boundary bucket — expected
-      corpus/n_buckets of the data — pays an exact in-bucket running-sum
-      window over its (id, score, n_tokens) PROJECTION, whose keep-ids
-      come back as a broadcast semi-join.  Because buckets are monotone
-      and ties can't straddle them, bucketed == exact row-for-row (a
-      pytest-pinned differential), unlike ccnet's sketch cutoffs which
-      trade tie placement for scale.  Degenerate case: if every score is
-      equal (score range is a single point) all rows share one bucket
-      and the boundary window IS the global sort — same honest caveat as
-      equal-perplexity mass in ccnet_buckets.
+    Plan: score range -> ``n_buckets`` fixed-width buckets (monotone in
+    score, so bucket order IS score order and score ties always land in
+    ONE bucket; NULL scores form bucket -1, below every other); per-bucket
+    token masses are a map-side-combinable aggregate collected to the
+    driver (O(n_buckets) rows — the sanctioned convergence-summary
+    pattern).  The driver walks buckets top-down to find the single
+    boundary bucket; every higher bucket is kept by a scan-local filter
+    (wide rows never shuffle), and only the boundary bucket — expected
+    corpus/n_buckets of the data — pays an exact in-bucket running-sum
+    window over its (id, score, n_tokens) PROJECTION, whose keep-ids come
+    back as a broadcast semi-join.  Because buckets are monotone and ties
+    can't straddle them, the rows equal one global running-sum window
+    over ``orderBy(score desc, id)`` (the DuckDB oracle), unlike ccnet's
+    sketch cutoffs which trade tie placement for scale.  Degenerate case:
+    if every score is equal (score range is a single point) all rows
+    share one bucket and the boundary window IS the global sort — same
+    honest caveat as equal-perplexity mass in ccnet_buckets.
 
     Scale notes: two extra passes over the (id, score, n_tokens)
     projection (range agg + bucket-mass agg), never over text; the
@@ -599,38 +592,25 @@ def token_budget_select(
             "long"
         ),
     )
-    order = [F.col(score_col).desc(), F.col(id_col).asc()]
-    if mode == "exact":
-        w = (
-            Window.orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return (
-            base.withColumn("_cum", F.sum("n_tokens").over(w))
-            .filter(F.col("_cum") <= budget_tokens)
-            .drop("_cum")
-        )
-    if mode != "bucketed":  # pragma: no cover - guarded API
-        raise ValueError(f"mode must be 'exact' or 'bucketed': {mode}")
-
     proj = base.select(id_col, score_col, "n_tokens")
     lo, hi = proj.agg(
         F.min(score_col), F.max(score_col)
     ).first()
-    if lo is None:  # empty input
-        return base.limit(0)
-    span = float(hi) - float(lo)
+    span = 0.0 if lo is None else float(hi) - float(lo)
     if span == 0.0:
-        bucket = F.lit(0)
+        idx = F.lit(0)
     else:
-        bucket = F.least(
+        idx = F.least(
             F.floor(
                 (F.col(score_col).cast("double") - F.lit(float(lo)))
                 / F.lit(span)
                 * F.lit(n_buckets)
             ),
             F.lit(n_buckets - 1),
-        ).cast("int")
+        )
+    bucket = (
+        F.when(F.col(score_col).isNull(), F.lit(-1)).otherwise(idx).cast("int")
+    )
     masses = {
         r["_b"]: r["_m"]
         for r in proj.withColumn("_b", bucket)
@@ -649,7 +629,7 @@ def token_budget_select(
         return base.drop("_b")
     high = base.filter(F.col("_b") > boundary).drop("_b")
     bw = (
-        Window.orderBy(*order)
+        Window.orderBy(F.col(score_col).desc(), F.col(id_col).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     keep_ids = (
@@ -657,12 +637,17 @@ def token_budget_select(
         .filter(F.col("_b") == boundary)
         .withColumn("_cum", F.sum("n_tokens").over(bw))
         .filter(F.col("_cum") <= remaining)
-        .select(id_col)
+        .select(F.col(id_col).alias("_kid"))
     )
+    # null-safe: a NULL id the window keeps must survive the semi-join
     border = (
         base.filter(F.col("_b") == boundary)
         .drop("_b")
-        .join(F.broadcast(keep_ids), id_col, "left_semi")
+        .join(
+            F.broadcast(keep_ids),
+            F.col(id_col).eqNullSafe(F.col("_kid")),
+            "left_semi",
+        )
     )
     return high.unionByName(border)
 
@@ -672,7 +657,6 @@ def train_order(
     seed: str = "shuf-0",
     n_shards: int = 8,
     id_col: str = "doc_id",
-    mode: str = "exact",
     handle: list | None = None,
 ) -> DataFrame:
     """Deterministic training-order shuffle — the final "global shuffle"
@@ -686,26 +670,21 @@ def train_order(
     across data-parallel readers so every shard sees the same
     pseudo-random mix.
 
-    Two physical paths returning IDENTICAL rows:
-
-    * ``mode='exact'`` — ``row_number`` over one global window: the
-      single-task-sort oracle/audit path.
-
-    * ``mode='sharded'`` — the 100x plan: ``repartitionByRange`` on the
-      shuffle key (a distributed range sort — Spark samples boundaries,
-      every partition sorts locally), then the classic two-phase global
-      index: per-partition row counts collect to the driver
-      (O(partitions) rows — sanctioned summary collect), cumulative
-      offsets broadcast back joined on partition id, and
-      ``pos = offset[pid] + local_rank - 1`` where ``local_rank`` is a
-      per-partition window (no global sort cliff).  Range partitions
-      are ordered by key, so cumulative offsets in pid order equal the
-      global rank even though sampled boundaries vary run to run — the
-      OUTPUT is deterministic, only the internal split points float.
-      The range-partitioned relation is persisted so the sample is not
-      redrawn between the counts and the join; pass a list as
-      ``handle`` to receive it and ``unpersist()`` it once the caller's
-      action has run (jobs/build.py does this after the pack write).
+    Plan: ``repartitionByRange`` on the shuffle key (a distributed range
+    sort — Spark samples boundaries, every partition sorts locally),
+    then the classic two-phase global index: per-partition row counts
+    collect to the driver (O(partitions) rows — sanctioned summary
+    collect), cumulative offsets broadcast back joined on partition id,
+    and ``pos = offset[pid] + local_rank - 1`` where ``local_rank`` is a
+    per-partition window (no global sort cliff).  Range partitions are
+    ordered by key, so cumulative offsets in pid order equal the global
+    rank (the DuckDB ``ROW_NUMBER`` oracle) even though sampled
+    boundaries vary run to run — the OUTPUT is deterministic, only the
+    internal split points float.  The range-partitioned relation is
+    persisted so the sample is not redrawn between the counts and the
+    join; pass a list as ``handle`` to receive it and ``unpersist()`` it
+    once the caller's action has run (jobs/build.py does this after the
+    pack write).
 
     md5 keeps both engines' orders identical (DuckDB computes the same
     digest; xxhash64 would be Spark-only).  Ties are impossible for
@@ -716,45 +695,38 @@ def train_order(
         F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string"))
     ).alias("_k")
     keyed = df.select(F.col(id_col), key)
-    if mode == "exact":
-        w = Window.orderBy("_k", id_col)
-        pos = (F.row_number().over(w) - 1).alias("pos")
-        ordered = keyed.select(id_col, pos)
-    elif mode == "sharded":
-        n_parts = max(keyed.sparkSession.sparkContext.defaultParallelism, 2)
-        parts = (
-            keyed.repartitionByRange(n_parts, "_k", id_col)
-            .withColumn("_pid", F.spark_partition_id())
-            .persist()
+    spark = keyed.sparkSession
+    n_parts = max(spark.sparkContext.defaultParallelism, 2)
+    parts = (
+        keyed.repartitionByRange(n_parts, "_k", id_col)
+        .withColumn("_pid", F.spark_partition_id())
+        .persist()
+    )
+    if handle is not None:
+        handle.append(parts)
+    counts = {
+        r["_pid"]: r["c"]
+        for r in parts.groupBy("_pid").agg(
+            F.count(F.lit(1)).alias("c")
+        ).collect()
+    }
+    offsets, acc = {}, 0
+    for pid in sorted(counts):
+        offsets[pid] = acc
+        acc += counts[pid]
+    off = F.broadcast(
+        spark.createDataFrame(
+            list(offsets.items()), "_pid INT, _off BIGINT"
         )
-        if handle is not None:
-            handle.append(parts)
-        counts = {
-            r["_pid"]: r["c"]
-            for r in parts.groupBy("_pid").agg(
-                F.count(F.lit(1)).alias("c")
-            ).collect()
-        }
-        offsets, acc = {}, 0
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        spark = keyed.sparkSession
-        off = F.broadcast(
-            spark.createDataFrame(
-                list(offsets.items()), "_pid INT, _off BIGINT"
-            )
+    )
+    lw = Window.partitionBy("_pid").orderBy("_k", id_col)
+    ordered = (
+        parts.join(off, "_pid")
+        .select(
+            id_col,
+            (F.col("_off") + F.row_number().over(lw) - 1).alias("pos"),
         )
-        lw = Window.partitionBy("_pid").orderBy("_k", id_col)
-        ordered = (
-            parts.join(off, "_pid")
-            .select(
-                id_col,
-                (F.col("_off") + F.row_number().over(lw) - 1).alias("pos"),
-            )
-        )
-    else:
-        raise ValueError(f"unknown mode: {mode!r}")
+    )
     return ordered.select(
         id_col,
         F.col("pos").cast("long").alias("pos"),
@@ -768,7 +740,6 @@ def temperature_mix(
     source_col: str = "source",
     id_col: str = "doc_id",
     seed: str = "tmix-0",
-    mode: str = "exact",
 ) -> DataFrame:
     """Temperature-scaled source mixing (the multilingual/multi-source
     rebalancing of XLM-R / mT5, temperature alpha = 0.5): a corpus whose
@@ -785,23 +756,21 @@ def temperature_mix(
     boundary row between engines.  Within a source, survivors are the
     first ``target_i`` docs ordered by ``(md5(seed:id), id)`` — the
     same deterministic permutation as train_order, so re-runs and
-    retries select identical rows.  Per-source counts collect to the
-    driver (O(sources) — sanctioned summary collect).
+    retries select identical rows.  A NULL id has a NULL key and ranks
+    first in its source (ascending order puts NULLs first).  Per-source
+    counts collect to the driver (O(sources) — sanctioned summary
+    collect).
 
-    Two physical paths returning IDENTICAL rows:
-
-    * ``mode='exact'`` — per-source ``row_number`` window: correct, but
-      a web-scale source funnels through one task's sort (the
-      ccnet_buckets cliff), so this is the oracle/audit path.
-
-    * ``mode='bucketed'`` — the 100x plan: the selection key's first 4
-      hex chars split each source into 65,536 hash buckets; per-
-      (source, bucket) counts aggregate map-side and collect
-      (O(sources x 65536) summary rows — MBs, not data), the driver
-      finds each source's boundary bucket by cumulative count, whole
-      buckets below it survive by comparison (scan-local filter), and
-      only the boundary bucket — ~1/65536 of the source — pays a
-      window sort for its exact intra-bucket ranks.
+    Plan: a per-source ``row_number`` window would funnel a web-scale
+    source through one task's sort (the ccnet_buckets cliff), so the
+    selection key's first 4 hex chars split each source into 65,536
+    hash buckets (a NULL key forms bucket ``''``, below every other);
+    per-(source, bucket) counts aggregate map-side and collect
+    (O(sources x 65536) summary rows — MBs, not data), the driver finds
+    each source's boundary bucket by cumulative count, whole buckets
+    below it survive by comparison (scan-local filter), and only the
+    boundary bucket — ~1/65536 of the source — pays a window sort for
+    its exact intra-bucket ranks.
     """
     from math import isqrt
 
@@ -823,20 +792,9 @@ def temperature_mix(
     key = F.md5(
         F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string"))
     ).alias("_k")
-    keyed = df.select(F.col(id_col), F.col(source_col), key)
-    tgt = F.create_map(
-        *[x for s, t in sorted(targets.items()) for x in (F.lit(s), F.lit(t))]
+    bucketed = df.select(F.col(id_col), F.col(source_col), key).withColumn(
+        "_b", F.coalesce(F.substring("_k", 1, 4), F.lit(""))
     )
-    if mode == "exact":
-        w = Window.partitionBy(source_col).orderBy("_k", id_col)
-        return (
-            keyed.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= tgt[F.col(source_col)])
-            .select(id_col, source_col)
-        )
-    if mode != "bucketed":
-        raise ValueError(f"unknown mode: {mode!r}")
-    bucketed = keyed.withColumn("_b", F.substring("_k", 1, 4))
     bcounts = (
         bucketed.groupBy(source_col, "_b")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -845,27 +803,31 @@ def temperature_mix(
     per_src: dict = {}
     for r in bcounts:
         per_src.setdefault(r[source_col], []).append((r["_b"], r["c"]))
-    full_below: dict = {}   # source -> boundary bucket (exclusive)
+    last_full: dict = {}    # source -> last whole-surviving bucket
     boundary: dict = {}     # source -> (bucket, remaining quota)
     for s, bl in per_src.items():
         bl.sort()
         acc, t = 0, targets[s]
-        full_below[s] = ""
+        last_full[s] = None  # NULL bound: no bucket survives whole
         boundary[s] = None
         for b, c in bl:
             if acc + c <= t:
                 acc += c
-                full_below[s] = b + "￿"  # whole bucket survives
+                last_full[s] = b
                 if acc == t:
                     break
             else:
                 boundary[s] = (b, t - acc)
                 break
-    fb = F.create_map(
-        *[x for s, v in sorted(full_below.items()) for x in (F.lit(s), F.lit(v))]
+    lf = F.create_map(
+        *[
+            x
+            for s, v in sorted(last_full.items())
+            for x in (F.lit(s), F.lit(v).cast("string"))
+        ]
     )
     kept_full = bucketed.filter(
-        F.col("_b") < fb[F.col(source_col)]
+        F.col("_b") <= lf[F.col(source_col)]
     ).select(id_col, source_col)
     bnd = [(s, b, q) for s, v in boundary.items() if v for (b, q) in [v]]
     if not bnd:

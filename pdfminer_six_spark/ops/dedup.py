@@ -51,7 +51,6 @@ def incremental_exact(
     text_col: str = "text",
     id_col: str = "doc_id",
     fp_col: str = "fp",
-    broadcast_drop_ids: bool = True,
 ) -> DataFrame:
     """Incremental exact dedup: dedup a NEW batch against a historical
     fingerprint index — the shape a continuously-crawled corpus actually
@@ -71,9 +70,7 @@ def incremental_exact(
     non-canonical ids); for a sane crawl the duplicate rate is a few
     percent, so drop_ids is small relative to the batch and the final
     anti-join broadcasts it — the batch text is NEVER shuffled (the
-    decontaminate design).  Pass ``broadcast_drop_ids=False`` for
-    pathological inputs (duplicate-majority batches), which reinstates a
-    sort-merge anti-join on id.  NULL text is hashed as the empty string
+    decontaminate design).  NULL text is hashed as the empty string
     (NULL fps would silently skip both the anti-join equality and the
     join-back, exempting every NULL-text row from dedup), so NULL and
     ``''`` documents are one duplicate group here — a deliberate,
@@ -107,9 +104,7 @@ def incremental_exact(
         .filter(F.col(id_col) != F.col("_keep_id"))
         .select(id_col)
     )
-    drop_ids = hit_seen.unionByName(non_canonical)
-    if broadcast_drop_ids:
-        drop_ids = F.broadcast(drop_ids)
+    drop_ids = F.broadcast(hit_seen.unionByName(non_canonical))
     # phase 2 — the only touch of the wide batch rows; fp is a pure
     # projection, cheaper to recompute than to join back
     return batch.join(drop_ids, id_col, "left_anti").withColumn(fp_col, fp)
@@ -383,7 +378,6 @@ def minhash_near_duplicates(
     threshold: float = 0.6,
     num_hashes: int = 16,
     bands: int = 8,
-    restrict_verification: bool = False,
 ) -> DataFrame:
     """Scale-path near-dup: LSH candidates verified by exact Jaccard,
     computed ONLY for the candidate pairs (the whole point of banding:
@@ -396,33 +390,9 @@ def minhash_near_duplicates(
     7.5s vs recompute 6.5s): the subplan is pure whole-stage-codegen
     (split -> n-gram transform -> explode) that pipelines straight into
     each aggregation, while caching materializes ~millions of shingle
-    strings through the block manager.  Recomputation is deliberate.
-
-    ``restrict_verification`` (r06, guide §3.2): the exact-Jaccard
-    verification only ever reads the CANDIDATE docs' shingle sets, but
-    the set build collect_sets for EVERY doc — at corpus scale that
-    shuffle is the op's biggest exchange.  With the flag on, the
-    candidate pair relation is persisted (tiny by banding design), its
-    distinct doc ids broadcast, and the shingle relation is
-    semi-restricted BEFORE the set aggregation, so the collect_set
-    shuffle carries only candidate docs' shingles (sane-corpus
-    candidate rate: a few percent).  Identical rows either way:
-    candidates always have >= 1 shingle by construction.  Default OFF
-    because it is a measured LOSS at bench scale (interleaved best-of-3
-    at sf0.1 local[32]: lsh 1.95 -> 3.06 s, clusters 3.18 -> 4.35 s —
-    the broadcast turns the one-DAG plan into serialized sub-jobs and
-    the whole corpus is only 5k docs) and a win only when the corpus
-    dwarfs the candidate set; production 100 TB dedup jobs should pass
-    True (and False again for duplicate-majority corpora where the
-    candidate id set could outgrow a broadcast)."""
+    strings through the block manager.  Recomputation is deliberate."""
     cand = minhash_lsh_candidates(df, num_hashes, bands)
     sh = shingles(df).select("doc_id", F.xxhash64("shingle").alias("shingle"))
-    if restrict_verification:
-        cand = cand.persist()
-        cand_ids = cand.select(
-            F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-        ).distinct()
-        sh = sh.join(F.broadcast(cand_ids), "doc_id", "left_semi")
     # shingles() is distinct per doc, so |set| IS the shingle count — one
     # aggregation serves both the set and its size (no separate count
     # branch, two fewer join shuffles)
@@ -879,7 +849,6 @@ def duplicate_spans(
     k: int = 30,
     min_count: int = 2,
     text_col: str = "text",
-    double_hash: bool = False,
 ) -> DataFrame:
     """Exact duplicated-substring spans — the span-level sibling of
     :func:`exact_duplicates`, after Lee et al. 2022 ("Deduplicating
@@ -931,24 +900,10 @@ def duplicate_spans(
     # hash because the compared output is the spans; a cross-doc 64-bit
     # collision (expected colliding pairs ~ n_grams^2 / 2^65, ~1e-6 at
     # 10M grams) could at worst mint one spurious k-char span.
-    # ``double_hash=True`` widens the dup key to 128 bits by pairing an
-    # independent xxhash64 of the REVERSED gram — collision odds drop
-    # below any realistic corpus size (~n^2/2^129) at the cost of a
-    # second hash per gram and a 16-byte shuffle key; spans are
-    # pytest-pinned identical across both settings at test scale.
-    if double_hash:
-        gram_hashes = F.transform(
-            F.sequence(F.lit(1), F.length(s) - k + 1),
-            lambda i: F.struct(
-                F.xxhash64(s.substr(i, F.lit(k))).alias("h1"),
-                F.xxhash64(F.reverse(s.substr(i, F.lit(k)))).alias("h2"),
-            ),
-        )
-    else:
-        gram_hashes = F.transform(
-            F.sequence(F.lit(1), F.length(s) - k + 1),
-            lambda i: F.xxhash64(s.substr(i, F.lit(k))),
-        )
+    gram_hashes = F.transform(
+        F.sequence(F.lit(1), F.length(s) - k + 1),
+        lambda i: F.xxhash64(s.substr(i, F.lit(k))),
+    )
     grams = normed.select(
         "doc_id", F.posexplode(gram_hashes).alias("pos0", "h")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "h")

@@ -623,7 +623,6 @@ def dsir_weights(
     target: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bigrams: bool = True,
     hashed_buckets: int | None = None,
     persist_model: bool = True,
     model_handle: list | None = None,
@@ -637,7 +636,7 @@ def dsir_weights(
 
     with add-one smoothing over the union feature vocabulary:
     ``p_t(f) = (ct+1)/(Tt+V)``, ``q_r(f) = (cr+1)/(Tr+V)``.  Features
-    are word unigrams plus (default) bigrams of the normalized text.
+    are word unigrams plus bigrams of the normalized text.
 
     Exact path (``hashed_buckets=None``): features are the n-gram
     strings themselves — fully SQL-expressible, the oracle path.
@@ -673,8 +672,9 @@ def dsir_weights(
         bg = F.transform(
             _ngrams(toks, 2), lambda b: F.concat_ws(" ", b["w1"], b["w2"])
         )
-        fcol = F.concat(toks, bg) if bigrams else toks
-        out = df.select(F.col(id_col), F.explode(fcol).alias("feat"))
+        out = df.select(
+            F.col(id_col), F.explode(F.concat(toks, bg)).alias("feat")
+        )
         if hashed_buckets is not None:
             out = out.select(
                 id_col,

@@ -323,7 +323,6 @@ def hll_distinct_shingles(
     text_col: str = "text",
     ns: tuple = (1, 2, 3),
     p: int = 10,
-    include_exact: bool = True,
 ) -> DataFrame:
     """Distinct-n-gram cardinality via a from-scratch HyperLogLog sketch
     (Flajolet et al. 2007) built on an ORACLE-REPRODUCIBLE hash — the
@@ -353,12 +352,11 @@ def hll_distinct_shingles(
 
     ``exact_distinct`` counts distinct HASHES via a per-register
     countDistinct that rides the same m-group aggregate (no second
-    grouping, no 1-row crossJoin) — the audit column; production runs at
-    scale pass ``include_exact=False`` and keep only the bounded-state
-    sketch.  Shingle semantics (normalize, per-doc array_distinct,
-    short-doc whole-text gram) are ``dedup.shingles``'s.  Returns one
-    row per ``n``: (n, m_registers, v_zeros, s_scaled, exact_distinct,
-    hll_estimate, rel_err)."""
+    grouping, no 1-row crossJoin) — the audit column.  Shingle
+    semantics (normalize, per-doc array_distinct, short-doc whole-text
+    gram) are ``dedup.shingles``'s.  Returns one row per ``n``: (n,
+    m_registers, v_zeros, s_scaled, exact_distinct, hll_estimate,
+    rel_err)."""
     m = 1 << p
     rank_bits = 60 - p
     r_scale = rank_bits + 1
@@ -442,17 +440,14 @@ def hll_distinct_shingles(
         (raw <= F.lit(2.5 * m)) & (v > 0),
         F.lit(float(m)) * F.log(F.lit(float(m)) / v.cast("double")),
     ).otherwise(raw)
-    exact = F.col("_nd") if include_exact else F.lit(None).cast("long")
     return summary.select(
         F.col("n").cast("long").alias("n"),
         F.lit(m).cast("long").alias("m_registers"),
         v.cast("long").alias("v_zeros"),
         s.cast("long").alias("s_scaled"),
-        exact.alias("exact_distinct"),
+        F.col("_nd").alias("exact_distinct"),
         F.round(est, 4).alias("hll_estimate"),
-        F.round(est / F.col("_nd").cast("double") - 1.0, 4).alias("rel_err")
-        if include_exact
-        else F.lit(None).cast("double").alias("rel_err"),
+        F.round(est / F.col("_nd").cast("double") - 1.0, 4).alias("rel_err"),
     )
 
 
@@ -1276,7 +1271,6 @@ def source_kl_divergence(
     df: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    persist_counts: bool = True,
     counts_handle: list | None = None,
 ) -> DataFrame:
     """Distribution drift per source: KL(p_source || p_corpus) over
@@ -1306,10 +1300,9 @@ def source_kl_divergence(
     # unpersisted the corpus text is scanned 4x (measured in the plan).
     # The persisted table is (sources x vocab)-sized, not corpus-sized
     # (ngram_lm_scores precedent; unpersist via ``counts_handle``).
-    if persist_counts:
-        cs = cs.persist()
-        if counts_handle is not None:
-            counts_handle.append(cs)
+    cs = cs.persist()
+    if counts_handle is not None:
+        counts_handle.append(cs)
     vocab = cs.groupBy("t").agg(F.sum("cs").alias("c"))
     sources = cs.groupBy("src").agg(F.sum("cs").alias("ts"))
     scalars = vocab.agg(

@@ -3228,7 +3228,7 @@ _PDF_CORPUS_FIXTURE = os.path.join(
 def _pdf_samples_dir() -> str:
     """The PDF directory the file-corpus queries read: ``PDF_SAMPLES_DIR``
     when set, else the reference sample corpus when present, else the
-    ten-file synthetic corpus (``datagen.transcripts.write_pdf_corpus``)
+    eleven-file synthetic corpus (``datagen.transcripts.write_pdf_corpus``)
     written under the temp dir."""
     from pdfminer_six_spark.datagen.transcripts import write_pdf_corpus
 
@@ -3970,24 +3970,16 @@ FROM noisy
 """
 
 
-def _q_temperature_mix(spark, sf_dir, mode):
+def q_temperature_mix(spark, sf_dir):
     """Temperature-scaled source mixing (ops.clean.temperature_mix,
     alpha=0.5 XLM-R/mT5 rebalancing) at a 60% doc budget.  Survivor
     choice is integer arithmetic end to end (isqrt weights, integer-
-    division targets, md5-permutation ranks), so exact and bucketed
-    paths — and the DuckDB oracle — agree row-for-row with no float
-    discipline."""
+    division targets, md5-permutation ranks), so the bucketed plan and
+    the DuckDB oracle's per-source ROW_NUMBER agree row-for-row with no
+    float discipline."""
     from pdfminer_six_spark.ops.clean import temperature_mix
 
-    return temperature_mix(_t(spark, sf_dir, "documents"), mode=mode)
-
-
-def q_temperature_mix(spark, sf_dir):
-    return _q_temperature_mix(spark, sf_dir, "exact")
-
-
-def q_temperature_mix_bucketed(spark, sf_dir):
-    return _q_temperature_mix(spark, sf_dir, "bucketed")
+    return temperature_mix(_t(spark, sf_dir, "documents"))
 
 
 _SQL_TEMPERATURE_MIX = """
@@ -4147,28 +4139,17 @@ WHERE len(list_filter(
 """
 
 
-def _q_train_order(spark, sf_dir, mode):
+def q_train_order(spark, sf_dir):
     """Deterministic training-order shuffle (ops.clean.train_order):
     the hash-derived global pseudo-random permutation + round-robin
     shard assignment a pipeline runs before writing training shards.
-    ``exact`` is the global-window oracle path; ``sharded`` is the 100x
-    plan (range repartition + two-phase offset assignment) and must
-    return IDENTICAL rows — both run against the same DuckDB
-    ROW_NUMBER oracle."""
+    The range-repartitioned two-phase offset plan must return the rows
+    of the DuckDB global ROW_NUMBER oracle."""
     from pdfminer_six_spark.ops.clean import train_order
 
     return train_order(
-        _t(spark, sf_dir, "documents"), seed="shuf-0", n_shards=8,
-        mode=mode,
+        _t(spark, sf_dir, "documents"), seed="shuf-0", n_shards=8
     )
-
-
-def q_train_order(spark, sf_dir):
-    return _q_train_order(spark, sf_dir, "exact")
-
-
-def q_train_order_sharded(spark, sf_dir):
-    return _q_train_order(spark, sf_dir, "sharded")
 
 
 _SQL_TRAIN_ORDER = """
@@ -4722,16 +4703,15 @@ GROUP BY d.lang""")
 _TOKEN_BUDGET = 2000
 
 
-def _q_token_budget(spark, sf_dir, mode):
+def q_token_budget(spark, sf_dir):
     """Token-budget curation (ops.clean.token_budget_select): keep the
     best documents by a lexical-diversity score (distinct whitespace
     tokens — a deliberately integer-valued signal, so ordering is
     bit-identical across engines) until the cumulative token count
-    reaches the budget.  ``mode='exact'`` is the single global
-    running-sum window (oracle path); ``mode='bucketed'`` is the 100x
-    plan — monotone score buckets + driver-walked bucket masses + an
-    in-bucket window over the boundary bucket only — and returns
-    IDENTICAL rows, so BOTH registry entries share one oracle SQL."""
+    reaches the budget.  The bucketed plan — monotone score buckets +
+    driver-walked bucket masses + an in-bucket window over the boundary
+    bucket only — must return the rows of the oracle's single global
+    running-sum window."""
     from pdfminer_six_spark.ops.clean import token_budget_select
     from pdfminer_six_spark.ops.textstats import tokens_col
 
@@ -4744,16 +4724,8 @@ def _q_token_budget(spark, sf_dir, mode):
             )
         ).cast("long"),
     )
-    out = token_budget_select(scored, _TOKEN_BUDGET, mode=mode)
+    out = token_budget_select(scored, _TOKEN_BUDGET)
     return out.select("doc_id", "score", "n_tokens")
-
-
-def q_token_budget(spark, sf_dir):
-    return _q_token_budget(spark, sf_dir, "exact")
-
-
-def q_token_budget_bucketed(spark, sf_dir):
-    return _q_token_budget(spark, sf_dir, "bucketed")
 
 
 _SQL_TOKEN_BUDGET = f"""
@@ -5225,8 +5197,8 @@ QUERIES: Dict[str, QuerySpec] = {
     #   1. the NEW r05 first-class corpus ops with no driver row
     #      yet: text_repetition, dsir_importance, dsir_select,
     #      bpe_pair_stats, source_kl, ngram_novelty, dedup_incremental,
-    #      clean_funnel, token_budget, token_budget_bucketed,
-    #      subword_encode, bpe_train, train_order(_sharded),
+    #      clean_funnel, token_budget,
+    #      subword_encode, bpe_train, train_order,
     #      dedup_incremental_fuzzy, dedup_bloom, trigram_lm_score,
     #      decontaminate_semantic, kmeans_assign, kmeans_report,
     #      kmeans_balanced_select, cluster_domain_report,
@@ -5278,24 +5250,18 @@ QUERIES: Dict[str, QuerySpec] = {
     "dedup_incremental": (q_dedup_incremental, _SQL_DEDUP_INCREMENTAL),
     "clean_funnel": (q_clean_funnel, _SQL_CLEAN_FUNNEL),
     "token_budget": (q_token_budget, _SQL_TOKEN_BUDGET),
-    "token_budget_bucketed": (q_token_budget_bucketed, _SQL_TOKEN_BUDGET),
     "subword_encode": (q_subword_encode, _SQL_SUBWORD_ENCODE),
     "tokenizer_fertility": (q_tokenizer_fertility, _SQL_TOKENIZER_FERTILITY),
     "distill_filter": (q_distill_filter, _distill_sql()),
     "hll_distinct_shingles": (q_hll_distinct, _hll_sql()),
     "bpe_train": (q_bpe_train, _bpe_train_sql(10)),
     "train_order": (q_train_order, _SQL_TRAIN_ORDER),
-    "train_order_sharded": (q_train_order_sharded, _SQL_TRAIN_ORDER),
     "dedup_incremental_fuzzy": (
         q_dedup_incremental_fuzzy,
         _incr_minhash_sql(),
     ),
     "dedup_bloom": (q_dedup_bloom, _SQL_DEDUP_BLOOM),
     "temperature_mix": (q_temperature_mix, _SQL_TEMPERATURE_MIX),
-    "temperature_mix_bucketed": (
-        q_temperature_mix_bucketed,
-        _SQL_TEMPERATURE_MIX,
-    ),
     "normalize_formatting": (
         q_normalize_formatting,
         _normalize_formatting_sql(),

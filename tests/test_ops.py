@@ -1,6 +1,7 @@
 """Tests for the training-data ops (dedup / textstats / ann / multimodal)."""
 
 import math
+import os
 
 import pandas as pd
 import pytest
@@ -10,6 +11,7 @@ from tests.conftest import requires_reference
 pyspark = pytest.importorskip("pyspark")
 
 SF_DIR = "/root/testdata/sf0.01"
+ORACLE_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 
 @pytest.fixture(scope="module")
@@ -56,19 +58,6 @@ def test_minhash_lsh_recall_equals_exact(docs):
     }
     assert exact, "fixture should contain near-dups"
     assert lsh == exact
-    # the opt-in candidate-restricted verification (the 100 TB set-build
-    # path) must be row-identical to the corpus-wide set build
-    restricted = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_near_duplicates(
-            docs, threshold=0.6, restrict_verification=True
-        ).collect()
-    }
-    full = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_near_duplicates(docs, threshold=0.6).collect()
-    }
-    assert restricted == full
 
 
 def test_jaccard_df_cut_bounds_hot_shingle_fanout(spark):
@@ -2179,8 +2168,7 @@ def test_ngram_novelty_hand_computed(spark):
 def test_incremental_exact_drop_paths_and_null(spark):
     """Both drop paths: fps hitting the historical index are dropped; new
     in-batch duplicates keep only the min id; NULL text hashes as ''
-    (one group with the empty doc).  Broadcast and sort-merge variants
-    must return identical rows."""
+    (one group with the empty doc)."""
     import pandas as pd
 
     from pdfminer_six_spark.ops.dedup import incremental_exact
@@ -2215,8 +2203,6 @@ def test_incremental_exact_drop_paths_and_null(spark):
     rows = {r["doc_id"]: r["fp"] for r in out.collect()}
     assert set(rows) == {11, 13, 14}
     assert len(set(rows.values())) == 3
-    alt = incremental_exact(batch, seen, broadcast_drop_ids=False)
-    assert sorted(out.collect()) == sorted(alt.collect())
     # surviving fp column appends straight back onto the index: a second
     # identical batch dedups to nothing against seen + out.fp
     seen2 = seen.unionByName(out.select("fp"))
@@ -2290,44 +2276,80 @@ def test_token_budget_select_exact_semantics(spark):
     assert rows[3]["n_tokens"] == 4 and rows[3]["text"] == "f g h i"
 
 
-def test_token_budget_select_bucketed_equals_exact(spark):
-    """The bucketed scale path returns IDENTICAL rows to the exact global
-    window — including with a tiny bucket count that forces a boundary
-    bucket holding score ties, and in the degenerate all-equal-scores
-    case."""
-    import pandas as pd
+def _token_budget_reference(rows, budget):
+    """Pure-python token budget over (doc_id, text, score) rows: order by
+    score descending with NULL scores last, doc_id ascending, then keep
+    the running-sum prefix that stays <= budget.  Returns
+    {(doc_id, n_tokens)}."""
+    order = sorted(rows, key=lambda r: (r[2] is None, -(r[2] or 0), r[0]))
+    kept, cum = set(), 0
+    for doc_id, text, _score in order:
+        n = len((text or "").split())
+        cum += n
+        if cum > budget:
+            break
+        kept.add((doc_id, n))
+    return kept
 
+
+def test_token_budget_select_bucketed_equals_exact(spark):
+    """The bucketed plan returns the rows of the exact global running-sum
+    window, computed here in python — with tie-heavy scores, a tiny
+    bucket count that forces a boundary bucket holding score ties, NULL
+    scores, and the degenerate all-equal-scores case."""
     from pdfminer_six_spark.ops.clean import token_budget_select
 
-    pdf = pd.DataFrame(
-        {
-            "doc_id": list(range(40)),
-            "text": [("tok " * ((i % 7) + 1)).strip() for i in range(40)],
-            "score": [(i * 13) % 11 for i in range(40)],  # many ties
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    for budget in (0, 17, 40, 10_000):
-        ex = sorted(
-            map(tuple, token_budget_select(df, budget).collect())
-        )
-        for nb in (4, 1024):
-            bu = sorted(
-                map(
-                    tuple,
-                    token_budget_select(
-                        df, budget, mode="bucketed", n_buckets=nb
-                    ).collect(),
-                )
-            )
-            assert bu == ex, (budget, nb)
+    schema = "doc_id long, text string, score double"
+    rows = [
+        (i, ("tok " * ((i % 7) + 1)).strip(), float((i * 13) % 11))
+        for i in range(40)
+    ]
+    with_nulls = [(i, t, None if i % 9 == 0 else sc) for i, t, sc in rows]
+    for data in (rows, with_nulls):
+        df = spark.createDataFrame(data, schema)
+        for budget in (0, 17, 40, 10_000):
+            want = _token_budget_reference(data, budget)
+            for nb in (4, 1024):
+                got = {
+                    (r["doc_id"], r["n_tokens"])
+                    for r in token_budget_select(
+                        df, budget, n_buckets=nb
+                    ).collect()
+                }
+                assert got == want, (budget, nb)
     # degenerate: every score equal -> one bucket == global window
-    flat = spark.createDataFrame(pdf.assign(score=7))
-    ex = sorted(map(tuple, token_budget_select(flat, 23).collect()))
-    bu = sorted(
-        map(tuple, token_budget_select(flat, 23, mode="bucketed").collect())
-    )
-    assert bu == ex and len(ex) > 0
+    flat = [(i, t, 7.0) for i, t, _ in rows]
+    got = {
+        (r["doc_id"], r["n_tokens"])
+        for r in token_budget_select(
+            spark.createDataFrame(flat, schema), 23
+        ).collect()
+    }
+    assert got == _token_budget_reference(flat, 23) and got
+
+
+def test_token_budget_select_null_scores_rank_last(spark):
+    """NULL scores rank after every scored doc (Spark's desc() order), in
+    their own bucket: they neither join the top bucket nor empty the
+    result when every score is NULL.  A NULL id ranks first among equal
+    scores (ascending order) and is kept like any other id."""
+    from pdfminer_six_spark.ops.clean import token_budget_select
+
+    schema = "doc_id long, text string, score double"
+    texts = ["a b", "c", "d e f", "g"]  # 2, 1, 3, 1 tokens
+    mixed = list(zip([1, 2, 3, 4], texts, [3.0, None, 1.0, 2.0]))
+    got = token_budget_select(spark.createDataFrame(mixed, schema), 5)
+    assert {r["doc_id"] for r in got.collect()} == {1, 4}
+    all_null = [(i, t, None) for i, t, _ in mixed]
+    got = token_budget_select(spark.createDataFrame(all_null, schema), 5)
+    assert {r["doc_id"] for r in got.collect()} == {1, 2}
+    # a NULL id ranks first among tied scores and survives the boundary
+    # bucket's keep-id join
+    tied = [(1, "a b", 3.0), (None, "c", 3.0), (3, "d e f", 3.0)]
+    got = token_budget_select(spark.createDataFrame(tied, schema), 3)
+    assert sorted(
+        (r["doc_id"] is not None, r["doc_id"] or 0) for r in got.collect()
+    ) == [(False, 0), (True, 1)]
 
 
 def test_subword_tokenize_greedy_longest_match(spark):
@@ -2457,10 +2479,12 @@ def test_bpe_train_min_pair_count_stops_early(spark):
 
 
 def test_train_order_sharded_equals_exact_and_is_permutation(spark):
-    """The two-phase sharded global-index path must return IDENTICAL
-    (id, pos, shard) rows to the exact global-window path, regardless of
-    input partitioning; pos must be a contiguous 0..n-1 permutation and
-    shard the round-robin of pos."""
+    """The two-phase sharded global index must return the (id, pos,
+    shard) rows of the exact order — ids sorted by md5(seed:id), computed
+    here in python — regardless of input partitioning; pos must be a
+    contiguous 0..n-1 permutation and shard the round-robin of pos."""
+    import hashlib
+
     import pandas as pd
 
     from pdfminer_six_spark.ops.clean import train_order
@@ -2469,35 +2493,27 @@ def test_train_order_sharded_equals_exact_and_is_permutation(spark):
         "doc_id": list(range(101)),
         "text": ["t"] * 101,
     })).repartition(13)  # deliberately odd partitioning
-    exact = {
+
+    def reference(seed):
+        ids = sorted(
+            range(101),
+            key=lambda i: (hashlib.md5(f"{seed}:{i}".encode()).hexdigest(), i),
+        )
+        return {i: (p, p % 5) for p, i in enumerate(ids)}
+
+    got = {
         r["doc_id"]: (r["pos"], r["shard"])
-        for r in train_order(docs, seed="s1", n_shards=5, mode="exact").collect()
+        for r in train_order(docs, seed="s1", n_shards=5).collect()
     }
-    sharded = {
-        r["doc_id"]: (r["pos"], r["shard"])
-        for r in train_order(docs, seed="s1", n_shards=5, mode="sharded").collect()
-    }
-    assert exact == sharded
-    poss = sorted(p for p, _ in exact.values())
+    assert got == reference("s1")
+    poss = sorted(p for p, _ in got.values())
     assert poss == list(range(101))
-    assert all(s == p % 5 for p, s in exact.values())
     # a different seed produces a different permutation
     other = {
-        r["doc_id"]: r["pos"]
-        for r in train_order(docs, seed="s2", n_shards=5, mode="exact").collect()
+        r["doc_id"]: (r["pos"], r["shard"])
+        for r in train_order(docs, seed="s2", n_shards=5).collect()
     }
-    assert other != {k: p for k, (p, _) in exact.items()}
-
-
-def test_train_order_rejects_unknown_mode(spark):
-    import pandas as pd
-    import pytest as _pytest
-
-    from pdfminer_six_spark.ops.clean import train_order
-
-    docs = spark.createDataFrame(pd.DataFrame({"doc_id": [1], "text": ["x"]}))
-    with _pytest.raises(ValueError):
-        train_order(docs, mode="nope")
+    assert other == reference("s2") and other != got
 
 
 def test_incremental_minhash_exact_copy_near_dup_and_disjoint(spark):
@@ -2615,13 +2631,45 @@ def test_bloom_filter_no_false_negatives_and_reference_equal(spark):
     assert not all(got.values())  # fresh docs exist that pass through
 
 
+def _temperature_mix_reference(rows, budget, seed="tmix-0"):
+    """Pure-python temperature mix over (doc_id, source) rows: isqrt
+    weights, integer targets capped at the source size, and per source
+    the prefix in (md5(seed:id), id) order — a NULL id has a NULL key and
+    ranks first.  Returns the survivors sorted."""
+    import hashlib
+    from math import isqrt
+
+    by_src = {}
+    for i, s in rows:
+        by_src.setdefault(s, []).append(i)
+    weights = {s: isqrt(len(ids)) for s, ids in by_src.items()}
+    wsum = sum(weights.values()) or 1
+    out = []
+    for s, ids in by_src.items():
+        target = min(len(ids), budget * weights[s] // wsum)
+        ranked = sorted(
+            ids,
+            key=lambda i: (
+                i is not None,
+                "" if i is None else hashlib.md5(
+                    f"{seed}:{i}".encode()
+                ).hexdigest(),
+                i or 0,
+            ),
+        )
+        out += [(i, s) for i in ranked[:target]]
+    return sorted(out, key=_mix_row_key)
+
+
+def _mix_row_key(row):
+    return (row[1], row[0] is not None, row[0] or 0)
+
+
 def test_temperature_mix_targets_and_path_equality(spark):
     """Temperature mixing: sqrt-weighted integer targets flatten the
     big source (its share of the mix drops below its corpus share, the
-    small source's share rises); bucketed path equals exact path row
-    for row; survivors within a source are the md5-permutation prefix."""
-    import hashlib
-
+    small source's share rises); survivors within each source are the
+    md5-permutation prefix, computed here in python."""
     import pandas as pd
 
     from pdfminer_six_spark.ops.clean import temperature_mix
@@ -2634,29 +2682,78 @@ def test_temperature_mix_targets_and_path_equality(spark):
         pd.DataFrame(rows, columns=["doc_id", "source"])
     ).repartition(7)
     budget = 200
-    exact = {
-        (r["doc_id"], r["source"])
-        for r in temperature_mix(docs, budget_docs=budget, mode="exact").collect()
-    }
-    bucketed = {
-        (r["doc_id"], r["source"])
-        for r in temperature_mix(docs, budget_docs=budget, mode="bucketed").collect()
-    }
-    assert exact == bucketed
+    got = sorted(
+        ((r["doc_id"], r["source"])
+         for r in temperature_mix(docs, budget_docs=budget).collect()),
+        key=_mix_row_key,
+    )
+    assert got == _temperature_mix_reference(rows, budget)
     # integer targets: w = isqrt(400)=20, isqrt(25)=5; wsum=25
     # web: 200*20//25 = 160, books: 200*5//25 = 40 -> capped at 25
-    n_web = sum(1 for _, s in exact if s == "web")
-    n_books = sum(1 for _, s in exact if s == "books")
+    n_web = sum(1 for _, s in got if s == "web")
+    n_books = sum(1 for _, s in got if s == "books")
     assert (n_web, n_books) == (160, 25)
     # flattening: web is 94% of the corpus but only 86.5% of the mix
     assert n_web / (n_web + n_books) < 400 / 425
-    # survivors are the hash-permutation prefix of each source
-    def keyed(ids):
-        return sorted(
-            ids, key=lambda i: (hashlib.md5(f"tmix-0:{i}".encode()).hexdigest(), i)
+
+
+def test_temperature_mix_null_ids_rank_first(spark):
+    """A NULL id has a NULL md5 key and ranks first in its source: kept
+    whole, cut at the boundary, or dropped with a zero target."""
+    from pdfminer_six_spark.ops.clean import temperature_mix
+
+    rows = (
+        [(i, "web") for i in range(400)] + [(None, "web")]
+        + [(1000 + i, "books") for i in range(25)] + [(None, "books")]
+        + [(5000 + i, "code") for i in range(4)] + [(None, "code")] * 2
+    )
+    docs = spark.createDataFrame(rows, "doc_id long, source string")
+    for budget in (200, 30, 20, 3):
+        got = sorted(
+            ((r["doc_id"], r["source"])
+             for r in temperature_mix(docs, budget_docs=budget).collect()),
+            key=_mix_row_key,
         )
-    web_ids = keyed(range(400))[:160]
-    assert {i for i, s in exact if s == "web"} == set(web_ids)
+        assert got == _temperature_mix_reference(rows, budget), budget
+
+
+@pytest.mark.skipif(
+    not os.path.isdir(ORACLE_SF_DIR), reason=f"{ORACLE_SF_DIR} absent"
+)
+@pytest.mark.parametrize(
+    "name", ["token_budget", "train_order", "temperature_mix"]
+)
+def test_clean_queries_match_duckdb_oracle(spark, name):
+    """The registry entry of each bucketed/sharded clean op equals its
+    DuckDB oracle SQL under scripts/check_oracles.py's canonical hash."""
+    import importlib.util
+
+    import duckdb
+
+    from pdfminer_six_spark.queries import QUERIES
+
+    spec = importlib.util.spec_from_file_location(
+        "check_oracles",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "scripts", "check_oracles.py",
+        ),
+    )
+    oracles = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(oracles)
+
+    fn, sql = QUERIES[name]
+    got = fn(spark, ORACLE_SF_DIR).toPandas()
+    con = duckdb.connect()
+    for t in oracles.TABLES:
+        con.sql(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{ORACLE_SF_DIR}/{t}.parquet')"
+        )
+    want = con.sql(sql).df()
+    assert len(got) == len(want) > 0
+    assert sorted(got.columns) == sorted(want.columns)
+    assert oracles.table_hash(got) == oracles.table_hash(want)
 
 
 def test_normalize_formatting_rules(spark):

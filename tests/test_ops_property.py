@@ -303,16 +303,6 @@ def test_duplicate_spans_equal_python_model_random(spark, seed, k):
     }
     assert got == want
 
-    # the 128-bit dup key (double_hash=True: paired xxhash64 of gram and
-    # reversed gram) is a pure collision-hardening switch — identical
-    # spans at any collision-free scale
-    got2 = {
-        (r["doc_id"], r["span_start"], r["span_end"], r["span_len"],
-         r["n_grams"])
-        for r in duplicate_spans(df, k=k, double_hash=True).collect()
-    }
-    assert got2 == want
-
     # excision over the SAME corpus: remove every spanned char range
     # from the normalized text, keep the rest, docs without spans pass
     # through untouched

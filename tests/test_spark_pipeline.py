@@ -430,8 +430,8 @@ def test_registry_order_contract():
 
 @pytest.fixture(scope="module")
 def pdf_dir(tmp_path_factory):
-    """Ten synthesized PDFs: text, rich and CID ones, one truncated, and
-    one no password opens."""
+    """Eleven synthesized PDFs: text, rich and CID ones, one gray image,
+    one truncated, and one no password opens."""
     from pdfminer_six_spark.datagen.transcripts import write_pdf_corpus
 
     return write_pdf_corpus(str(tmp_path_factory.mktemp("pdfcorpus")))
@@ -459,7 +459,7 @@ def test_pdf_corpus_reader_contract(spark, pdf_dir, tmp_path):
         _basename(r["path"]): r
         for r in extract_pdf_corpus(read_pdf_corpus(spark, pdf_dir)).collect()
     }
-    assert len(rows) == 10
+    assert len(rows) == 11
     failing = {"truncated.pdf": "error", "locked.pdf": "bad_password"}
     for name, r in rows.items():
         path = os.path.join(pdf_dir, name)
@@ -497,7 +497,7 @@ def test_extract_images_corpus_status_rows(spark, pdf_dir):
     """Image extraction keeps the status contract: a document that fails
     yields exactly one row (its path, the status text extraction reports
     for it, its error, nulls elsewhere); a document that parses but
-    holds no image yields none."""
+    holds no image yields none; the gray image yields one ``ok`` row."""
     from pdfminer_six_spark.spark.sources import (
         extract_images_corpus,
         extract_pdf_corpus,
@@ -512,9 +512,38 @@ def test_extract_images_corpus_status_rows(spark, pdf_dir):
     by_name = {}
     for r in rows:
         by_name.setdefault(_basename(r["path"]), []).append(r)
-    assert sorted(by_name) == ["locked.pdf", "truncated.pdf"]
+    assert sorted(by_name) == ["image.pdf", "locked.pdf", "truncated.pdf"]
+    (image,) = by_name.pop("image.pdf")
+    assert (image["status"], image["error"]) == ("ok", "")
     for (r,) in by_name.values():
         assert r["status"] == via_text[r["path"]]
         assert r["status"] not in ("ok", "empty") and r["error"]
         assert [r[c] for c in ("page", "name", "width", "height", "bits",
                                "fmt", "n_bytes", "sha256")] == [None] * 8
+
+
+def test_extract_images_corpus_gray_bmp(spark, pdf_dir):
+    """The 8-bit DeviceGray image of the synthetic corpus is exported by
+    the 8-bit gray BMP branch: its row's size, depth and content hash
+    are those of ``bmp_bytes`` over the raw samples."""
+    import hashlib
+
+    from pdfminer_six_spark.core.image import bmp_bytes
+    from pdfminer_six_spark.datagen.transcripts import GRAY_IMAGE
+    from pdfminer_six_spark.spark.sources import (
+        extract_images_corpus,
+        read_pdf_corpus,
+    )
+
+    w, h, raw = GRAY_IMAGE
+    want = bmp_bytes(8, w, h, raw)
+    (r,) = [
+        r
+        for r in extract_images_corpus(read_pdf_corpus(spark, pdf_dir))
+        .collect()
+        if _basename(r["path"]) == "image.pdf"
+    ]
+    assert (r["status"], r["page"], r["fmt"]) == ("ok", 1, ".bmp")
+    assert (r["width"], r["height"], r["bits"]) == (w, h, 8)
+    assert r["n_bytes"] == len(want)
+    assert r["sha256"] == hashlib.sha256(want).hexdigest()
