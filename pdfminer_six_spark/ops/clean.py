@@ -491,10 +491,8 @@ def funnel_report(
     aggregate producing a single wide row reshaped to per-stage rows by
     ``inline`` on a 1-row relation — one scan, one 6-column reduction,
     no shuffle of any text."""
-    from pdfminer_six_spark.ops.textstats import (
-        gopher_quality_rules,
-        rebalance_for_compute,
-    )
+    from pdfminer_six_spark.ops.textstats import gopher_quality_rules
+    from pdfminer_six_spark.spark.partitions import spread
 
     # r06: rebalance the scan (repetition_signals precedent) — every
     # stage flag is heavy scan-local per-row work (dup-2gram ratio, line
@@ -503,7 +501,7 @@ def funnel_report(
     # whole funnel on one core.  No-op on a many-split corpus.
     feats = c4_line_clean(
         blocklist_filter(
-            gopher_quality_rules(rebalance_for_compute(df), text_col),
+            gopher_quality_rules(spread(df), text_col),
             blocklist,
             text_col,
         ),

@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from pdfminer_six_spark.ops.textstats import normalized_text, tokens_col
+from pdfminer_six_spark.spark.partitions import spread
 
 __all__ = [
     "normalized_text",  # re-export: historical home of the normalizer
@@ -143,7 +144,7 @@ def shingles(
     # zip_with form evaluates each slice once per ROW.  Interleaved
     # best-of A/B at sf0.1, identical output both ways (exceptAll 0/0):
     # the shingle base aggregate dropped 8.2 -> 1.1 s.
-    # NOT rebalanced (cf. textstats.rebalance_for_compute): an interleaved
+    # NOT spread (cf. spark.partitions.spread): an interleaved
     # A/B at sf0.1 measured the round-robin text shuffle SLOWER here
     # (jaccard_pairs 3.3 -> 7.7 s) — the shingle relation feeds equi-joins
     # and doc_id aggregates whose own exchanges already spread the work,
@@ -883,12 +884,10 @@ def duplicate_spans(
     ).filter(F.length("_norm") >= k)
     # The explode amplifies each input row ~len(text)-fold, so upstream
     # partitioning decides the gram stage's parallelism.  A big corpus
-    # scan already yields >= defaultParallelism splits and this branch
-    # never fires; a small/single-file input would otherwise hash every
+    # scan already yields >= defaultParallelism splits and the spread
+    # does nothing; a small/single-file input would otherwise hash every
     # gram on ONE core (measured 5.0s -> 0.3s at sf0.1, local[32]).
-    sc = df.sparkSession.sparkContext
-    if normed.rdd.getNumPartitions() < sc.defaultParallelism:
-        normed = normed.repartition(sc.defaultParallelism)
+    normed = spread(normed)
     s = F.col("_norm")
     # xxhash64, NOT md5: one 8-byte long per gram instead of a 32-char
     # digest string.  The gram stage materializes len(text) hashes per

@@ -47,11 +47,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from pdfminer_six_spark.ops.textstats import (
-    normalized_text,
-    rebalance_for_compute,
-    tokens_col,
-)
+from pdfminer_six_spark.ops.textstats import normalized_text, tokens_col
+from pdfminer_six_spark.spark.partitions import spread
 
 # n-gram order -> (model count column, per-doc n-gram count column)
 _ORDERS = {2: ("cb", "n_bigrams"), 3: ("c3", "n_trigrams")}
@@ -105,7 +102,7 @@ def _ngram_counts(df, n, text_col, id_col, train_mod, train_keep):
     """n-gram count table ``(w1..wn, count)`` over the deterministic
     ``pmod(id, train_mod) < train_keep`` slice — RNG-free, stable under
     retries/speculation (same discipline as ``deterministic_split``)."""
-    df = rebalance_for_compute(df)  # r06: see _lm_scores
+    df = spread(df)  # r06: see _lm_scores
     toks = tokens_col(normalized_text(F.col(text_col)))
     train = df.filter(F.pmod(F.col(id_col), F.lit(train_mod)) < train_keep)
     return (
@@ -159,7 +156,7 @@ def _lm_scores(df, n, project, text_col, id_col, train_mod, train_keep,
     # the first exchange, so an under-split local input runs them on
     # 1-2 cores.  No-op on a many-split corpus (the repetition_signals /
     # hll precedent).  A/B best-of-3 at sf0.1 local[32]: 2.47 -> 1.72 s.
-    df = rebalance_for_compute(df)
+    df = spread(df)
     toks = tokens_col(normalized_text(F.col(text_col)))
     carry = carry or {}
     pos = _ngram_rows(df, toks, n, [id_col], carry)
@@ -463,7 +460,7 @@ def bm25_topk(
     with ``doc_id`` as the final tiebreak; the emitted ``score`` is the
     same rounded value.
     """
-    # r06 note: rebalance_for_compute(corpus) was A/B-measured here and
+    # r06 note: spread(corpus) was A/B-measured here and
     # REJECTED (1.52 -> 2.12 s): unlike the LM scorers, this op reads
     # the corpus relation three times (tf twice, dl once, n_docs count)
     # and an input repartition repeats the full-text shuffle per
@@ -667,7 +664,7 @@ def dsir_weights(
     """
 
     def feats(df: DataFrame):
-        df = rebalance_for_compute(df)  # r06: see ngram_lm_scores
+        df = spread(df)  # r06: see ngram_lm_scores
         toks = tokens_col(normalized_text(F.col(text_col)))
         bg = F.transform(
             _ngrams(toks, 2), lambda b: F.concat_ws(" ", b["w1"], b["w2"])

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from pdfminer_six_spark.spark.partitions import spread
+
 # tiny multi-language stopword sets for the n-gram/stopword language heuristic
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "it"],
@@ -33,22 +35,6 @@ def normalized_text(col):
     """Whitespace-collapsed lowercased text (shared by fingerprints and
     the dedup family; dedup.py re-exports it)."""
     return F.lower(F.regexp_replace(F.trim(col), "\\s+", " "))
-
-
-def rebalance_for_compute(df: DataFrame) -> DataFrame:
-    """Round-robin-repartition a scan whose source parallelism is below
-    the cluster's cores — ONLY then (the pipeline.py rebalance
-    precedent).  Compute-heavy scan-local ops (repetition signals and
-    friends: thousands of per-row array ops, trivial bytes) are
-    single-core-bound when the input is one unsplittable row group (the
-    test parquet's shape); a 100 TB corpus has thousands of splits, so
-    this is a no-op there — the check costs one listing-level
-    getNumPartitions, no job.  Result rows are unchanged (per-row ops
-    commute with repartitioning)."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
 
 
 def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -382,7 +368,7 @@ def hll_distinct_shingles(
     # <= 3*m register partials per task — so an under-split local input
     # (1-2 parquet row groups) would otherwise hash every gram on one
     # core.  No-op on a many-split 100 TB corpus.
-    base = rebalance_for_compute(df.select(F.col(text_col))).select(
+    base = spread(df.select(F.col(text_col))).select(
         tokens_col(normalized_text(F.col(text_col))).alias("_toks")
     )
     t = F.col("_toks")
@@ -961,7 +947,7 @@ def repetition_signals(
     # per-row compute dominates this op (thousands of array ops per doc):
     # spread an under-parallel scan across the cores before computing
     # (no-op whenever the source already has >= cores splits)
-    df = rebalance_for_compute(df.select(id_col, text_col))
+    df = spread(df.select(id_col, text_col))
     text = F.coalesce(F.col(text_col), F.lit(""))
     base = df.select(
         F.col(id_col),
@@ -1517,7 +1503,7 @@ def shannon_entropy(
     would use, so the order-dependent float sum rounds to 6 decimals
     (the ngram_lm / source_kl discipline).
     """
-    df = rebalance_for_compute(df.select(id_col, text_col))
+    df = spread(df.select(id_col, text_col))
     text = normalized_text(F.coalesce(F.col(text_col), F.lit("")))
     base = df.select(F.col(id_col), text.alias("_norm")).select(
         id_col, "_norm", tokens_col(F.col("_norm")).alias("_toks")

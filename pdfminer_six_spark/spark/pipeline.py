@@ -9,13 +9,22 @@ flattened layout relations (chars/lines/boxes) and per-partition lineage.
 Design (SURVEY.md §2.11, §4):
 
 * Extraction is a **row-local map** — no keyed shuffle is required at all.
-  We use ``mapInPandas`` (Arrow-batched; never per-row Python).  The only
-  shuffle in the whole job is an optional round-robin ``repartition(N)`` to
-  rebalance skew (a 500-page payload next to one-liners), and an optional
-  ``repartitionByRange(conv_id, turn_idx)`` before the sink when the
-  stable-output-ordering invariant is requested.
-* Per-executor warm caches: AFM/encodings/CMap resources load once per
-  python worker at module import; fonts are cached per document.
+  We use ``mapInPandas`` (Arrow-batched; never per-row Python).  Every
+  batch entry point plans its input through ``partitions.spread``: a batch
+  input with fewer partitions than ``defaultParallelism`` (one parquet
+  split) gets one round-robin exchange to ``defaultParallelism`` so the
+  kernel fills the cores; ``rebalance_partitions=N`` asks for exactly N
+  (skew: a 500-page payload next to one-liners); an input that is already
+  spread, streaming, or shuffled plans no exchange.  The only other
+  shuffle is an optional ``repartitionByRange(conv_id, turn_idx)`` before
+  the sink when the stable-output-ordering invariant is requested.
+* Per-worker warm state: ``_worker_setup`` runs once per Python worker
+  process before its first batch.  It loads the kernel modules and the
+  AFM/encoding resource tables and then calls ``gc.freeze()``, so the
+  ``gc.collect()`` pyspark's daemon runs after every task skips them.
+  On CPython < 3.13 it also makes ``zipimporter.invalidate_caches`` (which
+  pyspark calls once per task) re-read an archive's directory only when
+  the archive changed.  Fonts are cached per document.
 * One kernel, one status contract.  Every path (per-turn text, the
   split path's page count and page groups, layout, and the binaryFile
   PDF-corpus text and image readers) runs each payload through
@@ -37,6 +46,9 @@ from __future__ import annotations
 
 import base64
 import functools
+import gc
+import os
+import sys
 import time
 from typing import Iterator, Optional
 
@@ -54,6 +66,8 @@ from pyspark.sql.types import (
     TimestampType,
     BooleanType,
 )
+
+from pdfminer_six_spark.spark.partitions import spread
 
 TRANSCRIPTS_SCHEMA = StructType(
     [
@@ -245,6 +259,61 @@ def _kernel(payload, password: str, body, b85: bool = True) -> tuple:
     return result, status, error, (time.perf_counter() - t0) * 1000.0
 
 
+def _cache_zip_directories() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive changed.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` once per task
+    (``worker_util.setup_spark_files``).  On CPython < 3.13 that makes
+    every zipimporter (one per package directory imported from
+    ``pyspark.zip``, ``py4j-*.zip`` or a ``--py-files`` zip) re-read its
+    whole archive directory: about 0.2 s of CPU per task.  The
+    replacement keeps each archive's ``(st_ino, st_size, st_mtime_ns)``
+    as of its last read and reuses ``_zip_directory_cache`` while that
+    stamp holds; a rewritten archive is re-read as before.  The stamp is
+    taken before the read, so a change during the read is seen next
+    time."""
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    stamps = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return reread(self)
+        stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and stamps.get(self.archive) == stamp:
+            self._files = files
+            return
+        reread(self)
+        stamps[self.archive] = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+@functools.cache
+def _worker_setup() -> None:
+    """Once per Python worker process, before its first batch: the zip
+    directory cache fix (CPython < 3.13), then the kernel's modules and
+    resource tables, then ``gc.freeze()`` so the daemon's per-task
+    ``gc.collect()`` no longer walks them.  A module-level function, so
+    the ``mapInPandas`` closure pickles it by reference and the cache
+    lives in the worker's imported module, not in each task's copy."""
+    if sys.version_info < (3, 13):
+        _cache_zip_directories()
+    from pdfminer_six_spark.core import extract, html  # noqa: F401
+    from pdfminer_six_spark.core.encodings import _agl, _latin_tables
+    from pdfminer_six_spark.core.fonts import _afm_db
+
+    _agl()
+    _latin_tables()
+    _afm_db()
+    gc.freeze()
+
+
 def _map_batches(items, emit, schema: StructType, password: str):
     """The batch driver, as a ``mapInPandas`` function: ``items(batch)``
     yields the ``(key, payload, body, b85)`` kernel items of one Arrow
@@ -253,6 +322,7 @@ def _map_batches(items, emit, schema: StructType, password: str):
     cols = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _worker_setup()
         for b in batches:
             rows = [
                 row
@@ -304,13 +374,14 @@ def extract_transcripts(
     rebalance_partitions: Optional[int] = None,
     sort_output: bool = False,
 ) -> DataFrame:
-    """transcripts -> extracted.  Arrow-batched, row-local, shuffle-free
-    (unless rebalancing/sorting is requested)."""
+    """transcripts -> extracted.  Arrow-batched and row-local; the input
+    is planned by ``spread`` (one round-robin exchange when it is under
+    the session's parallelism or ``rebalance_partitions`` is set), and
+    ``sort_output`` adds the range sort before the sink."""
 
-    src = df.select("conv_id", "turn_idx", "text", "tool")
-    if rebalance_partitions:
-        # round-robin: uniform work distribution without a keyed shuffle
-        src = src.repartition(rebalance_partitions)
+    src = spread(
+        df.select("conv_id", "turn_idx", "text", "tool"), rebalance_partitions
+    )
     out = src.mapInPandas(
         _map_batches(_turn_items, _turn_row, EXTRACTED_SCHEMA, password),
         schema=EXTRACTED_SCHEMA,
@@ -723,7 +794,7 @@ def extract_layout_tables(
     overhead, and a handed-off DataFrame outlives the caller's chance to
     unpersist (ADVICE r02).
     """
-    src = df.select("conv_id", "turn_idx", "text", "tool")
+    src = spread(df.select("conv_id", "turn_idx", "text", "tool"))
     union = src.mapInPandas(
         _map_batches(_layout_items, _layout_rows, LAYOUT_UNION_SCHEMA, password),
         schema=LAYOUT_UNION_SCHEMA,

@@ -21,6 +21,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdfminer_six_spark.spark.partitions import spread
 from pdfminer_six_spark.spark.pipeline import _map_batches, _pdf_text
 
 DOC_EXTRACTED_SCHEMA = StructType(
@@ -77,8 +78,9 @@ def extract_pdf_corpus(
     corpus: DataFrame, password: str = ""
 ) -> DataFrame:
     """(path, length, content) -> per-document ``(path, length, text,
-    n_pages, status, error)``, Arrow-batched."""
-    return corpus.select("path", "length", "content").mapInPandas(
+    n_pages, status, error)``, Arrow-batched; the input is planned by
+    ``spread``."""
+    return spread(corpus.select("path", "length", "content")).mapInPandas(
         _map_batches(
             _file_items(_pdf_text), _doc_row, DOC_EXTRACTED_SCHEMA, password
         ),
@@ -164,8 +166,9 @@ def extract_images_corpus(corpus: DataFrame, password: str = "") -> DataFrame:
 
     Status contract: image rows carry status ``ok``; a document without
     images yields no row; a document that fails to extract yields one
-    row with its path, status and error and nulls elsewhere."""
-    return corpus.select("path", "content").mapInPandas(
+    row with its path, status and error and nulls elsewhere.  The input
+    is planned by ``spread``."""
+    return spread(corpus.select("path", "content")).mapInPandas(
         _map_batches(
             _file_items(_page_images), _image_rows, IMAGE_SCHEMA, password
         ),

@@ -13,7 +13,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 
@@ -64,7 +65,12 @@ def main():
     only = set(sys.argv[2:])
     from pdfminer_six_spark.spark.session import build_session
 
-    spark = build_session(app_name="oracle-check", master="local[8]")
+    # the workers import the package too (every Python UDF): give them
+    # the repo root as well, whatever the cwd and PYTHONPATH
+    spark = build_session(
+        app_name="oracle-check", master="local[8]",
+        extra_conf={"spark.executorEnv.PYTHONPATH": ROOT},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.sql(

@@ -48,15 +48,76 @@ def test_broadcast_join_is_broadcast(spark):
 
 
 def test_extraction_pipeline_has_no_shuffle(spark):
-    """The hot path is row-local: scan -> mapInPandas, zero exchanges."""
+    """The hot path is row-local: an input that already has at least
+    ``defaultParallelism`` partitions plans scan -> mapInPandas, zero
+    exchanges."""
     from pdfminer_six_spark.datagen.transcripts import transcripts_pandas
     from pdfminer_six_spark.spark.pipeline import extract_transcripts
 
     df = spark.createDataFrame(transcripts_pandas(n_convs=5))
+    assert df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
     extracted = extract_transcripts(df)  # no rebalance, no sort
     plan = _plan(extracted)
     assert "Exchange" not in plan
     assert "MapInPandas" in plan
+
+
+@pytest.fixture(scope="module")
+def one_split_transcripts(spark, tmp_path_factory):
+    """Transcripts staged as one small parquet file: one input partition,
+    the shape of a single-split scan."""
+    from pdfminer_six_spark.datagen.transcripts import transcripts_pandas
+
+    pdf = transcripts_pandas(n_convs=5)
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    path = str(tmp_path_factory.mktemp("one_split") / "transcripts.parquet")
+    pdf.to_parquet(path, index=False)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    return df
+
+
+def test_one_split_input_spreads_to_default_parallelism(
+    spark, one_split_transcripts
+):
+    """A 1-partition batch input plans exactly one round-robin exchange
+    to ``defaultParallelism``, below the kernel's MapInPandas."""
+    from pdfminer_six_spark.spark.pipeline import extract_transcripts
+
+    n = spark.sparkContext.defaultParallelism
+    plan = _plan(extract_transcripts(one_split_transcripts))
+    assert plan.count("Exchange") == 1
+    assert f"Exchange RoundRobinPartitioning({n})" in plan
+    assert plan.index("MapInPandas") < plan.index("RoundRobinPartitioning")
+
+
+def test_rebalance_partitions_sets_the_spread(spark, one_split_transcripts):
+    """A caller's ``rebalance_partitions`` is the round-robin count."""
+    from pdfminer_six_spark.spark.pipeline import extract_transcripts
+
+    plan = _plan(
+        extract_transcripts(one_split_transcripts, rebalance_partitions=8)
+    )
+    assert plan.count("Exchange") == 1
+    assert "Exchange RoundRobinPartitioning(8)" in plan
+
+
+def test_spread_leaves_streaming_and_shuffled_inputs_alone(
+    spark, one_split_transcripts, tmp_path
+):
+    """A streaming input and a batch input whose plan shuffles come back
+    unchanged, and deciding so runs no Spark job (asking a shuffled
+    plan's partition count would run its shuffle)."""
+    from pdfminer_six_spark.spark.partitions import spread
+    from pdfminer_six_spark.spark.pipeline import TRANSCRIPTS_SCHEMA
+
+    tracker = spark.sparkContext.statusTracker()
+    jobs = len(tracker.getJobIdsForGroup(None))
+    stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(str(tmp_path))
+    assert spread(stream) is stream
+    shuffled = one_split_transcripts.dropDuplicates(["conv_id"])
+    assert spread(shuffled) is shuffled
+    assert len(tracker.getJobIdsForGroup(None)) == jobs
 
 
 def test_topk_uses_take_ordered(spark):

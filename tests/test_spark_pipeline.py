@@ -547,3 +547,50 @@ def test_extract_images_corpus_gray_bmp(spark, pdf_dir):
     assert (r["width"], r["height"], r["bits"]) == (w, h, 8)
     assert r["n_bytes"] == len(want)
     assert r["sha256"] == hashlib.sha256(want).hexdigest()
+
+
+def test_spread_extraction_equals_in_process_kernel(spark, pdf_dir, tmp_path):
+    """The eleven PDFs as turns of a one-split transcripts parquet (plus
+    an HTML and a plain turn) take the round-robin spread to
+    ``defaultParallelism`` tasks; the rows, without ``wall_ms``, equal
+    the in-process kernel's outcome for every turn."""
+    import os
+
+    from pdfminer_six_spark.spark.pipeline import (
+        _TURN_BODIES,
+        _kernel,
+        _turn_row,
+        extract_transcripts,
+    )
+
+    turns = []
+    for i, name in enumerate(sorted(os.listdir(pdf_dir))):
+        with open(os.path.join(pdf_dir, name), "rb") as f:
+            turns.append((name, i, "pdf", base64.b85encode(f.read()).decode()))
+    turns.append(("page.html", 0, "html",
+                  "<html><body><p>Hello spread world.</p></body></html>"))
+    turns.append(("note", 0, None, "plain turn text"))
+    pdf = pd.DataFrame(turns, columns=["conv_id", "turn_idx", "tool", "text"])
+    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
+    path = str(tmp_path / "transcripts.parquet")
+    pdf.to_parquet(path, index=False)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+
+    out = extract_transcripts(df)
+    n = spark.sparkContext.defaultParallelism
+    assert out.rdd.getNumPartitions() == n
+    cols = [c for c in out.columns if c != "wall_ms"]
+    got = sorted(
+        tuple(r[c] if c != "spans" else [tuple(s) for s in r[c]]
+              for c in cols)
+        for r in out.collect()
+    )
+    want = []
+    for conv_id, turn_idx, tool, text in turns:
+        body, b85 = _TURN_BODIES.get(tool, (None, False))
+        for row in _turn_row((conv_id, turn_idx, tool == "pdf"),
+                             *_kernel(text, "", body, b85)):
+            want.append(row[:7] + row[8:])  # without wall_ms
+    assert got == sorted(want)
+    assert {r[5] for r in got} >= {"ok", "error", "bad_password"}

@@ -46,3 +46,69 @@ def test_package_runs_from_zip(tmp_path):
     )
     assert out.returncode == 0, out.stderr
     assert b"ZIPIMPORT_OK" in out.stdout
+
+
+WORKER_SETUP_SCRIPT = """
+import gc, importlib, sys, zipfile, zipimport
+
+zpath = sys.argv[1]
+MODS = {"zpkg/__init__.py": "", "zpkg/sub/__init__.py": "",
+        "zpkg/sub/mod.py": "X = 1\\n"}
+
+
+def write(mods):
+    with zipfile.ZipFile(zpath, "w") as z:
+        for name, src in mods.items():
+            z.writestr(name, src)
+
+
+write(MODS)
+sys.path.insert(0, zpath)
+import zpkg.sub.mod  # one zipimporter per package directory
+
+reads = []
+read_directory = zipimport._read_directory
+
+
+def counting(archive):
+    if archive == zpath:
+        reads.append(archive)
+    return read_directory(archive)
+
+
+zipimport._read_directory = counting
+
+from pdfminer_six_spark.spark.pipeline import _worker_setup
+
+_worker_setup()
+assert gc.get_freeze_count() > 0
+importlib.invalidate_caches()
+first = len(reads)
+importlib.invalidate_caches()
+second = len(reads) - first
+assert first <= 1 and second == 0, (first, second)
+
+write(dict(MODS, **{"zpkg/sub/new.py": "Y = 2\\n"}))
+before = len(reads)
+importlib.invalidate_caches()
+import zpkg.sub.new
+assert zpkg.sub.new.Y == 2
+assert len(reads) > before
+print("WORKER_SETUP_OK")
+"""
+
+
+def test_worker_setup_rereads_a_zip_only_when_it_changed(tmp_path):
+    """The once-per-worker setup: ``importlib.invalidate_caches()`` (which
+    pyspark's worker calls every task) re-reads an unchanged archive's
+    directory at most once and then never; a rewritten archive is re-read
+    and its new module imports; the loaded kernel is frozen out of the
+    collector's generations."""
+    out = subprocess.run(
+        [sys.executable, "-c", WORKER_SETUP_SCRIPT,
+         str(tmp_path / "pkg.zip")],
+        capture_output=True, cwd=str(tmp_path),
+        env=dict(os.environ, PYTHONPATH=REPO),
+    )
+    assert out.returncode == 0, out.stderr
+    assert b"WORKER_SETUP_OK" in out.stdout
