@@ -33,10 +33,14 @@ Resume model: each stage writes its parquet under --workdir/<NN_stage>
 and appends one lineage row to --workdir/lineage.  The stage's row count
 is observed on its own write (``DataFrame.observe``), never re-counted,
 and the driver writes the lineage row itself as one small parquet file,
-renamed into place so a reader never sees half of it: the bookkeeping
-runs no Spark job.  With ``--resume`` every stage whose ``_SUCCESS``
-marker already exists is SKIPPED (read back, never recomputed), so a
-crashed build restarts at exactly the failed stage.  Stage writes are
+renamed into place so a reader never sees half of it.  The next stage
+reads the written parquet back with the schema the write had (every
+column nullable, as parquet stores it), so no job re-infers it from the
+footers: the bookkeeping runs no Spark job, and a stage runs exactly the
+jobs of its plain write.  With ``--resume`` every stage whose
+``_SUCCESS`` marker already exists is SKIPPED (read back with an
+inferred schema, never recomputed), so a crashed build restarts at
+exactly the failed stage.  Stage writes are
 atomic at the Spark commit-protocol level (the marker appears only after
 a complete write), which makes the whole job idempotent at stage
 granularity — rerunning a finished build with --resume recomputes
@@ -121,6 +125,30 @@ def _group_jobs(sc) -> set:
     return set(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _written_schema(dt):
+    """``dt`` as a parquet write stores it: every field, array element
+    and map value nullable (Spark's ``asNullable``)."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _written_schema(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_written_schema(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_written_schema(dt.keyType),
+                       _written_schema(dt.valueType), True)
+    return dt
+
+
+def _read_back(spark, path: str, df):
+    """The parquet that ``df`` was just written to, read with its schema
+    rather than one inferred from the footers (inference runs a job)."""
+    return spark.read.schema(_written_schema(df.schema)).parquet(path)
+
+
 def _write_counted(df, path: str) -> int:
     """Overwrites ``path`` with ``df``; returns the rows written, counted
     by the write itself."""
@@ -173,10 +201,11 @@ class _Build:
             return self.spark.read.parquet(path)
         jobs0 = _group_jobs(self.spark.sparkContext)
         t0 = time.perf_counter()
-        n = _write_counted(build_fn(), path)
+        df = build_fn()
+        n = _write_counted(df, path)
         wall = time.perf_counter() - t0
         self.append_lineage(name, n, wall)
-        out = self.spark.read.parquet(path)
+        out = _read_back(self.spark, path, df)
         self.stats[name] = {
             "action": "computed", "rows": n, "wall_s": round(wall, 3),
             "jobs": len(_group_jobs(self.spark.sparkContext) - jobs0),
@@ -263,7 +292,8 @@ def run(spark, args) -> dict:
         pairs = dd.minhash_near_duplicates(
             keyed.select(F.col("doc_num").alias("doc_id"), "text"),
             threshold=args.threshold,
-        ).checkpoint()
+        )
+        # duplicate_clusters' edge checkpoint cuts the pairs' lineage
         clusters = dd.duplicate_clusters(pairs, reliable_checkpoint=True)
         drop = clusters.filter(
             F.col("doc_id") != F.col("cluster_id")
@@ -350,7 +380,7 @@ def run(spark, args) -> dict:
     rows = _write_counted(packed, args.output)
     # a DISTINCT aggregate cannot be observed on the write
     n_sequences = (
-        spark.read.parquet(args.output)
+        _read_back(spark, args.output, packed)
         .select("shard", "seq_idx").distinct().count()
     )
     b.stats["final"] = {

@@ -97,7 +97,7 @@ def build_arg_parser() -> argparse.ArgumentParser:
                     help="parse each distinct (tool, text) payload once and "
                          "join results back to every referencing turn — wins "
                          "by the attachment repetition factor on corpora that "
-                         "share payloads, costs two shuffles on ones that "
+                         "share payloads, costs three exchanges on ones that "
                          "don't")
     return ap
 

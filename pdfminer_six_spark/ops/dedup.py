@@ -13,7 +13,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from pdfminer_six_spark.ops.textstats import normalized_text, tokens_col
 from pdfminer_six_spark.spark.partitions import spread
@@ -560,10 +560,12 @@ def duplicate_clusters(
     neighbors' labels; converged when no label changes.  Rounds needed =
     cluster diameter, which for near-dup clusters is small (dup clusters
     are near-cliques).  Each round is ONE shuffle (join on node id +
-    min-aggregate); `localCheckpoint` after every round cuts the
-    otherwise-exponential lineage and detaches the loop from the
-    (potentially expensive) pair-producing plan.  For adversarial
-    long-chain graphs the same primitives support the large-star/
+    min-aggregate) and one SQL execution: its `localCheckpoint`, which
+    also counts the labels that moved (an ``Observation``, so the
+    convergence check runs no job of its own).  The checkpoint cuts the
+    otherwise-exponential lineage, and the one on the edges detaches the
+    loop from the (potentially expensive) pair-producing plan.  For
+    adversarial long-chain graphs the same primitives support the large-star/
     small-star alternation (Kiveris et al., "Connected Components in
     MapReduce and Beyond"), which converges in O(log n) rounds; plain
     hash-min is the right default for dedup-shaped graphs.
@@ -607,16 +609,18 @@ def duplicate_clusters(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("label").alias("nbr_min"))
         )
-        merged = ckpt(  # materializes: one action per round
+        moved = Observation()  # delivered by the checkpoint's own job
+        labels = ckpt(
             labels.join(nbr_min, "node", "left")
             .select(
                 "node",
-                F.col("label").alias("old_label"),
                 F.least("label", F.coalesce("nbr_min", "label")).alias("label"),
+                (F.col("nbr_min") < F.col("label")).alias("_moved"),
             )
+            .observe(moved, F.count_if("_moved").alias("n"))
+            .drop("_moved")
         )
-        changed = merged.filter(F.col("label") != F.col("old_label")).count()
-        labels = merged.select("node", "label")
+        changed = moved.get["n"]
         if changed == 0:
             break
     if changed != 0:

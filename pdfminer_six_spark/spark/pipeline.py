@@ -404,8 +404,9 @@ def extract_transcripts_dedup(
     payload runs through the kernel once; results join back to every
     referencing turn.  Transcript corpora repeat attachments heavily (the
     same PDF pasted into thousands of conversations), so kernel cost
-    divides by the repetition factor for the price of two shuffles (the
-    payload distinct + the fingerprint join-back) — at 10^12 turns with
+    divides by the repetition factor for the price of three exchanges
+    (the payload distinct, its round-robin spread to the cores and the
+    fingerprint join-back) — at 10^12 turns with
     shared attachments this is the dominant optimization.  Opt-in
     (jobs/extract.py --dedup-payloads) because on a distinct-payload
     corpus the shuffles buy nothing.
@@ -425,19 +426,20 @@ def extract_transcripts_dedup(
         "conv_id", "turn_idx", F.col("text").alias("_raw"), "tool"
     ).withColumn("_fp", fp)
     # one row per distinct payload; the fingerprint rides in conv_id so
-    # the unmodified kernel passes it through to the join key
-    payloads = (
+    # the unmodified kernel passes it through to the join key.  Adaptive
+    # execution coalesces a small distinct to one partition, which
+    # `spread` cannot see before it runs, so the payloads always get
+    # their own round-robin exchange to the cores.
+    payloads = spread(
         keyed.select(
             F.col("_fp").alias("conv_id"),
             F.lit(0).cast("int").alias("turn_idx"),
             F.col("_raw").alias("text"),
             "tool",
-        )
-        .dropDuplicates(["conv_id"])
+        ).dropDuplicates(["conv_id"]),
+        rebalance_partitions or df.sparkSession.sparkContext.defaultParallelism,
     )
-    per_payload = extract_transcripts(
-        payloads, password=password, rebalance_partitions=rebalance_partitions
-    ).select(
+    per_payload = extract_transcripts(payloads, password=password).select(
         F.col("conv_id").alias("_fp"),
         "text", "n_pages", "n_chars", "status", "error", "wall_ms", "spans",
     )

@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Generated classes kept per JVM: about 4x the ~230 of one corpus-build pass.
+CODEGEN_CACHE_ENTRIES = 1024
+
 
 def build_session(
     app_name: str = "pdfminer-six-spark",
@@ -33,6 +36,15 @@ def build_session(
     instead of paying per-batch Python overhead 8x as often.
     Interleaved A/B at sf0.1 local[32]: extraction 5.33 -> 4.85 s
     (3101 -> 3405 turns/s) going 64 -> 512 rows under the 32 MB cap.
+
+    The generated-code cache holds ``CODEGEN_CACHE_ENTRIES`` classes, not
+    Spark's default 100.  One ``jobs/build.py`` pass compiles 230-233
+    distinct classes (``CodegenMetrics``' compile counter, 300 to 1,000
+    turns), so under the default each pass evicted every class the next
+    pass needed and recompiled all of them: 1.2-2.8 s of Janino time per
+    pass, plus HotSpot JIT-compiling the new bytecode again.  The setting is
+    static: the cache is sized once per JVM, by the first session that
+    generates code, so every session of this package builds here.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8
     if master is None:
@@ -54,6 +66,7 @@ def build_session(
         # tfidf 1.22->1.02, asof 0.98->0.87 s.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows)

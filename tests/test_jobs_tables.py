@@ -549,8 +549,8 @@ def test_build_job_end_to_end_and_failure_injection_resume(
 
 
 def test_build_stage_bookkeeping_runs_no_spark_job(spark, tmp_path):
-    """A build stage runs the jobs of a plain write and read-back of its
-    DataFrame and no more: its row count and lineage row take none."""
+    """A build stage runs exactly the jobs of a plain write of its
+    DataFrame: its row count, lineage row and read-back take none."""
     from pyspark.sql import functions as F
 
     job = _build_job()
@@ -573,11 +573,90 @@ def test_build_stage_bookkeeping_runs_no_spark_job(spark, tmp_path):
     staged = jobs_of("bookkeeping-stage", lambda: b.run_stage(1, "extract",
                                                               lambda: df))
     plain = str(tmp_path / "plain")
-    plain_jobs = jobs_of("bookkeeping-plain", lambda: (
-        df.write.parquet(plain), spark.read.parquet(plain)))
+    plain_jobs = jobs_of("bookkeeping-plain", lambda: df.write.parquet(plain))
     assert staged == plain_jobs
     assert b.stats["extract"]["rows"] == 7
     assert b.stats["extract"]["jobs"] == staged
+
+
+def test_build_read_backs_carry_the_inferred_schema(spark, tmp_path,
+                                                   monkeypatch):
+    """Every stage of a build, and its final output, is read back with
+    the schema ``spark.read.parquet`` would infer from what it wrote."""
+    from pdfminer_six_spark.datagen.transcripts import transcripts_pandas
+
+    job = _build_job()
+    read_back = job._read_back
+    read_backs = {}
+
+    def recording_read_back(spark_, path, df):
+        out = read_back(spark_, path, df)
+        read_backs[path] = out.schema
+        return out
+
+    monkeypatch.setattr(job, "_read_back", recording_read_back)
+    pdf = transcripts_pandas(n_convs=8)
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    inp = tmp_path / "in.parquet"
+    pdf.to_parquet(inp)
+    wd, out = tmp_path / "wd", tmp_path / "out"
+    job.run(spark, job.build_args([
+        "--input", str(inp), "--workdir", str(wd), "--output", str(out),
+        "--seq-len", "128", "--mix-budget", "500",
+    ]))
+    stage_dirs = [str(wd / f"{i:02d}_{s}") for i, s in enumerate(job.STAGES, 1)]
+    assert sorted(read_backs) == sorted(stage_dirs + [str(out)])
+    for path, schema in read_backs.items():
+        assert schema == spark.read.parquet(path).schema, path
+
+
+def test_codegen_cache_holds_a_build_pass(tmp_path):
+    """A second build pass in one session reuses the generated classes of
+    the first instead of compiling them again.
+
+    Runs ``scripts/profile_build.py`` in a fresh JVM, so the first pass
+    compiles every class the build needs whatever this process's JVM has
+    cached.  Under Spark's default 100-entry codegen cache the second
+    pass recompiled about 230 classes, all of the first pass's.  What a
+    steady pass still compiles is the few plan variants adaptive
+    execution picks by stage completion order (a join planned broadcast
+    in one pass and shuffled in the next)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEM="2g")
+    run = subprocess.run(
+        [sys.executable, os.path.join(root, "scripts", "profile_build.py"),
+         "--passes", "2", "--convs", "30"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    first, second = (json.loads(line) for line in run.stdout.splitlines())
+    assert first["compiles"] > 100
+    # ten two-pass sessions of 30 conversations compiled 0-22 classes in
+    # the second pass (median 9) against 230 in the first; under the old
+    # 100-entry cache the second pass compiled all 230 again
+    assert second["compiles"] <= 0.2 * first["compiles"], (first, second)
+    assert second["jobs"] == first["jobs"]
+
+
+def test_every_test_session_builds_through_build_session():
+    """The codegen cache is sized once per JVM, by the first session that
+    generates code, and every test module shares this process's JVM: one
+    session built some other way could leave the whole run on Spark's
+    100-entry default."""
+    import glob
+    import os
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    for path in glob.glob(os.path.join(here, "*.py")):
+        with open(path) as f:
+            src = f.read()
+        for other_way in ("SparkSession" ".builder", "SparkContext" "("):
+            assert other_way not in src, path
 
 
 def test_dedup_job_incremental_two_batches(spark, tmp_path):

@@ -213,6 +213,39 @@ def test_duplicate_clusters_chain_and_islands(spark):
     assert all(out[d]["cluster_size"] == 2 for d in (20, 21))
 
 
+def test_duplicate_clusters_one_execution_per_round(spark):
+    """Each hash-min round runs one SQL execution, its checkpoint, which
+    also observes how many labels moved: no separate count runs.  The
+    4-node chain settles in 3 rounds and a 4th sees no label move; with
+    the edges' checkpoint that is 5 executions."""
+    from pdfminer_six_spark.ops.dedup import duplicate_clusters
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        listed = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            store.executionsList()
+        )
+        return {e.executionId() for e in listed}
+
+    pairs = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_a": [10, 11, 12, 20],
+                "doc_b": [11, 12, 13, 21],
+                "jaccard": [0.9] * 4,
+            }
+        )
+    )
+    before = execution_ids()
+    clusters = duplicate_clusters(pairs)
+    assert len(execution_ids() - before) == 1 + 4
+    got = {(r["doc_id"], r["cluster_id"]) for r in clusters.collect()}
+    assert got == {(d, 10) for d in (10, 11, 12, 13)} | {(20, 20), (21, 20)}
+
+
 def test_duplicate_clusters_reliable_checkpoint_mode(spark, tmp_path):
     """reliable_checkpoint=True routes the per-round lineage cuts through
     the fault-tolerant checkpoint dir (identical labels), and raises

@@ -102,6 +102,48 @@ def test_rebalance_partitions_sets_the_spread(spark, one_split_transcripts):
     assert "Exchange RoundRobinPartitioning(8)" in plan
 
 
+def test_dedup_payloads_spread_after_the_distinct(spark, one_split_transcripts):
+    """--dedup-payloads on a 1-split input: adaptive execution coalesces
+    the small payload distinct to one partition, so the payloads get one
+    round-robin exchange to ``defaultParallelism`` below the kernel; the
+    kernel stage runs that many tasks, and the rows equal the per-turn
+    path's."""
+    from pyspark.sql import functions as F
+
+    from pdfminer_six_spark.spark.pipeline import (
+        extract_transcripts,
+        extract_transcripts_dedup,
+    )
+
+    n = spark.sparkContext.defaultParallelism
+    deduped = extract_transcripts_dedup(one_split_transcripts)
+    plan = _plan(deduped)
+    assert plan.count("RoundRobinPartitioning") == 1
+    assert f"Exchange RoundRobinPartitioning({n})" in plan
+    assert plan.index("MapInPandas") < plan.index("RoundRobinPartitioning")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup-spread", "dedup-spread")
+    try:
+        got = deduped.withColumn("spans", F.to_json("spans")).drop("wall_ms")
+        got_rows = sorted(got.collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup("dedup-spread")
+        for stage in tracker.getJobInfo(job).stageIds
+        if tracker.getStageInfo(stage) is not None
+    ]
+    assert n in tasks, tasks
+    want = extract_transcripts(one_split_transcripts).withColumn(
+        "spans", F.to_json("spans")
+    ).drop("wall_ms")
+    assert got_rows == sorted(want.collect())
+
+
 def test_spread_leaves_streaming_and_shuffled_inputs_alone(
     spark, one_split_transcripts, tmp_path
 ):
