@@ -122,7 +122,11 @@ def _group_jobs(sc) -> set:
     # catch up with the jobs that have already returned
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     group = sc.getLocalProperty("spark.jobGroup.id")
-    return set(sc.statusTracker().getJobIdsForGroup(group))
+    ids = sc._jsc.statusTracker().getJobIdsForGroup(group)
+    # one call for all the ids: iterating the returned array would make
+    # one py4j round trip per id, and a group's ids pile up pass by pass
+    text = sc._jvm.java.util.Arrays.toString(ids)
+    return {int(i) for i in text.strip("[]").split(",") if i.strip()}
 
 
 def _written_schema(dt):

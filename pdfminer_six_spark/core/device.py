@@ -30,6 +30,7 @@ from pdfminer_six_spark.core.layout import (
     apply_matrix_pt,
     apply_matrix_rect,
     mult_matrix,
+    next_seq,
     translate_matrix,
 )
 
@@ -239,6 +240,95 @@ class LayoutDevice(Device):
                     stroke=stroke, fill=fill, evenodd=evenodd, **common,
                 )
             )
+
+    def _render_horizontal(
+        self, seq, matrix, pos, font, fontsize, scaling, charspace,
+        wordspace, rise, dxscale, ncs, graphicstate,
+    ) -> Point:
+        """:meth:`Device._render_horizontal` with :meth:`render_char` and
+        ``LTChar.__init__`` written out.  What every char of the string
+        shares is computed once, at its first char: the matrix's ``a b c
+        d``, their products with the glyph box's fixed corners (x 0, y
+        descent + rise and descent + rise + fontsize), and ``upright``.
+        Each char's matrix (``translate_matrix``), bbox
+        (``apply_matrix_rect``), ``adv`` and ``size`` come from the same
+        float operations and comparisons in the same order."""
+        x, y = pos
+        a, b, c, d, e, f = matrix
+        # the shared values are computed at the first char, where
+        # LTChar.__init__ computed them: a bad font raises at the same point
+        shared = False
+        fontname = font.fontname
+        to_unichr = font.to_unichr
+        char_width = font.char_width
+        add = self.cur_item.add
+        new = object.__new__
+        needcharspace = False
+        for obj in seq:
+            if isinstance(obj, (int, float)):
+                x -= obj * dxscale
+                needcharspace = True
+            elif isinstance(obj, bytes):
+                for cid in font.decode(obj):
+                    if needcharspace:
+                        x += charspace
+                    try:
+                        text = to_unichr(cid)
+                    except UnicodeNotDefined:
+                        text = self.handle_undefined_char(font, cid)
+                    adv = char_width(cid) * fontsize * scaling
+                    if not shared:
+                        shared = True
+                        yc, yd = y * c, y * d
+                        upright = a * d * scaling > 0 and b * c <= 0
+                        by0 = font.get_descent() * fontsize + rise
+                        by1 = by0 + fontsize
+                        cy0, dy0, cy1, dy1 = c * by0, d * by0, c * by1, d * by1
+                        px0, py0 = a * 0 + cy0, b * 0 + dy0
+                        px2, py2 = a * 0 + cy1, b * 0 + dy1
+                    e1 = x * a + yc + e
+                    f1 = x * b + yd + f
+                    ax, bx = a * adv, b * adv
+                    qx0, qy0 = px0 + e1, py0 + f1
+                    qx1, qy1 = ax + cy0 + e1, bx + dy0 + f1
+                    qx2, qy2 = px2 + e1, py2 + f1
+                    qx3, qy3 = ax + cy1 + e1, bx + dy1 + f1
+                    # min()/max() of the four corners, compared in the
+                    # same order without the builtins' call overhead
+                    x0 = qx1 if qx1 < qx0 else qx0
+                    x0 = qx2 if qx2 < x0 else x0
+                    x0 = qx3 if qx3 < x0 else x0
+                    y0 = qy1 if qy1 < qy0 else qy0
+                    y0 = qy2 if qy2 < y0 else y0
+                    y0 = qy3 if qy3 < y0 else y0
+                    x1 = qx1 if qx1 > qx0 else qx0
+                    x1 = qx2 if qx2 > x1 else x1
+                    x1 = qx3 if qx3 > x1 else x1
+                    y1 = qy1 if qy1 > qy0 else qy0
+                    y1 = qy2 if qy2 > y1 else y1
+                    y1 = qy3 if qy3 > y1 else y1
+                    item = new(LTChar)
+                    item._text = text
+                    item.matrix = (a, b, c, d, e1, f1)
+                    item.fontname = fontname
+                    item.ncs = ncs
+                    item.graphicstate = graphicstate
+                    item.adv = adv
+                    item.upright = upright
+                    item.seq = next_seq()
+                    item.x0 = x0
+                    item.y0 = y0
+                    item.x1 = x1
+                    item.y1 = y1
+                    item.width = x1 - x0
+                    item.height = item.size = y1 - y0
+                    item.bbox = (x0, y0, x1, y1)
+                    add(item)
+                    x += adv
+                    if cid == 32 and wordspace:
+                        x += wordspace
+                    needcharspace = True
+        return (x, y)
 
     def render_char(
         self, matrix, font: Font, fontsize, scaling, rise, cid, ncs, graphicstate

@@ -9,6 +9,12 @@ tie-breaking uses an explicit monotonically increasing creation sequence
 instead of CPython ``id()`` (reference layout.py:827-830), making results
 deterministic across processes — a requirement for distributed execution
 where per-turn output must not depend on executor memory layout.
+
+The output is the reference's; the work is cut where that is exact.  L5
+(``group_textboxes``) reproduces the reference heap's merge order without
+heaping all pairs, and keeps the heap (``_group_textboxes_heap``) only for
+pages with a non-finite coordinate.  L1 (``group_objects``) writes the
+overlap predicates out inline and sets each line's bbox once.
 """
 
 from __future__ import annotations
@@ -108,7 +114,8 @@ class LAParams:
         self.all_texts = all_texts
 
 
-_seq_counter = itertools.count(1)
+# creation sequence: the deterministic tie-break of L5's merge order
+next_seq = itertools.count(1).__next__
 
 
 class LTItem:
@@ -131,7 +138,7 @@ class LTComponent(LTItem):
     __slots__ = ("seq", "x0", "y0", "x1", "y1", "width", "height", "bbox")
 
     def __init__(self, bbox: Rect) -> None:
-        self.seq = next(_seq_counter)  # deterministic heap tiebreak
+        self.seq = next_seq()  # deterministic heap tiebreak
         self.set_bbox(bbox)
 
     def set_bbox(self, bbox: Rect) -> None:
@@ -359,12 +366,31 @@ class LTTextLineHorizontal(LTTextLine):
         self._x1: float = +INF
 
     def add(self, obj: LTComponent) -> None:
-        if isinstance(obj, LTChar) and self.word_margin:
-            margin = self.word_margin * max(obj.width, obj.height)
-            if self._x1 < obj.x0 - margin:
-                LTContainer.add(self, LTAnno(" "))
-        self._x1 = obj.x1
-        super().add(obj)
+        self.extend((obj,))
+
+    def extend(self, objs) -> None:
+        """Add each object in turn: an ``LTAnno(" ")`` before a char that
+        starts more than ``word_margin`` of its size after the previous
+        object's end.  The bbox is set once, at the end, from the same
+        min/max fold in the same order as one ``add`` at a time."""
+        children = self._objs
+        wm = self.word_margin
+        x0, y0, x1, y1 = self.x0, self.y0, self.x1, self.y1
+        last_x1 = self._x1
+        for obj in objs:
+            ox0, oy0, ox1, oy1 = obj.x0, obj.y0, obj.x1, obj.y1
+            if wm and isinstance(obj, LTChar):
+                w, h = obj.width, obj.height
+                if last_x1 < ox0 - wm * (h if h > w else w):
+                    children.append(LTAnno(" "))
+            last_x1 = ox1
+            children.append(obj)
+            x0 = x0 if x0 < ox0 else ox0
+            y0 = y0 if y0 < oy0 else oy0
+            x1 = x1 if x1 > ox1 else ox1
+            y1 = y1 if y1 > oy1 else oy1
+        self._x1 = last_x1
+        self.set_bbox((x0, y0, x1, y1))
 
     def find_neighbors(self, plane: "Plane", ratio: float) -> List[LTTextLine]:
         d = ratio * self.height
@@ -390,12 +416,28 @@ class LTTextLineVertical(LTTextLine):
         self._y0: float = -INF
 
     def add(self, obj: LTComponent) -> None:
-        if isinstance(obj, LTChar) and self.word_margin:
-            margin = self.word_margin * max(obj.width, obj.height)
-            if obj.y1 + margin < self._y0:
-                LTContainer.add(self, LTAnno(" "))
-        self._y0 = obj.y0
-        super().add(obj)
+        self.extend((obj,))
+
+    def extend(self, objs) -> None:
+        """:meth:`LTTextLineHorizontal.extend` down the y axis."""
+        children = self._objs
+        wm = self.word_margin
+        x0, y0, x1, y1 = self.x0, self.y0, self.x1, self.y1
+        last_y0 = self._y0
+        for obj in objs:
+            ox0, oy0, ox1, oy1 = obj.x0, obj.y0, obj.x1, obj.y1
+            if wm and isinstance(obj, LTChar):
+                w, h = obj.width, obj.height
+                if oy1 + wm * (h if h > w else w) < last_y0:
+                    children.append(LTAnno(" "))
+            last_y0 = oy0
+            children.append(obj)
+            x0 = x0 if x0 < ox0 else ox0
+            y0 = y0 if y0 < oy0 else oy0
+            x1 = x1 if x1 > ox1 else ox1
+            y1 = y1 if y1 > oy1 else oy1
+        self._y0 = last_y0
+        self.set_bbox((x0, y0, x1, y1))
 
     def find_neighbors(self, plane: "Plane", ratio: float) -> List[LTTextLine]:
         d = ratio * self.width
@@ -556,6 +598,11 @@ class Plane:
                 yield obj
 
 
+# L5 takes the heap path when a coordinate is beyond this: areas of
+# coordinates within it stay finite, so every distance compares totally
+_COORD_LIMIT = 1e150
+
+
 def _fsplit(pred, objs):
     t, f = [], []
     for o in objs:
@@ -569,86 +616,284 @@ class LTLayoutContainer(LTContainer):
         self.groups: Optional[List[LTTextGroup]] = None
 
     # L1: char -> line grouping, single pass in emission order
-    def group_objects(self, laparams: LAParams, objs) -> Iterator[LTTextLine]:
-        obj0 = None
+    def group_objects(self, laparams: LAParams, objs) -> List[LTTextLine]:
+        """Group consecutive chars into lines.  Two neighbours share a
+        horizontal line (``halign``) when they overlap vertically by more
+        than ``line_overlap`` of the smaller height and lie closer than
+        ``char_margin`` widths; ``valign`` is the same across the axes,
+        under ``detect_vertical``.  The overlap/distance predicates of
+        :class:`LTComponent` are written out inline with the same float
+        operations in the same order (``b if b < a else a`` is exactly
+        ``min(a, b)``), and each line gets its chars at once when it ends
+        (:meth:`LTTextLineHorizontal.extend`).  ``objs`` are LTChars and
+        not empty."""
+        line_overlap = laparams.line_overlap
+        char_margin = laparams.char_margin
+        detect_vertical = laparams.detect_vertical
+        word_margin = laparams.word_margin
+        lines: List[LTTextLine] = []
         line: Optional[LTTextLine] = None
-        for obj1 in objs:
-            if obj0 is not None:
-                halign = (
-                    obj0.is_voverlap(obj1)
-                    and min(obj0.height, obj1.height) * laparams.line_overlap
-                    < obj0.voverlap(obj1)
-                    and obj0.hdistance(obj1)
-                    < max(obj0.width, obj1.width) * laparams.char_margin
-                )
-                valign = (
-                    laparams.detect_vertical
-                    and obj0.is_hoverlap(obj1)
-                    and min(obj0.width, obj1.width) * laparams.line_overlap
-                    < obj0.hoverlap(obj1)
-                    and obj0.vdistance(obj1)
-                    < max(obj0.height, obj1.height) * laparams.char_margin
-                )
-                if (halign and isinstance(line, LTTextLineHorizontal)) or (
-                    valign and isinstance(line, LTTextLineVertical)
-                ):
-                    line.add(obj1)
-                elif line is not None:
-                    yield line
-                    line = None
-                elif valign and not halign:
-                    line = LTTextLineVertical(laparams.word_margin)
-                    line.add(obj0)
-                    line.add(obj1)
-                elif halign and not valign:
-                    line = LTTextLineHorizontal(laparams.word_margin)
-                    line.add(obj0)
-                    line.add(obj1)
-                else:
-                    line = LTTextLineHorizontal(laparams.word_margin)
-                    line.add(obj0)
-                    yield line
-                    line = None
+        vertical = False  # the kind of ``line`` while there is one
+        chars: List[LTChar] = []
+        it = iter(objs)
+        obj0 = next(it)
+        ax0, ay0, ax1, ay1 = obj0.x0, obj0.y0, obj0.x1, obj0.y1
+        aw, ah = obj0.width, obj0.height
+        for obj1 in it:
+            bx0, by0, bx1, by1 = obj1.x0, obj1.y0, obj1.x1, obj1.y1
+            bw, bh = obj1.width, obj1.height
+            voverlaps = by0 <= ay1 and ay0 <= by1
+            hoverlaps = bx0 <= ax1 and ax0 <= bx1
+            halign = False
+            if voverlaps:
+                p, q = abs(ay0 - by1), abs(ay1 - by0)
+                if (bh if bh < ah else ah) * line_overlap < (q if q < p else p):
+                    if hoverlaps:
+                        hdist = 0
+                    else:
+                        p, q = abs(ax0 - bx1), abs(ax1 - bx0)
+                        hdist = q if q < p else p
+                    halign = hdist < (bw if bw > aw else aw) * char_margin
+            valign = detect_vertical
+            if valign:
+                valign = False
+                if hoverlaps:
+                    p, q = abs(ax0 - bx1), abs(ax1 - bx0)
+                    if (bw if bw < aw else aw) * line_overlap < (q if q < p else p):
+                        if voverlaps:
+                            vdist = 0
+                        else:
+                            p, q = abs(ay0 - by1), abs(ay1 - by0)
+                            vdist = q if q < p else p
+                        valign = vdist < (bh if bh > ah else ah) * char_margin
+            if line is not None and (valign if vertical else halign):
+                chars.append(obj1)
+            elif line is not None:
+                line.extend(chars)
+                lines.append(line)
+                line = None
+            elif valign and not halign:
+                line = LTTextLineVertical(word_margin)
+                vertical = True
+                chars = [obj0, obj1]
+            elif halign and not valign:
+                line = LTTextLineHorizontal(word_margin)
+                vertical = False
+                chars = [obj0, obj1]
+            else:
+                line = LTTextLineHorizontal(word_margin)
+                line.extend([obj0])
+                lines.append(line)
+                line = None
             obj0 = obj1
+            ax0, ay0, ax1, ay1, aw, ah = bx0, by0, bx1, by1, bw, bh
         if line is None:
-            line = LTTextLineHorizontal(laparams.word_margin)
-            line.add(obj0)
-        yield line
+            line = LTTextLineHorizontal(word_margin)
+            chars = [obj0]
+        line.extend(chars)
+        lines.append(line)
+        return lines
 
     # L3: line -> box grouping via spatial neighbor search
     def group_textlines(self, laparams: LAParams, lines) -> Iterator[LTTextBox]:
+        """Each line, with its neighbours and their boxes' lines, makes a
+        new box, as in the reference; a box that a later line takes over
+        is dropped.  Its lines are recorded as it is made and added only
+        to the boxes that are kept, in the same order, so the bboxes come
+        out the same without adding each line again at every take-over.
+        Every box is still created (and numbered) when the reference
+        creates it."""
         plane = Plane(self.bbox)
         plane.extend(lines)
-        boxes: Dict[Any, LTTextBox] = {}
+        boxes: Dict[Any, Tuple[LTTextBox, List[LTTextLine]]] = {}
         for line in lines:
             neighbors = line.find_neighbors(plane, laparams.line_margin)
             members = [line]
             for obj1 in neighbors:
                 members.append(obj1)
                 if obj1 in boxes:
-                    members.extend(boxes.pop(obj1))
+                    members.extend(boxes.pop(obj1)[1])
             box: LTTextBox
             if isinstance(line, LTTextLineHorizontal):
                 box = LTTextBoxHorizontal()
             else:
                 box = LTTextBoxVertical()
             # dedupe by identity preserving order (objects hash by id)
-            for obj in dict.fromkeys(members):
-                box.add(obj)
-                boxes[obj] = box
+            entry = (box, list(dict.fromkeys(members)))
+            for obj in entry[1]:
+                boxes[obj] = entry
         done = set()
         for line in lines:
             if line not in boxes:
                 continue
-            box = boxes[line]
+            box, members = boxes[line]
             if id(box) in done:
                 continue
             done.add(id(box))
+            box.extend(members)
             if not box.is_empty():
                 yield box
 
     # L5: hierarchical agglomerative box grouping
     def group_textboxes(self, laparams: LAParams, boxes) -> List[LTTextGroup]:
+        """Merge the two closest boxes, over and over, until one group is
+        left; the merge order is exactly :meth:`_group_textboxes_heap`'s.
+
+        That function heaps every pair ``(skip, d, s1, s2)``: ``d`` the
+        area the union bbox adds, ``s1``/``s2`` the creation seqs in the
+        pair's orientation (list order for two initial boxes, ``(group,
+        other)`` for a group's pairs).  The next merge is the live,
+        not-skipped pair with the least ``(d, s1, s2)``; if its union
+        bbox holds another live box (``isany``, asked of the plane at that
+        moment) the pair is marked skip instead; only when no not-skipped
+        pair is left does the least skipped pair merge.
+
+        Here each live item owns its pairs with the items before it (list
+        order, then creation order), and only its best owned pair is
+        heaped.  An item's owned pairs only ever leave (a partner merges,
+        or the pair is skipped); none joins, as a new group owns all of
+        its pairs.  So a heaped best is a lower bound of its owner's true
+        best, and an entry whose partner has merged is recomputed only
+        when it reaches the top.  This takes O(n) memory and one pass over
+        the live items per new group and per recompute, instead of heaping
+        all n(n-1)/2 pairs.
+
+        With a non-finite or huge coordinate ``d`` can be NaN and the heap
+        order has no total order to copy: such a page keeps the heap."""
+        lim = _COORD_LIMIT
+        for b in boxes:
+            if not (-lim <= b.x0 <= lim and -lim <= b.y0 <= lim
+                    and -lim <= b.x1 <= lim and -lim <= b.y1 <= lim):
+                return self._group_textboxes_heap(laparams, boxes)
+        plane = Plane(self.bbox)
+        plane.extend(boxes)
+        items = list(boxes)
+        n_boxes = len(items)
+        # per item, by rank: (rank, x0, y0, x1, y1, area, seq)
+        recs = [
+            (r, o.x0, o.y0, o.x1, o.y1, o.width * o.height, o.seq)
+            for r, o in enumerate(items)
+        ]
+        live = list(recs)  # the live items' records, in rank order
+        alive = [True] * n_boxes
+        skipped: List[Optional[Set[int]]] = [None] * n_boxes
+        best: List[Any] = [None] * n_boxes  # each owner's heaped entry
+        heap: List[Any] = []
+        skip_heap: List[Any] = []
+
+        def rebest(rec) -> None:
+            # heap the owner's least (d, s1, s2) over its live, not-skipped
+            # pairs, as (d, s1, s2, owner rank, partner rank)
+            r, x0, y0, x1, y1, a, s = rec
+            skip = skipped[r]
+            bd = bs = bq = None
+            if r < n_boxes:  # pair (earlier box, r): the owner is o2
+                for q, qx0, qy0, qx1, qy1, qa, qs in live:
+                    if q >= r:
+                        break
+                    if skip is not None and q in skip:
+                        continue
+                    d = (
+                        ((x1 if x1 > qx1 else qx1) - (x0 if x0 < qx0 else qx0))
+                        * ((y1 if y1 > qy1 else qy1) - (y0 if y0 < qy0 else qy0))
+                        - qa
+                        - a
+                    )
+                    if bd is None or d < bd or (d == bd and qs < bs):
+                        bd, bs, bq = d, qs, q
+                entry = None if bq is None else (bd, bs, s, r, bq)
+            else:  # pair (group r, other): the owner is o1
+                for q, qx0, qy0, qx1, qy1, qa, qs in live:
+                    if q >= r:
+                        break
+                    if skip is not None and q in skip:
+                        continue
+                    d = (
+                        ((qx1 if qx1 > x1 else x1) - (qx0 if qx0 < x0 else x0))
+                        * ((qy1 if qy1 > y1 else y1) - (qy0 if qy0 < y0 else y0))
+                        - a
+                        - qa
+                    )
+                    if bd is None or d < bd or (d == bd and qs < bs):
+                        bd, bs, bq = d, qs, q
+                entry = None if bq is None else (bd, s, bs, r, bq)
+            best[r] = entry
+            if entry is not None:
+                heapq.heappush(heap, entry)
+
+        def isany(obj1, obj2) -> bool:
+            x0 = min(obj1.x0, obj2.x0)
+            y0 = min(obj1.y0, obj2.y0)
+            x1 = max(obj1.x1, obj2.x1)
+            y1 = max(obj1.y1, obj2.y1)
+            for obj in plane.find((x0, y0, x1, y1)):
+                if obj is not obj1 and obj is not obj2:
+                    return True
+            return False
+
+        for rec in recs[1:]:
+            rebest(rec)
+        while True:
+            while heap:
+                entry = heap[0]
+                r = entry[3]
+                if not alive[r] or best[r] is not entry:
+                    heapq.heappop(heap)
+                elif not alive[entry[4]]:
+                    heapq.heappop(heap)
+                    rebest(recs[r])
+                else:
+                    break
+            if heap:
+                entry = heapq.heappop(heap)
+            else:
+                while skip_heap:
+                    entry = heapq.heappop(skip_heap)
+                    if alive[entry[3]] and alive[entry[4]]:
+                        break
+                else:
+                    break
+            r, q = entry[3], entry[4]
+            if r < n_boxes:
+                obj1, obj2 = items[q], items[r]
+            else:
+                obj1, obj2 = items[r], items[q]
+            # a heaped best is asked isany; a skipped pair merges as it is
+            if best[r] is entry and isany(obj1, obj2):
+                if skipped[r] is None:
+                    skipped[r] = set()
+                skipped[r].add(q)
+                heapq.heappush(skip_heap, entry)
+                rebest(recs[r])
+                continue
+            if isinstance(obj1, (LTTextBoxVertical, LTTextGroupTBRL)) or isinstance(
+                obj2, (LTTextBoxVertical, LTTextGroupTBRL)
+            ):
+                group: LTTextGroup = LTTextGroupTBRL([obj1, obj2])
+            else:
+                group = LTTextGroupLRTB([obj1, obj2])
+            plane.remove(obj1)
+            plane.remove(obj2)
+            alive[r] = alive[q] = False
+            live = [rec for rec in live if rec[0] != r and rec[0] != q]
+            rec = (
+                len(items), group.x0, group.y0, group.x1, group.y1,
+                group.width * group.height, group.seq,
+            )
+            items.append(group)
+            recs.append(rec)
+            alive.append(True)
+            skipped.append(None)
+            best.append(None)
+            rebest(rec)
+            live.append(rec)
+            plane.add(group)
+        return list(plane)
+
+    def _group_textboxes_heap(self, laparams: LAParams, boxes) -> List[LTTextGroup]:
+        """L5 as the reference writes it: every pair on one heap.  Kept
+        for pages with a non-finite or huge coordinate, and as the oracle
+        that :meth:`group_textboxes` is tested against."""
         plane = Plane(self.bbox)
 
         def dist(o1, o2) -> float:

@@ -210,24 +210,33 @@ def jaccard_pairs(
         # id list ONCE and generates its <= max_df^2/2 pairs inside the
         # row, instead of hot-set agg + broadcast anti-join + self-join
         # (which read the cached shingle relation four times and
-        # shuffled it twice more).  The cut itself becomes a free
-        # size(ds) filter; per-doc sizes re-derive by exploding the kept
-        # lists.  Per-shingle fan-out is BOUNDED by the cut (that is the
-        # whole point of max_df), so no single task sees more than
-        # max_df^2/2 generated pairs per shingle — the skew story is
-        # identical to the join formulation, whose per-key join fan-out
-        # was the same d^2/2.  Rows are provably identical: each kept
-        # shingle contributes exactly one (least, greatest) pair per
+        # shuffled it twice more).  Per-doc sizes re-derive by exploding
+        # the kept lists.  Per-shingle fan-out is BOUNDED by the cut
+        # (that is the whole point of max_df), so no single task sees
+        # more than max_df^2/2 generated pairs per shingle — the skew
+        # story is identical to the join formulation, whose per-key join
+        # fan-out was the same d^2/2.  Rows are provably identical: each
+        # kept shingle contributes exactly one (least, greatest) pair per
         # co-occurring doc pair, which is what the a<b equi-join
         # counted.  kept is persisted — sizes and the pair explode both
         # consume it, and it is the post-cut grouped relation (bounded
         # lists), not the raw corpus.
+        #
+        # The cut counts each shingle's docs over a window BEFORE the
+        # collect_list: a hot shingle's rows then sit in the window's
+        # spillable buffer, not in one collect_list array of its whole
+        # doc list that the cut would drop anyway.  count(doc_id) skips
+        # NULLs as collect_list does, so it equals size(ds).  The window
+        # shuffles on shingle, which the grouping reuses.
         kept = (
             shingles(df, text_col, n)
             .select("doc_id", F.xxhash64("shingle").alias("shingle"))
+            .withColumn(
+                "df", F.count("doc_id").over(Window.partitionBy("shingle"))
+            )
+            .filter(F.col("df") <= max_df)
             .groupBy("shingle")
             .agg(F.collect_list("doc_id").alias("ds"))
-            .filter(F.size("ds") <= max_df)
             .persist()
         )
         sizes = (

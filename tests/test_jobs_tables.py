@@ -579,6 +579,40 @@ def test_build_stage_bookkeeping_runs_no_spark_job(spark, tmp_path):
     assert b.stats["extract"]["jobs"] == staged
 
 
+def test_group_jobs_makes_a_fixed_number_of_py4j_calls(spark):
+    """Listing a job group's ids costs the same few py4j round trips
+    whether the group ran two jobs or twenty."""
+    job = _build_job()
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    send = client.send_command
+
+    def calls_for(n_jobs):
+        group = f"group-jobs-{n_jobs}"
+        sc.setJobGroup(group, group)
+        try:
+            for _ in range(n_jobs):
+                spark.range(3).count()
+            n = [0]
+
+            def counting(*args, **kwargs):
+                n[0] += 1
+                return send(*args, **kwargs)
+
+            client.send_command = counting
+            try:
+                ids = job._group_jobs(sc)
+            finally:
+                del client.send_command
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert ids == set(sc.statusTracker().getJobIdsForGroup(group))
+        assert len(ids) >= n_jobs
+        return n[0]
+
+    assert calls_for(20) == calls_for(2)
+
+
 def test_build_read_backs_carry_the_inferred_schema(spark, tmp_path,
                                                    monkeypatch):
     """Every stage of a build, and its final output, is read back with

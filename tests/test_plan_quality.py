@@ -524,3 +524,22 @@ def test_salted_agg_two_exchanges_and_skew_spread(spark):
         .count()
     )
     assert n_buckets >= 6
+
+
+
+def test_jaccard_df_cut_filters_before_collect_list(spark):
+    """jaccard_pairs' max_df cut drops a hot shingle by a count BEFORE
+    its doc ids are gathered: under the collect_list aggregation sits the
+    cut's Filter, over the counting Window, over the one shuffle on
+    shingle (which the aggregation reuses)."""
+    from pdfminer_six_spark.ops.dedup import jaccard_pairs
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    lines = _plan(jaccard_pairs(docs, threshold=0.6, max_df=100)).split("\n")
+    agg = next(i for i, ln in enumerate(lines) if "partial_collect_list" in ln)
+    below = [ln.strip(" :+-") for ln in lines[agg + 1:agg + 6]]
+    assert below[0].startswith("Project")
+    assert below[1].startswith("Filter") and "<= 100" in below[1]
+    assert below[2].startswith("Window [count(doc_id")
+    assert below[3].startswith("Sort")
+    assert below[4].startswith("Exchange hashpartitioning(shingle")
