@@ -85,13 +85,12 @@ def run(spark, args) -> dict:
 
     from pdfminer_six_spark.ops import dedup
 
-    checkpoint_dir = getattr(args, "checkpoint_dir", None)
-    if checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    if args.checkpoint_dir:
+        spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
 
     docs = spark.read.parquet(args.input)
     if args.method == "incremental":
-        if getattr(args, "index", None):
+        if args.index:
             seen = spark.read.parquet(args.index).select("fp")
         else:
             seen = spark.createDataFrame([], "fp string")
@@ -100,7 +99,7 @@ def run(spark, args) -> dict:
         # the survivor sink and the index update
         survivors.write.mode("overwrite").parquet(args.output)
         survivors = spark.read.parquet(args.output)
-        if getattr(args, "index_output", None):
+        if args.index_output:
             seen.unionByName(survivors.select("fp")).distinct().write.mode(
                 "overwrite"
             ).parquet(args.index_output)
@@ -122,11 +121,11 @@ def run(spark, args) -> dict:
     # the fault-tolerant checkpoint dir when one is configured (otherwise
     # the executor-local blocks would stay a single point of failure and
     # defeat --checkpoint-dir's whole promise)
-    pairs = pairs.checkpoint() if checkpoint_dir else pairs.localCheckpoint()
+    pairs = pairs.checkpoint() if args.checkpoint_dir else pairs.localCheckpoint()
     if args.pairs_output:
         pairs.write.mode("overwrite").parquet(args.pairs_output)
     clusters = dedup.duplicate_clusters(
-        pairs, reliable_checkpoint=bool(checkpoint_dir)
+        pairs, reliable_checkpoint=bool(args.checkpoint_dir)
     )
     if args.clusters_output:
         clusters.write.mode("overwrite").parquet(args.clusters_output)

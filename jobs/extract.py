@@ -123,8 +123,8 @@ def run(spark, args, ap=None) -> None:
         resume_filter,
     )
 
-    dedup_payloads = getattr(args, "dedup_payloads", False)
-    split_pages = getattr(args, "split_pages", 0)
+    dedup_payloads = args.dedup_payloads
+    split_pages = args.split_pages
     if dedup_payloads and (args.images or args.streaming):
         # fail loudly instead of silently running the per-turn path — a
         # user counting on the payload-dedup win must know it didn't apply
@@ -132,7 +132,7 @@ def run(spark, args, ap=None) -> None:
             "--dedup-payloads applies only to the batch transcript path "
             "(not --images/--streaming)"
         )
-    if split_pages and getattr(args, "pages_per_group", 8) < 1:
+    if split_pages and args.pages_per_group < 1:
         # fail at argparse time, not DIVIDE_BY_ZERO deep in the job (or,
         # with ANSI overridden off, a silent zero-group explode that
         # drops every oversized payload from the output)
@@ -163,9 +163,7 @@ def run(spark, args, ap=None) -> None:
 
         if not args.checkpoint:
             (ap.error if ap else _raise_usage)("--streaming requires --checkpoint")
-        q = streaming_extract(
-            spark, args.input, args.output, args.checkpoint, trigger_once=True
-        )
+        q = streaming_extract(spark, args.input, args.output, args.checkpoint)
         q.awaitTermination()
         return
 
@@ -183,15 +181,13 @@ def run(spark, args, ap=None) -> None:
             if ("PATH_NOT_FOUND" not in str(e)
                     and "TABLE_OR_VIEW_NOT_FOUND" not in str(e)):
                 raise
-    # getattr above: run() is also driven with hand-built Namespaces
-    # (tests, embedding callers) that may predate the flags
     if dedup_payloads:
         extract_fn = extract_transcripts_dedup
     elif split_pages:
         extract_fn = functools.partial(
             extract_transcripts_split_pages,
             split_chars=split_pages,
-            pages_per_group=getattr(args, "pages_per_group", 8),
+            pages_per_group=args.pages_per_group,
         )
     else:
         extract_fn = extract_transcripts

@@ -365,23 +365,20 @@ class TextDevice(LayoutDevice):
         super().__init__(laparams=laparams)
         self.parts: List[str] = []
 
-    def write_text(self, text: str) -> None:
-        # mirror the reference's utf-8 encode/ignore round-trip so
-        # unencodable codepoints disappear identically
-        self.parts.append(text.encode("utf-8", "ignore").decode("utf-8"))
-
     def receive_layout(self, ltpage: LTPage) -> None:
+        parts = self.parts
+
         def render(item) -> None:
             if isinstance(item, LTContainer):
                 for child in item:
                     render(child)
             elif isinstance(item, LTText):
-                self.write_text(item.get_text())
+                parts.append(item.get_text())
             if isinstance(item, LTTextBox):
-                self.write_text("\n")
+                parts.append("\n")
 
         render(ltpage)
-        self.write_text("\f")
+        parts.append("\f")
 
     # text-only: skip recording paths/images (reference converter.py:365-380)
     def render_image(self, name: str, stream) -> None:
@@ -391,4 +388,8 @@ class TextDevice(LayoutDevice):
         pass
 
     def get_text(self) -> str:
-        return "".join(self.parts)
+        # the reference writes each text through a utf-8 encode/ignore
+        # round trip; "ignore" drops each unencodable code point (a lone
+        # surrogate) on its own, so one round trip over the joined text
+        # removes the same ones
+        return "".join(self.parts).encode("utf-8", "ignore").decode("utf-8")

@@ -115,7 +115,6 @@ def shingles(
     df: DataFrame,
     text_col: str = "text",
     n: int = 3,
-    assume_unique_ids: bool = True,
 ) -> DataFrame:
     """(doc_id, shingle) — distinct word n-grams of the normalized text.
     Pure built-ins: split -> transform(sequence) -> array_distinct ->
@@ -131,11 +130,10 @@ def shingles(
     minhash_near_duplicates 5.69 -> 4.87 s, jaccard_pairs(max_df)
     8.13 -> 5.24 s, byte-identical output on both.
 
-    ``assume_unique_ids`` is the contract that makes the no-shuffle form
-    valid: one row per doc_id (true for the documents table and for any
-    sane corpus — jobs/dedup.py states it as an input requirement).
-    Pass False for relations where a doc_id can repeat; that reinstates
-    the exploded-relation distinct at full shuffle cost."""
+    Input contract, which makes the no-shuffle form valid: one row per
+    doc_id (true for the documents table and for any sane corpus —
+    jobs/dedup.py states it as an input requirement).  Where a doc_id
+    can repeat, dedup by doc_id first."""
     # n-gram construction: zip_with over n shifted slices of a PROJECTED
     # token column — deliberately NOT transform(sequence, i ->
     # slice(toks, i+1, n)) over the raw tokenization expression: a lambda
@@ -164,15 +162,12 @@ def shingles(
     grams = F.when(F.size(t) >= n, grams_zip).otherwise(
         F.array(F.concat_ws(" ", t))
     )
-    out = (
+    return (
         base.select(
             "doc_id", F.explode(F.array_distinct(grams)).alias("shingle")
         )
         .filter(F.col("shingle") != "")
     )
-    if not assume_unique_ids:
-        out = out.distinct()
-    return out
 
 
 def jaccard_pairs(
@@ -200,11 +195,10 @@ def jaccard_pairs(
     64-bit collision would need ~2^32 distinct shingles per corpus slice to
     become likely; counts are otherwise identical to the string join.
 
-    Input contract: doc_id is unique per row (``shingles()`` default
-    ``assume_unique_ids=True``) — a repeated doc_id would double-count its
-    shingles into the Jaccard denominators without error.  For relations
-    where a doc_id can repeat, dedup by doc_id first (or call the shingle
-    path with ``assume_unique_ids=False`` at full shuffle cost)."""
+    Input contract: doc_id is unique per row (as for ``shingles()``) — a
+    repeated doc_id would double-count its shingles into the Jaccard
+    denominators without error.  For relations where a doc_id can
+    repeat, dedup by doc_id first."""
     if max_df is not None:
         # r06: the DF-cut path groups each shingle's (distinct-per-doc)
         # id list ONCE and generates its <= max_df^2/2 pairs inside the
@@ -453,9 +447,9 @@ def contamination_pairs(
     corpus is never shuffled at all: scan -> explode -> broadcast-join
     -> partial-agg.  Returns (train_doc, eval_doc, n_shared).
 
-    Input contract: doc_id unique per row on BOTH sides (``shingles()``
-    default ``assume_unique_ids=True``) — a repeated id would inflate
-    n_shared for its pairs without error."""
+    Input contract: doc_id unique per row on BOTH sides (as for
+    ``shingles()``) — a repeated id would inflate n_shared for its pairs
+    without error."""
     tr = shingles(train, text_col, n).select(
         F.col("doc_id").alias("train_doc"),
         F.xxhash64("shingle").alias("shingle"),

@@ -12,15 +12,17 @@ driver brief):
 
   - the core (:func:`_lm_scores`): the n-gram expression
     (:func:`_ngrams`), the count table over the
-    ``pmod(id, train_mod) < train_keep`` slice (:func:`_ngram_counts`;
-    :func:`bigram_lm_model` / :func:`trigram_lm_model` are its
-    ``(w1, w2, cb)`` / ``(w1, w2, w3, c3)`` artifacts), the model
-    prologue (``model=`` / ``persist_model`` / ``model_handle``), the
+    ``pmod(id, 10) < 8`` slice (:func:`_ngram_counts`;
+    :func:`bigram_lm_model` is its ``(w1, w2, cb)`` artifact), the
     per-position relation ``(id, *carry, w1..wn)`` and the per-doc
     ``avg_nll`` / ``ppl`` tail;
-  - :func:`ngram_lm_scores` — add-one-smoothed bigram;
-  - :func:`trigram_lm_scores` — stupid-backoff trigram;
-  - :func:`kn_lm_scores` — interpolated Kneser-Ney bigram.
+  - :func:`ngram_lm_scores` — add-one-smoothed bigram; its count table is
+    persisted (:func:`_lm_model`) unless ``model=`` hands one in, and
+    ``model_handle`` receives it for ``unpersist()``;
+  - :func:`trigram_lm_scores` — stupid-backoff trigram; its table is
+    never persisted;
+  - :func:`kn_lm_scores` — interpolated Kneser-Ney bigram; its table is
+    persisted for the session.
 
   Every model is a relational count table, so the whole operator stays
   declarative DataFrame ops — no Python in the hot path, and the
@@ -52,6 +54,9 @@ from pdfminer_six_spark.spark.partitions import spread
 
 # n-gram order -> (model count column, per-doc n-gram count column)
 _ORDERS = {2: ("cb", "n_bigrams"), 3: ("c3", "n_trigrams")}
+# the train slice: documents with pmod(id, _TRAIN_MOD) < _TRAIN_KEEP
+_TRAIN_MOD = 10
+_TRAIN_KEEP = 8
 
 
 def _ngrams(toks, n: int):
@@ -98,13 +103,13 @@ def _ngram_rows(df: DataFrame, toks, n: int, keys: list, carry: dict):
     )
 
 
-def _ngram_counts(df, n, text_col, id_col, train_mod, train_keep):
+def _ngram_counts(df, n, text_col, id_col):
     """n-gram count table ``(w1..wn, count)`` over the deterministic
-    ``pmod(id, train_mod) < train_keep`` slice — RNG-free, stable under
+    ``pmod(id, _TRAIN_MOD) < _TRAIN_KEEP`` slice — RNG-free, stable under
     retries/speculation (same discipline as ``deterministic_split``)."""
     df = spread(df)  # r06: see _lm_scores
     toks = tokens_col(normalized_text(F.col(text_col)))
-    train = df.filter(F.pmod(F.col(id_col), F.lit(train_mod)) < train_keep)
+    train = df.filter(F.pmod(F.col(id_col), F.lit(_TRAIN_MOD)) < _TRAIN_KEEP)
     return (
         _ngram_rows(train, toks, n, [], {})
         .groupBy(*[f"w{i}" for i in range(1, n + 1)])
@@ -112,11 +117,11 @@ def _ngram_counts(df, n, text_col, id_col, train_mod, train_keep):
     )
 
 
-def _lm_model(model, build, persist_model, model_handle):
+def _lm_model(build, model=None, model_handle=None):
     """The model prologue: an external ``model`` is used as is;
-    otherwise ``build()`` runs and, with ``persist_model``, its table is
-    persisted and appended to ``model_handle`` (when given) so the
-    caller can ``unpersist()`` it after its action.
+    otherwise ``build()``'s table is persisted and appended to
+    ``model_handle`` (when given) so the caller can ``unpersist()`` it
+    after its action.
 
     Why persist: the count table feeds several consumers (the score
     join plus the marginals and scalars derived from it) whose pruned
@@ -131,26 +136,25 @@ def _lm_model(model, build, persist_model, model_handle):
     the session, one entry per distinct input plan."""
     if model is not None:
         return model
-    built = build()
-    if persist_model:
-        built = built.persist()
-        if model_handle is not None:
-            model_handle.append(built)
+    built = build().persist()
+    if model_handle is not None:
+        model_handle.append(built)
     return built
 
 
-def _lm_scores(df, n, project, text_col, id_col, train_mod, train_keep,
-               persist_model, model, model_handle, carry=None):
-    """The shared LM core: positions, model and per-doc tail around one
-    projection.  ``project(counts)`` returns ``(lookups, scalars,
-    logp)``: model-sized ``(table, keys)`` pairs that left-join the
-    position relation in order (a miss leaves nulls for ``logp`` to
-    coalesce), a 1-row scalar relation that rides a broadcast crossJoin,
-    and the ``logp`` Column over the joined row.  Output: ``(id, *carry,
-    n_bigrams | n_trigrams, avg_nll, ppl)`` with ``avg_nll =
-    -sum(logp)/count`` and ``ppl = exp(avg_nll)``, both rounded to 6
-    decimals: the per-doc sum of logs is shuffle-order-dependent in the
-    last ulp (the driver's float canonicalization width)."""
+def _lm_scores(df, n, project, text_col, id_col, counts, carry=None):
+    """The shared LM core: positions and per-doc tail around one
+    projection of the model's count table ``counts`` (an
+    :func:`_ngram_counts` relation).  ``project(counts)`` returns
+    ``(lookups, scalars, logp)``: model-sized ``(table, keys)`` pairs
+    that left-join the position relation in order (a miss leaves nulls
+    for ``logp`` to coalesce), a 1-row scalar relation that rides a
+    broadcast crossJoin, and the ``logp`` Column over the joined row.
+    Output: ``(id, *carry, n_bigrams | n_trigrams, avg_nll, ppl)`` with
+    ``avg_nll = -sum(logp)/count`` and ``ppl = exp(avg_nll)``, both
+    rounded to 6 decimals: the per-doc sum of logs is
+    shuffle-order-dependent in the last ulp (the driver's float
+    canonicalization width)."""
     # r06: rebalance the scan — both passes (model build, scoring) do
     # their heavy work (tokenize + n-gram explode + partial agg) BEFORE
     # the first exchange, so an under-split local input runs them on
@@ -160,12 +164,6 @@ def _lm_scores(df, n, project, text_col, id_col, train_mod, train_keep,
     toks = tokens_col(normalized_text(F.col(text_col)))
     carry = carry or {}
     pos = _ngram_rows(df, toks, n, [id_col], carry)
-    counts = _lm_model(
-        model,
-        lambda: _ngram_counts(df, n, text_col, id_col, train_mod, train_keep),
-        persist_model,
-        model_handle,
-    )
     lookups, scalars, logp = project(counts)
     for table, keys in lookups:
         pos = pos.join(table, keys, "left")
@@ -190,41 +188,19 @@ def bigram_lm_model(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    train_mod: int = 10,
-    train_keep: int = 8,
 ) -> DataFrame:
     """Build the bigram-LM model table: ``(w1, w2, cb)`` counts over the
-    deterministic ``pmod(id, train_mod) < train_keep`` slice.  The model
-    IS a relation — write it to parquet as the training artifact and
-    feed it back to :func:`ngram_lm_scores` or :func:`kn_lm_scores` via
-    ``model=`` for the train-once/score-many production path (scoring
-    then reads the corpus text exactly once)."""
-    return _ngram_counts(df, 2, text_col, id_col, train_mod, train_keep)
-
-
-def trigram_lm_model(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    train_mod: int = 10,
-    train_keep: int = 8,
-) -> DataFrame:
-    """Trigram count table ``(w1, w2, w3, c3)`` over the deterministic
-    ``pmod(id, train_mod) < train_keep`` slice — the ONLY artifact the
-    stupid-backoff scorer needs: every lower-order count it backs off to
-    (bigram, unigram, totals, vocabulary) is a marginal SUM of this one
-    relation, so the model stays a single parquet table exactly like
-    :func:`bigram_lm_model`."""
-    return _ngram_counts(df, 3, text_col, id_col, train_mod, train_keep)
+    deterministic ``pmod(id, 10) < 8`` slice.  The model IS a relation —
+    write it to parquet as the training artifact and feed it back to
+    :func:`ngram_lm_scores` via ``model=`` for the train-once/score-many
+    production path (scoring then reads the corpus text exactly once)."""
+    return _ngram_counts(df, 2, text_col, id_col)
 
 
 def ngram_lm_scores(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    train_mod: int = 10,
-    train_keep: int = 8,
-    persist_model: bool = True,
     model: DataFrame | None = None,
     model_handle: list | None = None,
     carry: dict | None = None,
@@ -250,13 +226,13 @@ def ngram_lm_scores(
     language vote).  Each carried expression must be functionally
     determined by the document row (it becomes part of the groupBy key).
 
-    Model lifetime (see :func:`_lm_model`): with ``persist_model=True``
-    and no external ``model`` the count table is persisted; pass a list
-    as ``model_handle`` to receive it and ``unpersist()`` it once the
-    scoring action has run (jobs/score.py does exactly this after its
-    write).  ``model=`` takes a :func:`bigram_lm_model` relation
-    (typically read back from parquet) and skips the train slice; the
-    round trip is pytest-pinned equal to the inline path.
+    Model lifetime (see :func:`_lm_model`): with no external ``model``
+    the count table is persisted; pass a list as ``model_handle`` to
+    receive it and ``unpersist()`` it once the scoring action has run
+    (jobs/score.py does exactly this after its write).  ``model=`` takes
+    a :func:`bigram_lm_model` relation (typically read back from
+    parquet) and skips the train slice; the round trip is pytest-pinned
+    equal to the inline path.
     """
 
     def add_one(cb):
@@ -275,20 +251,17 @@ def ngram_lm_scores(
             )
         )
 
-    return _lm_scores(df, 2, add_one, text_col, id_col, train_mod,
-                      train_keep, persist_model, model, model_handle, carry)
+    counts = _lm_model(
+        lambda: _ngram_counts(df, 2, text_col, id_col), model, model_handle
+    )
+    return _lm_scores(df, 2, add_one, text_col, id_col, counts, carry)
 
 
 def trigram_lm_scores(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    train_mod: int = 10,
-    train_keep: int = 8,
     alpha: float = 0.4,
-    persist_model: bool = True,
-    model: DataFrame | None = None,
-    model_handle: list | None = None,
 ) -> DataFrame:
     """Trigram LM scoring with STUPID BACKOFF (Brants et al. 2007 §4 —
     the web-scale scheme: no discounting to normalize, a fixed backoff
@@ -315,9 +288,8 @@ def trigram_lm_scores(
     relation largest-key-first, each level only touching the previous
     level's misses via coalesce on left joins; all enrichment
     (marginals, log-probs) happens on the MODEL-sized table before any
-    corpus join.  ``persist_model`` / ``model`` (a
-    :func:`trigram_lm_model` relation) / ``model_handle`` follow
-    :func:`ngram_lm_scores`."""
+    corpus join.  The c3 table is not persisted, so the returned
+    DataFrame holds no cache entry; each level's marginal recomputes it."""
 
     def backoff(c3):
         ln = F.log
@@ -354,8 +326,8 @@ def trigram_lm_scores(
             la + la + ln(F.lit(1.0)) - ltv,
         )
 
-    return _lm_scores(df, 3, backoff, text_col, id_col, train_mod,
-                      train_keep, persist_model, model, model_handle)
+    counts = _ngram_counts(df, 3, text_col, id_col)
+    return _lm_scores(df, 3, backoff, text_col, id_col, counts)
 
 
 def kn_lm_scores(
@@ -363,11 +335,6 @@ def kn_lm_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     discount: float = 0.75,
-    train_mod: int = 10,
-    train_keep: int = 8,
-    persist_model: bool = True,
-    model: DataFrame | None = None,
-    model_handle: list | None = None,
 ) -> DataFrame:
     """Interpolated Kneser-Ney bigram-LM scoring (Kneser & Ney 1995;
     Chen & Goodman 1999 eq. 4.26) — the smoothing family CCNet's KenLM
@@ -387,10 +354,9 @@ def kn_lm_scores(
 
     Every model relation (cu, n1f, cont, B, V) derives from the ONE
     bigram count table ``cb`` of :func:`bigram_lm_model` — same
-    train/score contract, model-table persistence rules
-    (``persist_model`` / ``model_handle`` / external ``model``) and
-    output shape ``(doc_id, n_bigrams, avg_nll, ppl)`` as
-    ngram_lm_scores.
+    train/score contract and output shape ``(doc_id, n_bigrams,
+    avg_nll, ppl)`` as ngram_lm_scores.  The table is persisted
+    (:func:`_lm_model`) and stays cached for the session.
 
     Float determinism: P is one fixed-shape arithmetic expression over
     exact integer-derived doubles — spelled identically in the oracle so
@@ -426,8 +392,8 @@ def kn_lm_scores(
         lookups = [(cb, ["w1", "w2"]), (cu, ["w1"]), (cont, ["w2"])]
         return lookups, bv, F.log(F.when(F.col("cu").isNull(), pc).otherwise(seen))
 
-    return _lm_scores(df, 2, kneser_ney, text_col, id_col, train_mod,
-                      train_keep, persist_model, model, model_handle)
+    counts = _lm_model(lambda: _ngram_counts(df, 2, text_col, id_col))
+    return _lm_scores(df, 2, kneser_ney, text_col, id_col, counts)
 
 
 def bm25_topk(
@@ -527,7 +493,6 @@ def ccnet_buckets(
     n_buckets: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    model: DataFrame | None = None,
     cutoffs: str = "exact",
     sketch_accuracy: int = 10000,
     model_handle: list | None = None,
@@ -562,7 +527,7 @@ def ccnet_buckets(
       ~1/sketch_accuracy relative rank); the exact-vs-sketch differential
       is pytest-pinned at test scale.
 
-    ``model`` and ``model_handle`` pass through to the scorer (see
+    ``model_handle`` passes through to the scorer (see
     :func:`ngram_lm_scores` for the model's cache lifetime).
     """
     from pdfminer_six_spark.ops.textstats import language_vote_expr
@@ -584,7 +549,6 @@ def ccnet_buckets(
         base,
         text_col=text_col,
         id_col=id_col,
-        model=model,
         model_handle=model_handle,
         carry={"pred_lang": language_vote_expr(F.col("_lang_toks"))},
     )
@@ -620,9 +584,6 @@ def dsir_weights(
     target: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed_buckets: int | None = None,
-    persist_model: bool = True,
-    model_handle: list | None = None,
 ) -> DataFrame:
     """Data Selection via Importance Resampling (Xie et al., NeurIPS
     2023): score every raw document by how much more likely its n-gram
@@ -633,17 +594,9 @@ def dsir_weights(
 
     with add-one smoothing over the union feature vocabulary:
     ``p_t(f) = (ct+1)/(Tt+V)``, ``q_r(f) = (cr+1)/(Tr+V)``.  Features
-    are word unigrams plus bigrams of the normalized text.
-
-    Exact path (``hashed_buckets=None``): features are the n-gram
-    strings themselves — fully SQL-expressible, the oracle path.
-    Scale path (``hashed_buckets=k``): the paper's hashed estimator —
-    features map to ``pmod(xxhash64(feat), k)`` BEFORE any aggregation,
-    bounding the model table at k rows regardless of vocabulary (k=10^4
-    in the paper).  With k far above the vocabulary size the hashed
-    weights equal the exact ones except for rare collisions
-    (pytest-pinned differential); V is always the count of DISTINCT
-    OBSERVED features, so both paths smooth over the same support.
+    are word unigrams plus bigrams of the normalized text, as strings —
+    fully SQL-expressible, so the oracle mirrors it; V is the count of
+    distinct observed features.
 
     Scale design: one shuffle builds the model (union of both corpora's
     features, conditionally counted per side), one 1-row scalar
@@ -654,10 +607,8 @@ def dsir_weights(
 
     Returns ``(id_col, n_feats, log_w)``; documents with zero features
     drop out (no defined weight — the ngram_lm <2-token precedent).
-    ``persist_model``/``model_handle`` follow the ngram_lm_scores cache
-    contract (the persisted feature-count table is model-sized; a
-    long-lived session scoring many inputs should unpersist via the
-    handle after its action).
+    The feature-count table is persisted (:func:`_lm_model`) and stays
+    cached for the session; it is vocabulary-sized, not corpus-sized.
     ``log_w`` rounds to 6 decimals: the per-doc sum of logs is
     shuffle-order-dependent in the last ulp (same discipline as
     ngram_lm_scores).
@@ -669,17 +620,9 @@ def dsir_weights(
         bg = F.transform(
             _ngrams(toks, 2), lambda b: F.concat_ws(" ", b["w1"], b["w2"])
         )
-        out = df.select(
+        return df.select(
             F.col(id_col), F.explode(F.concat(toks, bg)).alias("feat")
         )
-        if hashed_buckets is not None:
-            out = out.select(
-                id_col,
-                F.pmod(F.xxhash64("feat"), F.lit(hashed_buckets)).alias(
-                    "feat"
-                ),
-            )
-        return out
 
     tagged = feats(target).select(
         "feat", F.lit(1).alias("is_t"), F.lit(0).alias("is_r")
@@ -690,17 +633,13 @@ def dsir_weights(
     )
     # the model relation feeds THREE consumers (llr, scalars) whose
     # pruned subtrees don't ReuseExchange — unpersisted, each re-scans
-    # both corpora's text (measured 5 parquet scans in the plan).  The
-    # persisted table is vocab-sized (or k buckets), not corpus-sized.
-    # With it the op reads target text once and raw text twice (model
-    # build + scoring).
+    # both corpora's text (measured 5 parquet scans in the plan).  With
+    # it the op reads target text once and raw text twice (model build +
+    # scoring).
     model = _lm_model(
-        None,
         lambda: tagged.groupBy("feat").agg(
             F.sum("is_t").alias("ct"), F.sum("is_r").alias("cr")
-        ),
-        persist_model,
-        model_handle,
+        )
     )
     scalars = model.agg(
         F.sum("ct").alias("tt"),

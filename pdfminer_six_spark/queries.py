@@ -2875,9 +2875,7 @@ def q_extract_boxes(spark, sf_dir):
     df = spark.createDataFrame(
         transcripts_pandas(n_convs=10, use_reference_samples=False)
     )
-    # single-view consumer: no persist — the returned DataFrame outlives
-    # this function, so a cached union could never be unpersisted here
-    return extract_layout_tables(df, persist=False)["boxes"]
+    return extract_layout_tables(df)["boxes"]
 
 
 def q_extract_images(spark, sf_dir):
@@ -3721,9 +3719,7 @@ def q_trigram_lm_score(spark, sf_dir):
     float discipline."""
     from pdfminer_six_spark.ops import retrieval
 
-    return retrieval.trigram_lm_scores(
-        _t(spark, sf_dir, "documents"), persist_model=False
-    )
+    return retrieval.trigram_lm_scores(_t(spark, sf_dir, "documents"))
 
 
 _SQL_TRIGRAM_LM = """

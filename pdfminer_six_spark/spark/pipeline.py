@@ -776,33 +776,23 @@ def _layout_rows(key, pages, status, error, wall_ms):
             yield (r[0], conv_id, turn_idx, *r[1:])
 
 
-def extract_layout_tables(
-    df: DataFrame, password: str = "", persist: bool = True
-) -> dict:
+def extract_layout_tables(df: DataFrame, password: str = "") -> dict:
     """transcripts -> {chars, lines, boxes, status} flattened layout
     relations.
 
-    Only PDF turns contribute.  Single-pass: ONE ``mapInPandas`` runs
-    each payload through ``_layout_pages`` once.  A PDF turn whose status
-    is not ``ok`` emits one ``relation='status'`` row instead, so the
-    ``status`` view ``(conv_id, turn_idx, status, error)`` holds exactly
-    what ``extract_transcripts`` emits for those turns.  With
-    ``persist=True`` the tagged union is cached so the filtered views
-    share the one kernel run; PDF parsing is the dominant cost, so this
-    is 3× cheaper than a kernel run per relation (VERDICT r01 'what's
-    wrong' #5).  Callers that consume the views should ``unpersist()`` the
-    returned ``_union`` when done; callers consuming a SINGLE view should
-    pass ``persist=False`` — caching a relation read once is pure
-    overhead, and a handed-off DataFrame outlives the caller's chance to
-    unpersist (ADVICE r02).
+    Only PDF turns contribute.  ONE ``mapInPandas`` runs each payload
+    through ``_layout_pages`` once and emits a tagged union of all four
+    relations; each view filters it.  A PDF turn whose status is not
+    ``ok`` emits one ``relation='status'`` row instead, so the ``status``
+    view ``(conv_id, turn_idx, status, error)`` holds exactly what
+    ``extract_transcripts`` emits for those turns.  The union is not
+    cached: each view runs the kernel when it is computed.
     """
     src = spread(df.select("conv_id", "turn_idx", "text", "tool"))
     union = src.mapInPandas(
         _map_batches(_layout_items, _layout_rows, LAYOUT_UNION_SCHEMA, password),
         schema=LAYOUT_UNION_SCHEMA,
     )
-    if persist:
-        union = union.persist()
     common = ["conv_id", "turn_idx", "page_id"]
     chars = union.filter(F.col("relation") == "char").select(
         *common,
@@ -825,8 +815,7 @@ def extract_layout_tables(
         "conv_id", "turn_idx",
         F.col("wmode").alias("status"), F.col("text").alias("error"),
     )
-    return {"chars": chars, "lines": lines, "boxes": boxes,
-            "status": status, "_union": union}
+    return {"chars": chars, "lines": lines, "boxes": boxes, "status": status}
 
 
 def lineage_metrics(extracted: DataFrame) -> DataFrame:

@@ -8,11 +8,9 @@ the same extraction kernel.
 
 from __future__ import annotations
 
-from typing import Optional
-
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -54,24 +52,18 @@ def _doc_row(key, text, status, error, wall_ms):
     yield (*key, text, text.count("\f"), status, error)
 
 
-def read_pdf_corpus(
-    spark: SparkSession, glob_path: str, limit_bytes: Optional[int] = None
-) -> DataFrame:
+def read_pdf_corpus(spark: SparkSession, glob_path: str) -> DataFrame:
     """binaryFile scan over a PDF corpus: (path, length, content).
 
     ``path`` is the file's URI (``file:/...`` on a local disk).  A
     zero-length file is listed but Spark plans no split for it, so it
     yields no row."""
-    df = (
+    return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.pdf")
         .load(glob_path)
         .select("path", "length", "content")
     )
-    if limit_bytes:
-        # predicate on file length prunes at the listing level
-        df = df.filter(F.col("length") <= limit_bytes)
-    return df
 
 
 def extract_pdf_corpus(

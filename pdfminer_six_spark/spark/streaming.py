@@ -4,13 +4,12 @@ streaming row; north-rule resume story).
 Incremental ingest of new transcript turns: readStream on a parquet/Iceberg
 directory -> the same Arrow-batched extraction kernel (mapInPandas works
 unchanged on streaming DataFrames) -> sink with checkpointing, so restart
-resumes exactly where the last committed batch ended.  A watermark-bounded
-content-fingerprint dedup drops re-delivered turns.
+resumes exactly where the last committed batch ended.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from pdfminer_six_spark.spark.pipeline import (
     TRANSCRIPTS_SCHEMA,
@@ -34,9 +33,10 @@ def streaming_extract(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ):
     """transcripts stream -> extracted parquet with exactly-once resume.
+    Each call processes what is in ``input_dir`` now and stops
+    (``availableNow``).
 
     The extraction kernel is identical to the batch path — row-local, so
     it needs no state store; the checkpoint only tracks source offsets
@@ -44,46 +44,12 @@ def streaming_extract(
     """
     stream = read_transcripts_stream(spark, input_dir)
     extracted = extract_transcripts(stream)
-    writer = (
+    return (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
-
-def streaming_dedup(
-    transcripts: DataFrame,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact dedup: drop re-delivered turns by content
-    fingerprint within the watermark horizon.
-
-    ``dropDuplicatesWithinWatermark`` keys the state store on
-    (fingerprint) and expires entries once the event-time watermark
-    passes — bounded state no matter how long the stream runs, which is
-    the only dedup shape that survives an unbounded 10^12-turn ingest
-    (a global dropDuplicates would grow state forever).  Re-deliveries
-    in real pipelines arrive close to the original (retries, replays),
-    so a watermark-bounded horizon is the standard contract."""
-    from pdfminer_six_spark.ops.dedup import normalized_text
-
-    return (
-        transcripts.withWatermark("ts", watermark)
-        .withColumn(
-            "fp",
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("conv_id"),
-                    F.col("turn_idx").cast("string"),
-                    normalized_text(F.col("text")),
-                )
-            ),
-        )
-        .dropDuplicatesWithinWatermark(["fp"])
-        .drop("fp")
-    )

@@ -4,8 +4,6 @@ the DataSourceV2 API an Iceberg catalog plugs into.  The sandbox ships no
 Iceberg jar, so the test drives the identical code path through Spark's
 built-in session catalog (same read/write API, different catalog impl)."""
 
-import argparse
-
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
@@ -25,13 +23,12 @@ def spark(tmp_path_factory):
 
 
 def _args(**kw):
-    base = dict(
-        input="", output="", lineage=None, tables=True, password="",
-        resume=False, rebalance=None, sorted_output=False, streaming=False,
-        checkpoint=None, images=False,
+    """The extract job's parsed defaults (with ``--tables``), then ``kw``."""
+    args = _load_extract_job().build_arg_parser().parse_args(
+        ["--input", "", "--output", "", "--tables"]
     )
-    base.update(kw)
-    return argparse.Namespace(**base)
+    vars(args).update(kw)
+    return args
 
 
 def test_job_reads_and_writes_catalog_tables(spark):
@@ -809,10 +806,13 @@ def test_index_job_artifacts_consumable_and_resume(spark, tmp_path):
 
     # artifact 3: LM model table scores identically to the inline path
     model = spark.read.parquet(str(wd / "04_lm"))
-    via_model = ngram_lm_scores(docs, model=model, persist_model=False)
-    inline = ngram_lm_scores(docs, persist_model=False)
+    via_model = ngram_lm_scores(docs, model=model)
+    handle = []
+    inline = ngram_lm_scores(docs, model_handle=handle)
     assert via_model.exceptAll(inline).count() == 0
     assert inline.exceptAll(via_model).count() == 0
+    for cached in handle:
+        cached.unpersist()
 
     # artifact 4: k-means assignment equals a fresh fixed-point run
     km_idx = {

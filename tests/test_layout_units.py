@@ -304,3 +304,30 @@ def test_plane_reference_cases():
     assert list(plane.find((0, 0, 100, 100))) == [obj]
     plane, obj = mk(object_size=100, gridsize=10)
     assert list(plane.find((0, 0, 100, 100))) == [obj]
+
+
+def test_text_sink_drops_lone_surrogates():
+    """The text sink drops each code point UTF-8 cannot encode (a lone
+    surrogate from a broken ToUnicode map), as the reference's utf-8
+    encode/ignore round trip does, and keeps everything around it."""
+    from pdfminer_six_spark.core.device import TextDevice
+    from pdfminer_six_spark.core.layout import LTPage
+
+    class Font:
+        fontname = "F"
+
+        def is_vertical(self):
+            return False
+
+        def get_descent(self):
+            return 0.0
+
+    page = LTPage(1, (0, 0, 100, 100))
+    for i, text in enumerate(["a", "\ud800", "b", "\udfff", "é"]):
+        page.add(LTChar((1, 0, 0, 1, 10 + 5 * i, 50), Font(), 10, 1, 0,
+                        text, 0.5, None))
+    page.analyze(LAParams())
+    sink = TextDevice()
+    sink.receive_layout(page)
+    sink.receive_layout(page)
+    assert sink.get_text() == "abé\n\n\f" * 2

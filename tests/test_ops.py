@@ -1091,121 +1091,6 @@ def test_ivf_topk_recall(spark):
     assert len(exact & ivf) / len(exact) >= 0.6
 
 
-def test_streaming_dedup_drops_redelivered_turns(spark, tmp_path):
-    """Watermark-bounded streaming dedup: a turn re-delivered in a later
-    batch (same conv/turn/normalized text) is dropped; distinct turns and
-    same-position-different-content turns pass through.  State is keyed
-    on the fingerprint and expires with the watermark — bounded no matter
-    how long the stream runs."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from pdfminer_six_spark.spark.pipeline import TRANSCRIPTS_SCHEMA
-    from pdfminer_six_spark.spark.streaming import streaming_dedup
-
-    src = tmp_path / "dd_in"
-    src.mkdir()
-    t0 = dt.datetime(2026, 1, 1, 10, 0, 0)
-
-    def write(name, rows):
-        df = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        )
-        df["turn_idx"] = df["turn_idx"].astype("int32")
-        df["ts"] = df["ts"].astype("datetime64[us]")
-        df.to_parquet(str(src / name))
-
-    write("f1.parquet", [
-        ("c1", 0, "user", "hello world", "", t0),
-        ("c1", 1, "assistant", "reply", "", t0 + dt.timedelta(minutes=1)),
-    ])
-    # batch 2: a retry re-delivers turn 0 (whitespace-variant text ->
-    # same normalized fingerprint), plus one genuinely new turn and one
-    # same-position turn with different content (must survive)
-    write("f2.parquet", [
-        ("c1", 0, "user", "hello   WORLD", "", t0 + dt.timedelta(minutes=2)),
-        ("c1", 2, "user", "new turn", "", t0 + dt.timedelta(minutes=3)),
-        ("c1", 1, "assistant", "edited reply", "", t0 + dt.timedelta(minutes=4)),
-    ])
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_dedup(stream, watermark="1 hour")
-        .writeStream.format("memory").queryName("dd_test")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    out = spark.sql("select conv_id, turn_idx, text from dd_test").collect()
-    texts = sorted(r.text for r in out)
-    assert texts == ["edited reply", "hello world", "new turn", "reply"]
-
-
-def test_streaming_dedup_equals_batch_dedup(spark, tmp_path):
-    """stream == batch for dedup (r04 VERDICT item 6): watermark-bounded
-    ``dropDuplicatesWithinWatermark`` over content fingerprints produces
-    the SAME unique-turn set as the batch fingerprint dedup on the same
-    duplicated corpus.  Survivor identity within a duplicate group is
-    compared on the fingerprint columns (which are equal for all group
-    members by definition), not on arrival metadata — the stream keeps
-    the first ARRIVAL, the batch keeps an arbitrary member."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from pdfminer_six_spark.datagen.transcripts import transcripts_pandas
-    from pdfminer_six_spark.ops.dedup import normalized_text
-    from pdfminer_six_spark.spark.pipeline import TRANSCRIPTS_SCHEMA
-    from pdfminer_six_spark.spark.streaming import streaming_dedup
-
-    pdf = transcripts_pandas(n_convs=12)
-    # every 4th turn is re-delivered 90s later (inside the watermark),
-    # with a whitespace variant that normalizes to the same fingerprint
-    dup = pdf.iloc[::4].copy()
-    dup["ts"] = dup["ts"] + pd.Timedelta(seconds=90)
-    dup["text"] = dup["text"].map(
-        lambda t: t.replace(" ", "  ") if isinstance(t, str) else t
-    )
-    dpdf = pd.concat([pdf, dup], ignore_index=True)
-    src = tmp_path / "sb_in"
-    spark.createDataFrame(dpdf).repartition(6).write.mode(
-        "overwrite"
-    ).parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_dedup(stream, watermark="48 hours")
-        .writeStream.format("memory").queryName("sb_dedup")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-
-    fp = F.md5(F.concat_ws(
-        "|", F.col("conv_id"), F.col("turn_idx").cast("string"),
-        normalized_text(F.col("text")),
-    ))
-    stream_keys = {
-        (r.conv_id, r.turn_idx, r.fpv)
-        for r in spark.table("sb_dedup")
-        .select("conv_id", "turn_idx", fp.alias("fpv")).collect()
-    }
-    batch_keys = {
-        (r.conv_id, r.turn_idx, r.fpv)
-        for r in spark.read.parquet(str(src))
-        .withColumn("fpv", fp).dropDuplicates(["fpv"])
-        .select("conv_id", "turn_idx", "fpv").collect()
-    }
-    assert stream_keys == batch_keys
-    assert len(stream_keys) == len(pdf)  # exactly the originals survive
-    assert spark.table("sb_dedup").count() == len(pdf)
-
-
 def test_streaming_session_window_with_watermark(spark, tmp_path):
     """Built-in session windows on a STREAM: watermarked per-conversation
     sessions close after the gap and emit once (append mode) — the
@@ -1799,31 +1684,27 @@ def test_c4_line_clean_rules(spark):
     assert (got[2]["n_lines"], got[2]["n_lines_kept"], got[2]["clean_text"]) == (1, 0, "")
 
 
-@pytest.mark.parametrize(
-    "scorer", ["add_one", "stupid_backoff", "kneser_ney"]
-)
-def test_bigram_lm_model_roundtrip(spark, tmp_path, scorer):
-    """Train-once/score-many for every LM scorer: building the model,
-    writing it to parquet, reading it back and scoring via model= equals
-    the inline path exactly."""
-    from pdfminer_six_spark.ops import retrieval as r
+def test_bigram_lm_model_roundtrip(spark, tmp_path):
+    """Train-once/score-many: building the bigram model, writing it to
+    parquet, reading it back and scoring via model= equals the inline
+    path exactly."""
+    from pdfminer_six_spark.ops.retrieval import (
+        bigram_lm_model,
+        ngram_lm_scores,
+    )
 
-    build, score = {
-        "add_one": (r.bigram_lm_model, r.ngram_lm_scores),
-        "stupid_backoff": (r.trigram_lm_model, r.trigram_lm_scores),
-        "kneser_ney": (r.bigram_lm_model, r.kn_lm_scores),
-    }[scorer]
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
     mpath = str(tmp_path / "lm_model.parquet")
-    build(docs).write.parquet(mpath)
-    via_model = score(
-        docs, model=spark.read.parquet(mpath), persist_model=False
-    )
-    inline = score(docs, persist_model=False)
+    bigram_lm_model(docs).write.parquet(mpath)
+    via_model = ngram_lm_scores(docs, model=spark.read.parquet(mpath))
+    handle = []
+    inline = ngram_lm_scores(docs, model_handle=handle)
     assert via_model.exceptAll(inline).count() == 0
     assert inline.exceptAll(via_model).count() == 0
+    for cached in handle:
+        cached.unpersist()
 
 
 def test_ccnet_buckets_terciles_per_language(spark):
@@ -2097,12 +1978,10 @@ def test_repetition_signals_hand_computed(spark):
     )
 
 
-def test_dsir_hashed_estimator_matches_exact_and_discriminates(spark):
-    """DSIR (Xie et al. 2023): with a bucket count far above the
-    vocabulary, the hashed estimator equals the exact path to float
-    precision (no collisions, same observed support); and on a corpus
-    with a distinct target dialect, target-like raw docs score strictly
-    above off-target docs under both paths."""
+def test_dsir_weights_discriminate_target_like_docs(spark):
+    """DSIR (Xie et al. 2023): on a corpus with a distinct target
+    dialect, every target-like raw doc scores strictly above every
+    off-target doc, and every raw doc gets a weight."""
     import pandas as pd
 
     from pdfminer_six_spark.ops.retrieval import dsir_weights
@@ -2118,20 +1997,11 @@ def test_dsir_hashed_estimator_matches_exact_and_discriminates(spark):
         "doc_id": range(100, 108), "text": target_texts,
     }))
 
-    exact = {r["doc_id"]: r["log_w"]
-             for r in dsir_weights(raw, target).collect()}
-    hashed = {r["doc_id"]: r["log_w"]
-              for r in dsir_weights(
-                  raw, target, hashed_buckets=1 << 40).collect()}
-    assert set(exact) == set(hashed) == set(range(8))
-    for d in exact:
-        assert hashed[d] == pytest.approx(exact[d], abs=2e-6)
-    # discrimination: every law-ish doc outscores every sporty doc
-    assert min(exact[d] for d in range(4)) > max(exact[d] for d in range(4, 8))
-    # small bucket count still runs and keeps the doc set (collisions
-    # merge features, they don't drop documents)
-    small = dsir_weights(raw, target, hashed_buckets=16)
-    assert small.count() == 8
+    w = {r["doc_id"]: r["log_w"]
+         for r in dsir_weights(raw, target).collect()}
+    assert set(w) == set(range(8))
+    # every law-ish doc outscores every sporty doc
+    assert min(w[d] for d in range(4)) > max(w[d] for d in range(4, 8))
 
 
 def test_bpe_pair_stats_hand_computed(spark):
@@ -2906,14 +2776,13 @@ def test_kmeans_balanced_select_caps_and_determinism(spark):
 def test_trigram_lm_model_roundtrip_and_backoff_floor(spark):
     """trigram_lm_scores: a doc of entirely unseen words hits the add-one
     unigram floor at every position: avg_nll == 2*ln(1/0.4... spelled
-    exactly as the op does.  (The c3 model's parquet round trip is
-    test_bigram_lm_model_roundtrip[stupid_backoff].)"""
+    exactly as the op does."""
     import math
 
     from pyspark.sql import functions as F
 
     from pdfminer_six_spark.ops.retrieval import (
-        trigram_lm_model,
+        _ngram_counts,
         trigram_lm_scores,
     )
 
@@ -2926,11 +2795,9 @@ def test_trigram_lm_model_roundtrip_and_backoff_floor(spark):
     unseen = spark.createDataFrame(
         [(999999, "zzqx1 zzqx2 zzqx3 zzqx4")], "doc_id long, text string"
     )
-    scored = trigram_lm_scores(
-        docs.unionByName(unseen), persist_model=False
-    )
+    scored = trigram_lm_scores(docs.unionByName(unseen))
     row = scored.filter(F.col("doc_id") == 999999).collect()[0]
-    c3 = trigram_lm_model(docs)
+    c3 = _ngram_counts(docs, 3, "text", "doc_id")
     t_total = c3.agg(F.sum("c3")).collect()[0][0]
     v = c3.select("w3").distinct().count()
     floor = -(

@@ -253,8 +253,8 @@ def test_blocked_embedding_pairs_plan_is_distributed(spark):
 
 
 def test_layout_tables_single_kernel_pass(spark):
-    """All three layout views must read one shared (persisted) tagged
-    union — exactly one MapInPandas subtree, no per-relation kernel."""
+    """Each layout view reads the one tagged union — exactly one
+    MapInPandas subtree, no per-relation kernel."""
     from pdfminer_six_spark.datagen.transcripts import transcripts_pandas
     from pdfminer_six_spark.spark.pipeline import extract_layout_tables
 
@@ -262,13 +262,8 @@ def test_layout_tables_single_kernel_pass(spark):
         transcripts_pandas(n_convs=2, use_reference_samples=False)
     )
     t = extract_layout_tables(df)
-    try:
-        for rel in ("chars", "lines", "boxes"):
-            plan = _plan(t[rel])
-            assert "InMemoryTableScan" in plan, rel
-            assert plan.count("MapInPandas") <= 1, rel
-    finally:
-        t["_union"].unpersist()
+    for rel in ("chars", "lines", "boxes"):
+        assert _plan(t[rel]).count("MapInPandas") == 1, rel
 
 
 def test_asof_join_single_shuffle(spark):
